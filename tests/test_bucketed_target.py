@@ -107,11 +107,11 @@ def test_reregisters_after_catalog_loss(spark, tmp_path):
 
 def test_time_travel_and_metadata(spark, tmp_path):
     t = _mk(spark, tmp_path)
-    t.write(_frame(spark, 50), metadata={"merged_epochs": [0]})
-    t.write(_frame(spark, 60), metadata={"merged_epochs": [0, 1]})
+    t.write(_frame(spark, 50), metadata={"last_epoch": 0})
+    t.write(_frame(spark, 60), metadata={"last_epoch": 1})
     assert t.read(version=1).count() == 50
     assert t.read().count() == 60
-    assert t.read_metadata() == {"merged_epochs": [0, 1]}
+    assert t.read_metadata() == {"last_epoch": 1}
     assert t.vacuum(keep=1) == [1]
     assert not spark.catalog.tableExists(t._table_ident(1))
 
@@ -186,6 +186,14 @@ def test_cdc_pipeline_with_catalog_buckets(spark, tmp_path):
         if b in v2 and {os.stat(f).st_ino for f in v1[b]} == {os.stat(f).st_ino for f in v2[b]}
     ]
     assert shared, "expected untouched buckets to carry over as hard links"
+    # exactly the buckets of the batch's keys were rewritten
+    touched = {
+        r["b"]
+        for r in spark.createDataFrame([(1,), (2,), (3,)], "id long")
+        .select(pipe.target.bucket_of().alias("b"))
+        .collect()
+    }
+    assert set(v2) - set(shared) == touched, (sorted(v2), shared, touched)
 
     # replayed epoch is a no-op (T4 guard rides on target metadata)
     pipe.run_batch(delta, epoch_id=1)

@@ -173,7 +173,7 @@ def test_pipeline_epoch_fails_on_concurrent_commit(spark, tmp_path):
     with pytest.raises(ConcurrentWriteError):
         p.merge_batch(p.transform(raw2), 1)
     # foreign commit survived untouched; epoch 1 not recorded
-    assert p.target.read_metadata()["merged_epochs"] == [0]
+    assert p.target.read_metadata()["last_epoch"] == 0
     assert p.target.read().select("name").collect()[0]["name"] == "ALICE"
 
     # replay of the failed epoch (what checkpoint recovery does) converges
@@ -181,7 +181,7 @@ def test_pipeline_epoch_fails_on_concurrent_commit(spark, tmp_path):
     p.merge_batch(p.transform(raw2), 1)
     got = {r["name"] for r in p.target.read().select("name").collect()}
     assert got == {"ALICE", "bob"}
-    assert p.target.read_metadata()["merged_epochs"] == [0, 1]
+    assert p.target.read_metadata()["last_epoch"] == 1
 
 
 # --- delta-maintained Bloom sidecar --------------------------------------

@@ -235,8 +235,8 @@ pipeline_ops = st.lists(
 @settings(max_examples=8, deadline=None)
 @given(pipeline_ops, st.sampled_from([1, 2, 3, 5]))
 def test_bucketed_pipeline_matches_python_oracle(spark, tmp_path_factory, events, buckets):
-    """Any op sequence, split across 3 epochs, through the hash-bucketed
-    partition-delta pipeline == a driver-side last-write-wins replay.
+    """Any op sequence, split across 3 epochs, through the catalog-bucketed
+    bucket-delta pipeline == a driver-side last-write-wins replay.
     Pins the riskiest storage path: bucket pruning + hard-link carryover
     must never change WHAT the merge computes."""
     import json
@@ -278,7 +278,7 @@ def test_bucketed_pipeline_matches_python_oracle(spark, tmp_path_factory, events
         row_schema=row_schema,
         target_root=str(tmp / "targets"),
         checkpoint_dir=str(tmp / "ckpt"),
-        hash_buckets=buckets,
+        catalog_buckets=buckets,
     )
     p = CdcPipeline(spark, cfg)
     third = max(1, len(rows) // 3)
@@ -341,7 +341,7 @@ def test_cdf_matches_python_diff(spark, tmp_path_factory, batch1, batch2):
         row_schema=row_schema,
         target_root=str(tmp / "targets"),
         checkpoint_dir=str(tmp / "ckpt"),
-        hash_buckets=4,
+        catalog_buckets=4,
     )
     p = CdcPipeline(spark, cfg)
     p.run_batch(spark.createDataFrame(rows1, raw_schema), 0)

@@ -151,7 +151,7 @@ def test_cr_builds_a_running_pipeline(spark, tmp_path):
         target_root=str(tmp_path / "targets"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         salt="s3cr3t",
-        hash_buckets=2,
+        catalog_buckets=2,
     )
     p = CdcPipeline(spark, cfg)
     raw_schema = T.StructType(

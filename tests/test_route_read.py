@@ -224,3 +224,55 @@ def test_box_route_intersects_zone_candidates(spark, tmp_path_factory):
     assert sorted(row["doc_id"] for row in s.df.collect()) == [
         i for i in range(50, 81) if 1500 <= 1000 + i * 10 <= 2000
     ]
+
+
+def test_reads_pin_the_version_they_looked_up(spark, tmp_path):
+    """A commit that lands right after a read looks up ``_CURRENT`` must
+    not reach its answer: every index lookup (Bloom, zones, box) is pinned
+    to the looked-up version, so the rows are exactly that version's —
+    never the next version's files under the old version's base path."""
+    t = BucketedTargetTable(
+        spark, str(tmp_path), "pinned", buckets=4, keys=["doc_id"],
+        zone_cols=["ts"], zone_split=2, bloom_col="part",
+    )
+    # each commit shifts every row's part and ts, so consecutive versions
+    # answer every predicate below differently
+    def rows(shift):
+        return [(i, 100 + i + shift, 1000 + i * 10 + shift, "t") for i in range(200)]
+
+    t.write(spark.createDataFrame(rows(0), SCHEMA))
+    committed = {t.current_version(): rows(0)}
+    real_lookup = t.current_version
+    armed = []
+
+    def lookup_then_commit():
+        v = real_lookup()
+        if armed:  # first lookup of this read: commit right behind it
+            armed.clear()
+            nxt = rows(5 * len(committed))
+            other = BucketedTargetTable(
+                spark, str(tmp_path), "pinned", buckets=4, keys=["doc_id"],
+                zone_cols=["ts"], zone_split=2, bloom_col="part",
+            )
+            committed[other.write(spark.createDataFrame(nxt, SCHEMA))] = nxt
+        return v
+
+    t.current_version = lookup_then_commit
+    cases = [
+        (lambda: t.route_read(eq=("part", 150)), "bloom", lambda r: r[1] == 150),
+        (lambda: t.route_read(between=("ts", 1100, 1200)), "zones",
+         lambda r: 1100 <= r[2] <= 1200),
+        (lambda: t.route_read(box={"ts": (1100, 1200)}), "zones",
+         lambda r: 1100 <= r[2] <= 1200),
+        (lambda: t.read_range(1100, 1200, "ts"), None, lambda r: 1100 <= r[2] <= 1200),
+    ]
+    for read, route, pred in cases:
+        v = max(committed)
+        armed.append(True)
+        out = read()
+        if route is not None:
+            assert out.route == route
+            out = out.df
+        assert max(committed) == v + 1  # the racing commit did land
+        want = sorted(r[0] for r in committed[v] if pred(r))
+        assert want and sorted(r["doc_id"] for r in out.collect()) == want, route

@@ -5,7 +5,6 @@ epoch guard, the gzip-JSON batch sink, and the supervisor's release flow."""
 
 from __future__ import annotations
 
-import glob
 import gzip
 import json
 import os
@@ -16,7 +15,8 @@ from pyspark.sql import types as T
 from tipoca_stream_spark.functions.masking import MaskConfig, TableMaskRules
 from tipoca_stream_spark.sources.debezium import SchemaRegistry, decode_envelope, envelope_schema
 from tipoca_stream_spark.sources.sinks import Job, write_batch_json_gz, write_manifest
-from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.sources.target import ConcurrentWriteError, ParquetTargetTable
+from tipoca_stream_spark.streaming import epoch_guard
 from tipoca_stream_spark.streaming.pipeline import CdcPipeline, CdcPipelineConfig, kafka_available
 from tipoca_stream_spark.streaming.supervisor import LagMonitor, Supervisor
 
@@ -94,8 +94,8 @@ def test_stream_end_to_end_lww(spark, tmp_path, pipeline):
     target = run_stream(spark, pipeline, str(input_dir))
     rows = {r["id"]: r["name"] for r in target.read().collect()}
     assert rows == {1: "alice2", 2: "bob2"}
-    # two micro-batches → two merged epochs recorded
-    assert len(pipeline._merged_epochs()) == 2
+    # two micro-batches (ids 0, 1) → the mark sits at the second
+    assert epoch_guard.last_epoch(pipeline.target) == 1
     # A1 counters observed per epoch
     assert pipeline.metrics[0]["create"] == 3
 
@@ -263,6 +263,9 @@ def test_kafka_gated(spark):
 
 
 def test_partitioned_target_with_compaction(spark, tmp_path):
+    """compact_every on a catalog-bucketed target: the stream's second
+    epoch triggers a compaction commit that rewrites the target into one
+    file per bucket."""
     cfg = CdcPipelineConfig(
         table="customers",
         primary_keys=["id"],
@@ -270,7 +273,7 @@ def test_partitioned_target_with_compaction(spark, tmp_path):
         target_root=str(tmp_path / "targets"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         store_offsets=True,
-        partition_by=["id"],
+        catalog_buckets=4,
         compact_every=2,
     )
     p = CdcPipeline(spark, cfg)
@@ -287,20 +290,27 @@ def test_partitioned_target_with_compaction(spark, tmp_path):
     target = run_stream(spark, p, str(input_dir))
     rows = {r["id"]: r["name"] for r in target.read().collect()}
     assert rows == {1: "alice2", 2: "bob", 3: "carol"}
-    # hive partition dirs exist under the current (compacted) version
+    # the current (compacted) version holds one file per bucket
     v = target.current_version()
-    parts = glob.glob(os.path.join(target.path, f"v={v}", "*=*"))
-    assert parts, "expected hive partition directories"
+    by_bucket = target._bucket_files(v)
+    assert by_bucket and all(len(fs) == 1 for fs in by_bucket.values()), by_bucket
     # 2 epochs + 1 compaction commit = version 3
     assert v == 3
 
 
 def test_epoch_guard_commits_atomically_with_version(spark, tmp_path):
-    """The merged-epoch set rides in the target version's _meta.json: a
-    replayed epoch after a completed commit is a no-op even on the blind
-    append fast-path (store_offsets=False), and a crash BEFORE the pointer
-    flip leaves the old version + old epoch set, so the replay re-merges
-    cleanly instead of double-appending."""
+    """The epoch mark rides in the target version's _meta.json: a replayed
+    epoch after a completed commit is a no-op even on the blind append
+    fast-path (store_offsets=False), and a crash BEFORE the pointer flip
+    leaves the old version + old mark, so the replay re-merges cleanly
+    instead of double-appending.
+
+    Every input also runs through a model of the set guard the mark
+    replaced (each version carried the set of every epoch id merged into
+    its lineage): an empty epoch, a crash before the flip, an epoch that
+    loses the CAS to a foreign writer and then replays, and a restart on a
+    new CdcPipeline over the same checkpoint must each commit exactly the
+    epochs the set guard committed."""
     cfg = CdcPipelineConfig(
         table="customers",
         primary_keys=["id"],
@@ -310,32 +320,107 @@ def test_epoch_guard_commits_atomically_with_version(spark, tmp_path):
         store_offsets=False,
     )
     p = CdcPipeline(spark, cfg)
-    batch = spark.createDataFrame(
-        [envelope(1, "alice", "c", 1), envelope(2, "bob", "c", 2)], RAW_SCHEMA
-    )
-    p.run_batch(batch, epoch_id=7)
+    foreign = ParquetTargetTable(spark, cfg.target_root, cfg.table)
+    set_guard: dict = {None: frozenset()}  # version -> the set guard's ids
+
+    def run(pipe, epoch_id, events, lose_cas=False):
+        base = pipe.target.current_version()
+        want = bool(events) and not lose_cas and epoch_id not in set_guard[base]
+        raw = spark.createDataFrame([tuple(e.values()) for e in events], RAW_SCHEMA)
+        if lose_cas:
+            real = pipe._merge_and_commit
+
+            def interleaved(*args, **kwargs):
+                # a foreign commit lands after the epoch read its base; it
+                # carries the current metadata (and so the guard) forward
+                foreign.write(foreign.read())
+                set_guard[foreign.current_version()] = set_guard[base]
+                return real(*args, **kwargs)
+
+            pipe._merge_and_commit = interleaved
+            try:
+                with pytest.raises(ConcurrentWriteError):
+                    pipe.run_batch(raw, epoch_id)
+            finally:
+                del pipe._merge_and_commit
+        else:
+            pipe.run_batch(raw, epoch_id)
+        v = pipe.target.current_version()
+        got = v != base and epoch_guard.last_epoch(pipe.target) == epoch_id
+        assert got == want, (epoch_id, got, want)
+        if got:
+            set_guard[v] = set_guard[base] | {epoch_id}
+
+    alice_bob = [envelope(1, "alice", "c", 1), envelope(2, "bob", "c", 2)]
+    run(p, 7, alice_bob)
     assert {r["id"] for r in p.target.read().collect()} == {1, 2}
-    assert p._merged_epochs() == {7}
+    assert epoch_guard.last_epoch(p.target) == 7
 
     # replay after a completed commit: guard skips, no duplicate append
-    p.run_batch(batch, epoch_id=7)
+    run(p, 7, alice_bob)
     assert p.target.read().count() == 2
     assert p.target.current_version() == 1
 
     # crash before the pointer flip: version dir exists but _CURRENT still
     # points at v1 (simulated by rolling the pointer back after a merge)
-    batch8 = spark.createDataFrame([envelope(3, "carol", "c", 3)], RAW_SCHEMA)
-    p.run_batch(batch8, epoch_id=8)
+    carol = [envelope(3, "carol", "c", 3)]
+    run(p, 8, carol)
     assert p.target.current_version() == 2
     assert p.target.read().count() == 3
     with open(p.target._current_file, "w") as f:
         f.write("1")  # simulate: v2 written but never committed
-    assert p._merged_epochs() == {7}  # epoch 8 not visible -> will replay
-    p.run_batch(batch8, epoch_id=8)
+    assert epoch_guard.last_epoch(p.target) == 7  # epoch 8 not visible -> will replay
+    run(p, 8, carol)
     # replay re-appended onto v1 and committed a fresh version: same result
     # as the lost commit, no double-append
     assert sorted(r["id"] for r in p.target.read().collect()) == [1, 2, 3]
-    assert p._merged_epochs() == {7, 8}
+    assert epoch_guard.last_epoch(p.target) == 8
+
+    # an empty epoch commits nothing and leaves the mark; so does its replay
+    run(p, 9, [])
+    run(p, 9, [])
+    assert epoch_guard.last_epoch(p.target) == 8
+
+    # an epoch that loses the CAS records nothing; its replay commits
+    dave = [envelope(4, "dave", "c", 4)]
+    run(p, 10, dave, lose_cas=True)
+    assert epoch_guard.last_epoch(p.target) == 8
+    run(p, 10, dave)
+
+    # restart: a new pipeline on the same checkpoint replays the last
+    # epoch (skipped) and then moves on
+    p2 = CdcPipeline(spark, cfg)
+    run(p2, 10, dave)
+    run(p2, 11, [envelope(5, "erin", "c", 5)])
+    assert sorted(r["id"] for r in p2.target.read().collect()) == [1, 2, 3, 4, 5]
+    assert epoch_guard.last_epoch(p2.target) == 11
+
+
+def test_epoch_mark_size_is_flat(spark, tmp_path):
+    """The guard's metadata does not grow with the stream: _meta.json is
+    the mark alone, so twenty epochs later it has the same byte size (the
+    former set guard added one id per epoch)."""
+    cfg = CdcPipelineConfig(
+        table="customers",
+        primary_keys=["id"],
+        row_schema=ROW_SCHEMA,
+        target_root=str(tmp_path / "targets"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        store_offsets=False,
+    )
+    p = CdcPipeline(spark, cfg)
+
+    def meta_size_after(epoch_id):
+        raw = spark.createDataFrame(
+            [tuple(envelope(epoch_id, "x", "c", epoch_id).values())], RAW_SCHEMA
+        )
+        p.run_batch(raw, epoch_id)
+        path = os.path.join(p.target.path, f"v={p.target.current_version()}", "_meta.json")
+        with open(path) as f:
+            assert json.load(f) == {"last_epoch": epoch_id}
+        return os.path.getsize(path)
+
+    assert meta_size_after(10) == meta_size_after(30)
 
 
 def test_target_metadata_survives_compaction(spark, tmp_path):
@@ -343,26 +428,26 @@ def test_target_metadata_survives_compaction(spark, tmp_path):
 
     t = ParquetTargetTable(spark, str(tmp_path / "tgt"), "t1")
     df = spark.range(10).toDF("id")
-    t.write(df, metadata={"merged_epochs": [1, 2, 3]})
+    t.write(df, metadata={"last_epoch": 3})
     t.compact()
-    assert t.read_metadata() == {"merged_epochs": [1, 2, 3]}
+    assert t.read_metadata() == {"last_epoch": 3}
     assert t.read().count() == 10
 
 
-def _bucketed_pipeline(spark, tmp_path, name, hash_buckets=None):
+def _bucketed_pipeline(spark, tmp_path, name, catalog_buckets=None):
     cfg = CdcPipelineConfig(
         table=name,
         primary_keys=["id"],
         row_schema=ROW_SCHEMA,
         target_root=str(tmp_path / "targets"),
         checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
-        hash_buckets=hash_buckets,
+        catalog_buckets=catalog_buckets,
     )
     return CdcPipeline(spark, cfg)
 
 
 def test_hash_bucketed_merge_equals_plain(spark, tmp_path):
-    """hash_buckets changes the commit layout, never the result: the
+    """catalog_buckets changes the commit layout, never the result: the
     bucketed target equals the plain pipeline on the same event stream."""
     batches = [
         [envelope(i, f"v{i}", "c", i) for i in range(8)],
@@ -370,7 +455,7 @@ def test_hash_bucketed_merge_equals_plain(spark, tmp_path):
          envelope(9, "v9", "c", 12)],
     ]
     plain = _bucketed_pipeline(spark, tmp_path, "plain")
-    bucketed = _bucketed_pipeline(spark, tmp_path, "bucketed", hash_buckets=4)
+    bucketed = _bucketed_pipeline(spark, tmp_path, "bucketed", catalog_buckets=4)
     for epoch, evs in enumerate(batches):
         df = spark.createDataFrame([tuple(e.values()) for e in evs], RAW_SCHEMA)
         plain.run_batch(df, epoch)
@@ -381,44 +466,12 @@ def test_hash_bucketed_merge_equals_plain(spark, tmp_path):
     assert a == b and len(a) == 8  # 8 created +1 new -1 deleted = 8
 
 
-def test_hash_bucketed_merge_links_untouched_buckets(spark, tmp_path):
-    import os
-
-    p = _bucketed_pipeline(spark, tmp_path, "delta", hash_buckets=8)
-    df1 = spark.createDataFrame(
-        [tuple(envelope(i, f"v{i}", "c", i).values()) for i in range(32)], RAW_SCHEMA
-    )
-    p.run_batch(df1, 0)
-    v1 = p.target.current_version()
-    # second batch touches ONE key → one bucket rewritten, others linked
-    df2 = spark.createDataFrame([tuple(envelope(3, "v3b", "u", 100).values())], RAW_SCHEMA)
-    p.run_batch(df2, 1)
-    v2 = p.target.current_version()
-
-    def inodes(v):
-        out = {}
-        vdir = os.path.join(p.target.path, f"v={v}")
-        for d in os.listdir(vdir):
-            if d.startswith("_bucket="):
-                for f in os.listdir(os.path.join(vdir, d)):
-                    if f.endswith(".parquet"):
-                        out[(d, f)] = os.stat(os.path.join(vdir, d, f)).st_ino
-        return out
-
-    i1, i2 = inodes(v1), inodes(v2)
-    linked = {k for k in i2 if k in i1 and i1[k] == i2[k]}
-    rewritten = {d for (d, _) in set(i2) - linked}
-    assert linked and len(rewritten) == 1, (len(linked), rewritten)
-    row = {r["id"]: r["name"] for r in p.target.read().collect()}
-    assert row[3] == "v3b" and len(row) == 32
-
-
 def test_hash_bucketed_schema_evolution_full_rewrite(spark, tmp_path):
     """An add-column epoch cannot delta-commit (linked files can't gain
     columns) — it must fall back to a full rewrite and stay correct."""
     import json
 
-    p = _bucketed_pipeline(spark, tmp_path, "evolve", hash_buckets=4)
+    p = _bucketed_pipeline(spark, tmp_path, "evolve", catalog_buckets=4)
     df1 = spark.createDataFrame(
         [tuple(envelope(i, f"v{i}", "c", i).values()) for i in range(4)], RAW_SCHEMA
     )
@@ -439,22 +492,3 @@ def test_hash_bucketed_schema_evolution_full_rewrite(spark, tmp_path):
     rows = {r["id"]: (r["name"], r["email"]) for r in p.target.read().collect()}
     assert rows[9] == ("n9", "e9")
     assert rows[0] == ("v0", None) and len(rows) == 5  # backfilled as NULL
-
-
-def test_hash_and_catalog_buckets_mutually_exclusive(spark, tmp_path):
-    """ADVICE r4: setting both bucket modes would compute delta bucket ids
-    in one space while the target lives in the other — reject at init."""
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        CdcPipeline(
-            spark,
-            CdcPipelineConfig(
-                table="t",
-                primary_keys=["id"],
-                row_schema=schema,
-                target_root=str(tmp_path / "targets"),
-                checkpoint_dir=str(tmp_path / "ckpt"),
-                hash_buckets=4,
-                catalog_buckets=4,
-            ),
-        )

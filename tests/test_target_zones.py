@@ -156,12 +156,16 @@ def test_cdc_pipeline_zone_cols_end_to_end(spark, tmp_path):
     # the original window no longer contains id=1, but everyone else
     got2 = pipe.target.read_range(900, 1500)
     assert {r["id"] for r in got2.collect()} == set(range(501)) - {1}
+    # stats table exists on the delta-committed current version
+    zdir = os.path.join(pipe.target.path, f"v={pipe.target.current_version()}", "_zones")
+    assert os.path.isdir(zdir)
 
 
 def test_partition_delta_carries_stats_and_prunes(spark, tmp_path):
-    """write_partition_delta (the hash-bucketed pipeline's commit path)
-    maintains zone stats: fresh rows for rewritten partitions, carried
-    rows for hard-linked ones; read_range stays correct and pruned."""
+    """write_partition_delta (the commit path of the day-partitioned rollup
+    and the bucketed join view) maintains zone stats: fresh rows for
+    rewritten partitions, carried rows for hard-linked ones; read_range
+    stays correct and pruned."""
     t = ParquetTargetTable(spark, str(tmp_path), "pd", zone_cols=["ts"])
     base = _events(spark, n=8000).withColumn(
         "_bucket", (F.col("user_id") % 8).cast("int")
@@ -207,60 +211,6 @@ def test_partition_delta_carries_stats_and_prunes(spark, tmp_path):
     lo, hi = 1_700_000_001_000, 1_700_000_099_000
     want = t.read().filter(F.col("ts").between(lo, hi)).count()
     assert t.read_range(lo, hi).count() == want > 0
-
-
-def test_cdc_pipeline_hash_buckets_zone_cols(spark, tmp_path):
-    """zone_cols + hash_buckets: partition-delta commits keep stats live."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from tipoca_stream_spark.streaming.pipeline import CdcPipeline, CdcPipelineConfig
-
-    row_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("name", T.StringType()),
-        ]
-    )
-    raw_schema = T.StructType(
-        [
-            T.StructField("topic", T.StringType()),
-            T.StructField("partition", T.IntegerType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("value", T.StringType()),
-        ]
-    )
-
-    def env(i, ts, name, offset, op="c"):
-        return ("t", 0, offset, _json.dumps(
-            {"before": None, "after": {"id": i, "ts": ts, "name": name},
-             "op": op, "ts_ms": offset}))
-
-    pipe = CdcPipeline(
-        spark,
-        CdcPipelineConfig(
-            table="u", primary_keys=["id"], row_schema=row_schema,
-            target_root=str(tmp_path / "t"), checkpoint_dir=str(tmp_path / "c"),
-            hash_buckets=4, zone_cols=["ts"],
-        ),
-    )
-    pipe.run_batch(
-        spark.createDataFrame([env(i, 1000 + i, f"u{i}", i) for i in range(800)], raw_schema),
-        epoch_id=0,
-    )
-    pipe.run_batch(
-        spark.createDataFrame([env(7, 10_000_000, "late", 9000, op="u")], raw_schema),
-        epoch_id=1,
-    )
-    got = pipe.target.read_range(9_999_999, 10_000_001)
-    assert {r["id"] for r in got.collect()} == {7}
-    # stats table exists on the delta-committed current version
-    zdir = os.path.join(
-        pipe.target.path, f"v={pipe.target.current_version()}", "_zones"
-    )
-    assert os.path.isdir(zdir)
 
 
 def test_delta_onto_pre_zone_target_stats_full_or_fallback(spark, tmp_path):

@@ -1,11 +1,13 @@
 """Time travel + change-data-feed on the versioned target: historical
 reads, keyed/keyless diffs with the Delta CDF change-type vocabulary, and
-the inode-pruning claim — CDF over a partition-delta table must SCAN only
+the inode-pruning claim — CDF over a bucket-delta history must SCAN only
 the buckets the window actually touched."""
 
 from __future__ import annotations
 
 import json
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,7 +48,7 @@ def pipeline(spark, tmp_path):
         row_schema=ROW_SCHEMA,
         target_root=str(tmp_path / "targets"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        hash_buckets=8,
+        catalog_buckets=8,
     )
     p = CdcPipeline(spark, cfg)
     batches = [
@@ -92,12 +94,16 @@ def test_changes_scan_only_touched_buckets(pipeline):
     v1, v2 = pipeline.target.versions()
     ch = pipeline.target.changes(v1, v2, keys=["id"])
     touched = {
-        f"_bucket={r[0]}"
-        for r in pipeline.spark.createDataFrame([(3,), (5,), (99,)], ["id"])
-        .select(F.pmod(F.hash("id"), F.lit(8)))
+        r[0]
+        for r in pipeline.spark.createDataFrame([(3,), (5,), (99,)], "id long")
+        .select(pipeline.target.bucket_of())
         .collect()
     }
-    scanned_buckets = {f.split("/")[-2] for f in ch.inputFiles()}
+    # Spark's bucketed writer names each file part-*_<bucket id>.c000...
+    scanned_buckets = {
+        int(re.search(r"_(\d{5})\.", os.path.basename(f)).group(1))
+        for f in ch.inputFiles()
+    }
     assert scanned_buckets == touched, (scanned_buckets, touched)
     assert len(touched) < 8  # i.e. linked buckets really were pruned
 
@@ -124,7 +130,7 @@ def test_cdf_drives_downstream_incremental_aggregate(spark, tmp_path):
         row_schema=ROW_SCHEMA,
         target_root=str(tmp_path / "targets"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        hash_buckets=4,
+        catalog_buckets=4,
     )
     p = CdcPipeline(spark, cfg)
     batches = [

@@ -147,7 +147,7 @@ class RedshiftSinkSpec:
     ):
         """One table's CdcPipelineConfig from this CR — the manifest the
         user already runs becomes the engine's pipeline config (mask file,
-        flush cadence); engine-only knobs (hash_buckets, partition_by…)
+        flush cadence); engine-only knobs (catalog_buckets, zone_cols…)
         pass through ``overrides``."""
         from tipoca_stream_spark.streaming.pipeline import CdcPipelineConfig
 

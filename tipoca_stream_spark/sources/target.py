@@ -251,9 +251,10 @@ class ParquetTargetTable:
         ``v=<n>/_meta.json`` before the pointer flip, so a reader either
         sees the old version with the old metadata or the new version with
         the new metadata — never a mix. The streaming epoch guard rides on
-        this (T4): the merged-epoch set lives in the same commit as the
-        merge result. ``None`` carries the current version's metadata
-        forward (so compaction/maintenance rewrites don't drop it).
+        this (T4): the last merged epoch id lives in the same commit as the
+        merge result (streaming/epoch_guard.py). ``None`` carries the
+        current version's metadata forward (so compaction/maintenance
+        rewrites don't drop it).
 
         ``partition_by`` lays the version out as hive-partitioned
         directories — at 100 TB this is what lets the merge's anti-join and
@@ -462,12 +463,12 @@ class ParquetTargetTable:
         col = col or (self.zone_cols[0] if self.zone_cols else None)
         v = version if version is not None else self.current_version()
         pred = F.col(col).between(F.lit(lo), F.lit(hi)) if col else None
-        files = self.range_files(lo, hi, col, version)
+        files = self.range_files(lo, hi, col, v)
         if files is None:
             return self.read(v).filter(pred)
         if not files:
             return self.read(v).limit(0).filter(pred)
-        vdir = os.path.join(self.path, f"v={v if v is not None else self.current_version()}")
+        vdir = os.path.join(self.path, f"v={v}")
         return (
             self.spark.read.option("basePath", vdir).parquet(*files).filter(pred)
         )
@@ -493,58 +494,19 @@ class ParquetTargetTable:
         O(changed rows) instead of re-reading the table, the same consumer
         contract the reference's sink group serves with per-batch manifests.
 
-        When both versions were committed by the partition-delta path
-        (``_bucket``-partitioned), unchanged buckets are pruned BEFORE any
-        Spark work by comparing file inodes: a bucket carried over by
-        ``write_partition_delta`` hard-links the same files, so identical
-        inode sets prove identical bytes and only differing buckets are
-        scanned. At 100 TB that makes CDF cost O(touched buckets), not
-        O(table) — without the layout it degrades gracefully to a full
-        keyed diff.
+        Both sides are read through ``_cdf_sides``: whole versions here;
+        ``BucketedTargetTable`` prunes to the buckets whose files differ, so
+        CDF over a bucket-delta history costs O(touched buckets), not
+        O(table).
 
         With ``keys`` a full-outer join classifies inserts/deletes/updates
         (non-key columns compared null-safely); without, a positional
         multiset diff (``exceptAll`` both ways) yields inserts+deletes
         only."""
-        old_dir = os.path.join(self.path, f"v={from_version}")
-        new_dir = os.path.join(self.path, f"v={to_version}")
-        for d, v in ((old_dir, from_version), (new_dir, to_version)):
-            if not os.path.isdir(d):
+        for v in (from_version, to_version):
+            if not os.path.isdir(os.path.join(self.path, f"v={v}")):
                 raise FileNotFoundError(f"table {self.name} version {v} not retained")
-
-        def bucket_inodes(vdir: str) -> dict[str, frozenset[int]] | None:
-            out: dict[str, frozenset[int]] = {}
-            for entry in os.listdir(vdir):
-                src = os.path.join(vdir, entry)
-                if entry.startswith("_bucket=") and os.path.isdir(src):
-                    out[entry] = frozenset(
-                        os.stat(os.path.join(src, fn)).st_ino
-                        for fn in os.listdir(src)
-                        if fn.endswith(".parquet")
-                    )
-            return out or None
-
-        def read_side(vdir: str, buckets: list[str] | None) -> DataFrame:
-            if buckets is None:
-                return self.spark.read.parquet(vdir)
-            # a bucket first written in the OTHER version has no directory
-            # on this side — it contributes no rows here, not an error
-            dirs = [os.path.join(vdir, b) for b in buckets]
-            dirs = [d for d in dirs if os.path.isdir(d)]
-            if not dirs:
-                return self.spark.read.parquet(vdir).limit(0)
-            return self.spark.read.option("basePath", vdir).parquet(*dirs)
-
-        ob, nb = bucket_inodes(old_dir), bucket_inodes(new_dir)
-        changed: list[str] | None = None
-        if ob is not None and nb is not None:
-            changed = sorted(k for k in ob.keys() | nb.keys() if ob.get(k) != nb.get(k))
-        old = read_side(old_dir, changed)
-        new = read_side(new_dir, changed)
-        if ob is not None:
-            old = old.drop("_bucket")
-        if nb is not None:
-            new = new.drop("_bucket")
+        old, new = self._cdf_sides(from_version, to_version)
         # D5 schema evolution across the window: columns added since
         # from_version read as NULL on the old side
         for c in [c for c in new.columns if c not in old.columns]:
@@ -580,6 +542,14 @@ class ParquetTargetTable:
             *[n[c] for c in cols], F.lit("update_postimage").alias("_change_type")
         )
         return ins.union(dels).union(pre).union(post)
+
+    def _cdf_sides(self, from_version: int, to_version: int) -> tuple[DataFrame, DataFrame]:
+        """The rows ``changes`` diffs: both versions whole."""
+        old, new = (
+            self.spark.read.parquet(os.path.join(self.path, f"v={v}"))
+            for v in (from_version, to_version)
+        )
+        return old, new
 
     def compact(self, target_files: int = 1, partition_by: list[str] | None = None) -> int:
         """Small-file compaction: rewrite the current version into
@@ -855,6 +825,31 @@ class BucketedTargetTable(ParquetTargetTable):
         if not files:
             return self.read(v).limit(0)
         return self.spark.read.schema(self.read(v).schema).parquet(*files)
+
+    def _cdf_sides(self, from_version: int, to_version: int) -> tuple[DataFrame, DataFrame]:
+        """Only the buckets whose files differ between the two versions,
+        pruned BEFORE any Spark work by comparing file inodes: a bucket a
+        delta commit carried over hard-links the same files, so identical
+        inode sets prove identical bytes. A bucket with files on one side
+        only contributes no rows on the other, not an error."""
+        old_b, new_b = self._bucket_files(from_version), self._bucket_files(to_version)
+
+        def inodes(files: list[str]) -> frozenset[int]:
+            return frozenset(os.stat(f).st_ino for f in files)
+
+        changed = [
+            b for b in old_b.keys() | new_b.keys()
+            if inodes(old_b.get(b, [])) != inodes(new_b.get(b, []))
+        ]
+
+        def side(v: int, by_bucket: dict[int, list[str]]) -> DataFrame:
+            schema = self._version_schema(self._vdir(v))
+            files = [f for b in changed for f in by_bucket.get(b, [])]
+            if not files:
+                return self.spark.createDataFrame([], schema)
+            return self.spark.read.schema(schema).parquet(*files)
+
+        return side(from_version, old_b), side(to_version, new_b)
 
     def _write_bucketed(self, df: DataFrame, v: int, n_tasks: int | None = None) -> None:
         ident = self._table_ident(v)
@@ -1368,19 +1363,21 @@ class BucketedTargetTable(ParquetTargetTable):
         postings, _ = self._text_tables(self.read(v).limit(0))
         return postings
 
-    def point_files(self, value, col: str | None = None) -> list[str] | None:
-        """Bloom-qualifying files for ``col == value`` on the current
-        version, or None when no index path applies (caller falls back to
-        a scan). A file absent from the Bloom sidecar holds no non-null
-        keys and is correctly skipped — sidecars commit atomically with
-        the data, so partial stats cannot exist."""
+    def point_files(
+        self, value, col: str | None = None, version: int | None = None
+    ) -> list[str] | None:
+        """Bloom-qualifying files for ``col == value`` on the current (or
+        given) version, or None when no index path applies (caller falls
+        back to a scan). A file absent from the Bloom sidecar holds no
+        non-null keys and is correctly skipped — sidecars commit
+        atomically with the data, so partial stats cannot exist."""
         from tipoca_stream_spark.sources.bloomindex import (
             covering_files,
             probe_word_masks,
         )
 
         col = col or self.bloom_col
-        v = self.current_version()
+        v = version if version is not None else self.current_version()
         if v is None:
             raise FileNotFoundError(f"table {self.name} has no committed version")
         vdir = self._vdir(v)
@@ -1418,16 +1415,18 @@ class BucketedTargetTable(ParquetTargetTable):
         k1: float = 1.2,
         b: float = 0.75,
         k: int = 10,
+        version: int | None = None,
     ) -> DataFrame:
-        """Top-k (doc_id, bm25) over ``text_col``, served off the CURRENT
-        version's posting sidecar — index answers are exactly as fresh as
-        the table (same commit). Query cost tracks the query terms'
-        document frequency, never corpus size: |Q| pushed-filter posting
-        reads + a broadcast dfreq/totals join + TakeOrderedAndProject.
+        """Top-k (doc_id, bm25) over ``text_col``, served off the current
+        (or given) version's posting sidecar — index answers are exactly
+        as fresh as the table (same commit). Query cost tracks the query
+        terms' document frequency, never corpus size: |Q| pushed-filter
+        posting reads + a broadcast dfreq/totals join +
+        TakeOrderedAndProject.
         Scoring is the repo-wide Okapi BM25 contract (same constants,
         same 6-dp round-before-sum as sources/invindex.py), so
         index-served ≡ scan-served — pinned by test and driver oracle."""
-        v = self.current_version()
+        v = version if version is not None else self.current_version()
         if v is None:
             raise FileNotFoundError(f"table {self.name} has no committed version")
         vdir = self._vdir(v)
@@ -1467,8 +1466,10 @@ class BucketedTargetTable(ParquetTargetTable):
         predicate from the CURRENT version's committed sidecars, falling
         back to a filtered scan whenever no index applies — the answer is
         identical either way (every index path carries its residual
-        filter), only the files scheduled differ. Exactly one predicate
-        class per call:
+        filter), only the files scheduled differ. ``_CURRENT`` is read ONCE
+        and every index lookup below is pinned to that version, so a commit
+        landing mid-route cannot mix two versions into one answer. Exactly
+        one predicate class per call:
 
         - ``eq=(col, value)``: per-file Bloom words when ``col`` is the
           indexed column; bucket pruning when it is the (single) primary
@@ -1523,7 +1524,9 @@ class BucketedTargetTable(ParquetTargetTable):
                     for f in fs
                     if f.endswith(".parquet")
                 )
-                return RoutedRead(self.bm25_topk(terms, k=k), "inverted_index", n, total)
+                return RoutedRead(
+                    self.bm25_topk(terms, k=k, version=v), "inverted_index", n, total
+                )
             # scan fallback: same scoring over a fresh tokenize pass;
             # totals come from the UNFILTERED doc lengths, the term filter
             # applies only to the scored postings (as in the index path)
@@ -1550,7 +1553,7 @@ class BucketedTargetTable(ParquetTargetTable):
         if eq is not None:
             col, value = eq
             preds.append(F.col(col) == F.lit(value))
-            files = self.point_files(value, col) if col == self.bloom_col else None
+            files = self.point_files(value, col, v) if col == self.bloom_col else None
             if files is not None:
                 contribute(files, "bloom")
             elif [col] == self.keys:
@@ -1564,7 +1567,7 @@ class BucketedTargetTable(ParquetTargetTable):
         if between is not None:
             col, lo, hi = between
             preds.append(F.col(col).between(F.lit(lo), F.lit(hi)))
-            files = self.range_files(lo, hi, col) if col in self.zone_cols else None
+            files = self.range_files(lo, hi, col, v) if col in self.zone_cols else None
             if files is not None:
                 contribute(files, "zones")
         if box is not None:
@@ -1575,7 +1578,7 @@ class BucketedTargetTable(ParquetTargetTable):
                 if not tracked or col not in self.zone_cols:
                     tracked = False
                     continue
-                fs = self.range_files(lo, hi, col)
+                fs = self.range_files(lo, hi, col, v)
                 if fs is None:
                     tracked = False
                     continue
@@ -1627,7 +1630,7 @@ class BucketedTargetTable(ParquetTargetTable):
         if not touched:
             return 0
         n = hits.count()
-        survivors = self.read_buckets(touched).filter((~pred) | pred.isNull())
+        survivors = self.read_buckets(touched, version=base).filter((~pred) | pred.isNull())
         self.write_bucket_delta(survivors, touched, expected_base=base)
         return n
 

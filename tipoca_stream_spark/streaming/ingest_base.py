@@ -8,9 +8,12 @@ the CDC pipeline's effectively-exactly-once contract:
 
 - the EPOCH GUARD rides the index's version-commit metadata — marking
   an epoch ingested is ATOMIC with the append's CAS version flip (the
-  same shape as CdcPipeline's ``merged_epochs``, streaming/pipeline.py):
-  a crash leaves either "epoch fully in the index and marked" or "index
-  untouched and unmarked", never half;
+  commit protocol of CdcPipeline's guard, streaming/epoch_guard.py): a
+  crash leaves either "epoch fully in the index and marked" or "index
+  untouched and unmarked", never half. Unlike the CDC sinks' high-water
+  mark, the guard here keeps the SET of ingested epoch ids
+  (``ingested_epochs``): ``matches()`` lists every committed epoch's
+  matches log, so it needs the full set, not just the last id;
 - the guard's metadata is built through the operator's
   ``_merged_metadata`` (operators/index_base.py), so a commit carrying
   the epoch marker preserves every foreign key already on the index —

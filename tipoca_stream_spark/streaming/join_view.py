@@ -24,9 +24,9 @@ untouched buckets carry over as hard links. At 100 TB with a 1 GiB
 batch that's a handful of bucket rewrites versus a full-table rewrite
 per batch.
 
-Exactly-once: the refreshed-epoch set commits atomically with the view's
-version flip (same mechanism as CdcPipeline's T4 guard), so a replayed
-batch is a no-op.
+Exactly-once: the last refreshed epoch id commits atomically with the
+view's version flip (CdcPipeline's T4 guard, streaming/epoch_guard.py), so
+a replayed batch is a no-op.
 
 Correctness contract (pinned by tests): after every batch,
 ``view.read() == A'.read() ⋈ B'.read()`` computed from scratch — for any
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.streaming import epoch_guard
 
 
 class MaterializedJoin:
@@ -69,9 +70,6 @@ class MaterializedJoin:
         # just the compute) is O(touched buckets) per batch
         self.n_buckets = n_buckets
 
-    def _epochs(self) -> set[int]:
-        return set(self.view.read_metadata().get("join_epochs", []))
-
     def _bucket(self, col: str):
         return F.pmod(F.hash(F.col(col)), F.lit(self.n_buckets))
 
@@ -87,10 +85,9 @@ class MaterializedJoin:
     def refresh(self, delta_keys: DataFrame, epoch_id: int = 0) -> None:
         """Incremental maintenance: ``delta_keys`` is a 1-column DataFrame
         of join-key values touched by this batch on either side."""
-        epochs = self._epochs()
-        if epoch_id in epochs:
+        if epoch_guard.committed(self.view, epoch_id):
             return
-        meta = {"join_epochs": sorted(epochs | {int(epoch_id)})}
+        meta = epoch_guard.mark(epoch_id)
         touched = delta_keys.select(
             F.col(delta_keys.columns[0]).alias(self.join_key)
         ).distinct()

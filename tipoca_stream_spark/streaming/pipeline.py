@@ -11,10 +11,15 @@ Spark-first shape: ``readStream`` → tombstone skip (S10) → envelope decode
 ``foreachBatch``: latest-wins dedupe (M2) + merge into the versioned
 parquet target (M3-M6), with the append fast-path and schema evolution.
 
+The target is either a plain versioned table (every epoch rewrites it) or,
+with ``catalog_buckets``, a catalog-bucketed one whose steady epochs commit
+only the buckets the batch touches (``BucketedTargetTable``).
+
 Delivery semantics (T4): the reference is at-least-once with an idempotent
 loader; here checkpointing gives replayed epochs and the epoch guard makes
-the merge idempotent — a replayed epoch id is skipped because the epoch →
-version mapping is recorded with the target version flip.
+the merge idempotent — each version's metadata carries the last merged
+epoch id, committed with the target version flip, and a replayed epoch at
+or below it is skipped (streaming/epoch_guard.py).
 
 Sources: any Spark streaming source DataFrame works (file source in tests —
 Kafka connector jars are not bundled in this container; ``kafka_reader``
@@ -23,7 +28,6 @@ builds the reader when they are).
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 
@@ -47,7 +51,12 @@ from tipoca_stream_spark.operators.merge import (
     merge_with_offsets,
 )
 from tipoca_stream_spark.sources.debezium import decode_envelope
-from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.sources.target import (
+    BucketedTargetTable,
+    ConcurrentWriteError,
+    ParquetTargetTable,
+)
+from tipoca_stream_spark.streaming import epoch_guard
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -97,23 +106,15 @@ class CdcPipelineConfig:
     # False: reference-parity blind merge + append fast-path, which trusts
     # source ordering the way the loader trusts Kafka (SURVEY.md §2.10 T2).
     store_offsets: bool = True
-    # hive-partition the target's versions by these columns so the merge's
-    # readers prune whole files (SCALE.md: partition-pruned CDC target)
-    partition_by: list[str] | None = None
-    # hash-bucket the target on pmod(hash(primary_keys), n): each merge
-    # becomes a PARTITION-DELTA commit — only the buckets containing batch
-    # keys are read (partition-pruned) and rewritten; untouched buckets
-    # hard-link from the previous version (write_partition_delta). Makes
-    # the per-epoch merge O(batch), not O(table), on the write side too.
-    # Schema-evolution epochs fall back to a full rewrite (linked files
-    # cannot gain columns).
-    hash_buckets: int | None = None
-    # CATALOG-bucketed target (sources/target.BucketedTargetTable): same
-    # O(batch) delta commits as hash_buckets, but the layout is a real
-    # bucket spec registered in the catalog — downstream joins/aggregates
-    # on the PK plan with zero Exchange on the target side (the DISTKEY
-    # co-location the reference gets from Redshift). Mutually exclusive
-    # with hash_buckets.
+    # CATALOG-bucketed target (sources/target.BucketedTargetTable) on
+    # pmod(hash(primary_keys), n): each merge becomes a BUCKET-DELTA commit
+    # — only the buckets containing batch keys are read and rewritten;
+    # untouched buckets hard-link from the previous version, so the
+    # per-epoch merge is O(batch), not O(table). The bucket spec is
+    # registered in the catalog, so downstream joins/aggregates on the PK
+    # plan with zero Exchange on the target side (the DISTKEY co-location
+    # the reference gets from Redshift). Schema-evolution epochs fall back
+    # to a full rewrite (linked files cannot gain columns).
     catalog_buckets: int | None = None
     # SORTKEY analogue: maintain per-file min/max zone stats for these
     # columns on every target commit (fresh rows only for touched buckets
@@ -133,20 +134,7 @@ class CdcPipeline:
     def __init__(self, spark: SparkSession, config: CdcPipelineConfig):
         self.spark = spark
         self.config = config
-        if config.hash_buckets and config.catalog_buckets:
-            # mutually exclusive by design: n_buckets = nb or cb would
-            # compute delta bucket ids in the hash_buckets space while the
-            # target is laid out in catalog_buckets space — read_buckets
-            # would miss rows and bucket-delta commits would link buckets
-            # that also contain rewritten keys (silent duplication/loss)
-            raise ValueError(
-                "hash_buckets and catalog_buckets are mutually exclusive; "
-                f"got hash_buckets={config.hash_buckets}, "
-                f"catalog_buckets={config.catalog_buckets}"
-            )
         if config.catalog_buckets:
-            from tipoca_stream_spark.sources.target import BucketedTargetTable
-
             self.target: ParquetTargetTable = BucketedTargetTable(
                 spark,
                 config.target_root,
@@ -161,28 +149,6 @@ class CdcPipeline:
             )
         self.metrics: list[dict] = []  # A1/A2 counters per epoch
         os.makedirs(config.checkpoint_dir, exist_ok=True)
-
-    # epoch guard (T4): epoch ids already merged into the current lineage.
-    # The set is committed ATOMICALLY with the merge result — it lives in the
-    # target version's _meta.json, written before the _CURRENT pointer flip
-    # (sources/target.py). A crash anywhere leaves pointer+epochs consistent:
-    # before the flip, the old version still pairs with the old epoch set and
-    # the replayed epoch re-merges from the old version (a fresh version
-    # write, not a double-append); after the flip, the epoch is recorded and
-    # the replay is skipped. The legacy checkpoint-side merged_epochs.json is
-    # read as a fallback for pre-existing checkpoints, never written.
-    @property
-    def _legacy_epochs_file(self) -> str:
-        return os.path.join(self.config.checkpoint_dir, "merged_epochs.json")
-
-    def _merged_epochs(self) -> set[int]:
-        epochs = set(self.target.read_metadata().get("merged_epochs", []))
-        try:
-            with open(self._legacy_epochs_file) as f:
-                epochs |= set(json.load(f))
-        except (FileNotFoundError, ValueError):
-            pass
-        return epochs
 
     def transform(self, raw: DataFrame) -> DataFrame:
         """The batcher stage as pure column transforms (works identically on
@@ -215,25 +181,30 @@ class CdcPipeline:
         (``batch_event_counts`` then a ``distinct().collect()`` of bucket
         ids). Same values: the counters mirror ``batch_event_counts``
         exactly and the bucket set is the same pmod-hash distinct."""
-        n_buckets = self.config.hash_buckets or self.config.catalog_buckets
+        bucketed = isinstance(self.target, BucketedTargetTable)
         aggs = [
             F.count(F.when(F.col(COL_DEBEZIUM_OP) == OP_CREATE, 1)).alias("create"),
             F.count(F.when(F.col(COL_DEBEZIUM_OP) == OP_UPDATE, 1)).alias("update"),
             F.count(F.when(F.col(COL_DEBEZIUM_OP) == OP_DELETE, 1)).alias("delete"),
         ]
-        if n_buckets:
-            bucket_expr = F.pmod(
-                F.hash(*[F.col(k) for k in self.config.primary_keys]), F.lit(n_buckets)
-            )
-            aggs.append(F.sort_array(F.collect_set(bucket_expr)).alias("_buckets"))
+        if bucketed:
+            aggs.append(F.sort_array(F.collect_set(self.target.bucket_of())).alias("_buckets"))
         row = batch_df.agg(*aggs).collect()[0]
         counts = {"create": row["create"], "update": row["update"], "delete": row["delete"]}
-        buckets = [int(b) for b in row["_buckets"]] if n_buckets else None
+        buckets = [int(b) for b in row["_buckets"]] if bucketed else None
         return counts, buckets
 
     def merge_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch body: M1-M6 + schema evolution + epoch guard."""
-        if epoch_id in self._merged_epochs():
+        """foreachBatch body: M1-M6 + schema evolution + epoch guard.
+
+        The epoch mark is committed ATOMICALLY with the merge result — it
+        lives in the target version's _meta.json, written before the
+        _CURRENT pointer flip (sources/target.py). A crash anywhere leaves
+        pointer+mark consistent: before the flip, the old version still
+        carries the old mark and the replayed epoch re-merges from the old
+        version (a fresh version write, not a double-append); after the
+        flip, the epoch is recorded and the replay is skipped."""
+        if epoch_guard.committed(self.target, epoch_id):
             return  # replayed epoch — merge already committed (T4)
         # multi-writer guard: remember the version this merge derives from;
         # the commit is a CAS against it. If another pipeline (a second
@@ -241,6 +212,8 @@ class CdcPipeline:
         # scenario run wrong) commits in between, this epoch fails with
         # ConcurrentWriteError instead of silently dropping that commit,
         # and checkpoint replay re-merges from the winner's version (T4).
+        # Every read below is pinned to this version, so a commit landing
+        # mid-merge cannot mix two versions into the merge input.
         base_version = self.target.current_version()
         # one materialization serves the counters AND the merge — without it
         # the batch source is scanned once for counts and again for the merge
@@ -266,34 +239,15 @@ class CdcPipeline:
         if self.config.store_offsets:
             target_cols.append(COL_KAFKA_OFFSET)
 
-        nb = self.config.hash_buckets
-        cb = self.config.catalog_buckets
-        n_buckets = nb or cb
-        bucket_expr = (
-            F.pmod(
-                F.hash(*[F.col(k) for k in self.config.primary_keys]), F.lit(n_buckets)
-            )
-            if n_buckets
-            else None
-        )
         delta_buckets: list[int] | None = None
-        if self.target.exists():
-            current = self.target.read()
-            if cb:
-                evolved = set(target_cols) - set(current.columns)
-                if not evolved:
-                    # bucket-delta path: read ONLY the bucket files the
-                    # batch keys live in (same hash as the bucket spec)
-                    delta_buckets = batch_buckets
-                    current = self.target.read_buckets(delta_buckets)
-            elif nb and "_bucket" in current.columns:
-                evolved = set(target_cols) - set(current.columns)
-                if not evolved:
-                    # partition-delta path: read ONLY the buckets the batch
-                    # keys live in; rows outside them cannot change
-                    delta_buckets = batch_buckets
-                    current = current.filter(F.col("_bucket").isin(delta_buckets))
-                current = current.drop("_bucket")
+        if base_version is not None:
+            current = self.target.read(base_version)
+            if batch_buckets is not None and set(target_cols) <= set(current.columns):
+                # bucket-delta path: read ONLY the bucket files the batch
+                # keys live in (same hash as the bucket spec); rows outside
+                # them cannot change
+                delta_buckets = batch_buckets
+                current = self.target.read_buckets(delta_buckets, version=base_version)
             # D5 schema evolution: new columns appear as nulls on old rows
             for c in [c for c in target_cols if c not in current.columns]:
                 current = current.withColumn(c, F.lit(None).cast(batch_df.schema[c].dataType))
@@ -318,16 +272,6 @@ class CdcPipeline:
     def _merge_and_commit(
         self, batch_df, epoch_id, current, counts, persisted, base_version, delta_buckets
     ) -> None:
-        nb = self.config.hash_buckets
-        cb = self.config.catalog_buckets
-        n_buckets = nb or cb
-        bucket_expr = (
-            F.pmod(
-                F.hash(*[F.col(k) for k in self.config.primary_keys]), F.lit(n_buckets)
-            )
-            if n_buckets
-            else None
-        )
         if self.config.store_offsets:
             merged = merge_with_offsets(
                 current, batch_df, self.config.primary_keys, persist_registry=persisted
@@ -336,52 +280,18 @@ class CdcPipeline:
             merged = cdc_merge(
                 current, batch_df, self.config.primary_keys, counts, persist_registry=persisted
             )
-        merged_epochs = sorted(self._merged_epochs() | {epoch_id})
-        if cb and delta_buckets is not None:
+        meta = epoch_guard.mark(epoch_id)
+        if delta_buckets is not None:
             self.target.write_bucket_delta(
-                merged,
-                delta_buckets,
-                metadata={"merged_epochs": merged_epochs},
-                expected_base=base_version,
-            )
-        elif cb:
-            # bootstrap or schema-evolution epoch: full bucketed rewrite
-            self.target.write(
-                merged,
-                metadata={"merged_epochs": merged_epochs},
-                expected_base=base_version,
-            )
-        elif nb and delta_buckets is not None:
-            self.target.write_partition_delta(
-                merged.withColumn("_bucket", bucket_expr),
-                "_bucket",
-                delta_buckets,
-                metadata={"merged_epochs": merged_epochs},
-                expected_base=base_version,
-            )
-        elif nb:
-            # bootstrap or schema-evolution epoch: full bucketed rewrite
-            self.target.write(
-                merged.withColumn("_bucket", bucket_expr),
-                partition_by=["_bucket"],
-                metadata={"merged_epochs": merged_epochs},
-                expected_base=base_version,
+                merged, delta_buckets, metadata=meta, expected_base=base_version
             )
         else:
-            self.target.write(
-                merged,
-                partition_by=self.config.partition_by,
-                metadata={"merged_epochs": merged_epochs},
-                expected_base=base_version,
-            )
-        n_merged = len(merged_epochs)
-        if self.config.compact_every and n_merged % self.config.compact_every == 0:
-            from tipoca_stream_spark.sources.target import ConcurrentWriteError
-
+            # plain target, or the bucketed bootstrap / schema-evolution
+            # epoch: full rewrite
+            self.target.write(merged, metadata=meta, expected_base=base_version)
+        if self.config.compact_every and (epoch_id + 1) % self.config.compact_every == 0:
             try:
-                self.target.compact(
-                    partition_by=["_bucket"] if nb else self.config.partition_by
-                )
+                self.target.compact()
             except ConcurrentWriteError:
                 # the merge above committed fine; losing the COMPACTION
                 # race to a concurrent writer is not an epoch failure —
@@ -404,7 +314,7 @@ class CdcPipeline:
             # replay guard BEFORE the transform: a replayed epoch must not
             # pay the decode's registry prepass (distinct scan + possible
             # HTTP) just to be skipped inside merge_batch
-            if eid in self._merged_epochs():
+            if epoch_guard.committed(self.target, eid):
                 return
             self.merge_batch(self.transform(bdf), eid)
 

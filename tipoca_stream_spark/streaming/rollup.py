@@ -23,9 +23,9 @@ Scale shape (the reason this beats "recompute the aggregate"):
   bucket date, so at 100 TB the untouched branch prunes to file listing
   and the rewrite touches only the partitions a batch lands in.
 
-Exactly-once: the merged-epoch set commits atomically with the data
-version (ParquetTargetTable.write metadata — same mechanism as the CDC
-pipeline's T4 guard), so a replayed micro-batch is a no-op.
+Exactly-once: the last merged epoch id commits atomically with the data
+version (ParquetTargetTable.write metadata — the CDC pipeline's T4 guard,
+streaming/epoch_guard.py), so a replayed micro-batch is a no-op.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.streaming import epoch_guard
 
 
 class ContinuousRollup:
@@ -70,22 +71,18 @@ class ContinuousRollup:
             F.sum(F.col(self.value_col).cast("decimal(18,6)")).alias("sum_v"),
         )
 
-    def _merged_epochs(self) -> set[int]:
-        return set(self.target.read_metadata().get("rollup_epochs", []))
-
     # ---- merge --------------------------------------------------------
 
     def merge_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch body: partials → bucket-pruned merge → atomic
         version flip carrying the epoch guard."""
-        epochs = self._merged_epochs()
-        if epoch_id in epochs:
+        if epoch_guard.committed(self.target, epoch_id):
             return  # replayed epoch: already committed with a prior version
         # CAS base: the version this merge derives from — a concurrent
         # writer's commit fails this epoch for checkpoint replay instead
         # of being silently overwritten (same guard as CdcPipeline)
         base = self.target.current_version()
-        meta = {"rollup_epochs": sorted(epochs | {int(epoch_id)})}
+        meta = epoch_guard.mark(epoch_id)
         p = self.partials(batch_df)
         if not self.target.exists():
             out = p
