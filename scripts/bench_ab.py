@@ -54,8 +54,8 @@ def main() -> None:
         "--once-script",
         default="bench_once.py",
         help="alternative single-pass script in scripts/ printing a "
-        "BENCH_ONCE line (e.g. probe_graph_once_r14.py for the "
-        "iterative-graph family A/B)",
+        "BENCH_ONCE line (e.g. one that times only the query family "
+        "under test)",
     )
     args = ap.parse_args()
 

@@ -195,8 +195,8 @@ def test_policy_on_soak_semantic(spark, tmp_path):
     growth) rebuilds, not one per batch), version history stays bounded,
     screens stay bucket-pruned, no maintenance race surfaces as an error,
     and a dup of any accepted epoch is still flagged at the end. The
-    hundreds-of-batch wall-clock soak lives in
-    scripts/soak_maintenance_r9.py (SCALE_PROBE_r09_soak.json)."""
+    hundreds-of-batch wall-clock soak is recorded in
+    SCALE_PROBE_r09_soak.json."""
     seeds = _vecs(spark, range(2)).selectExpr(
         "vec_id as seed_id", "embedding as seed_vec"
     )
@@ -325,7 +325,7 @@ def test_policy_keeps_flat_below_k_threshold(spark, tmp_path):
 
 
 def test_hot_bucket_churn_compaction_stays_scoped(spark, tmp_path):
-    """VERDICT r9 next #7 (pin for scripts/soak_churn_r10.py): when one
+    """VERDICT r9 next #7 (pin for the SCALE_PROBE_r10_churn.json soak): when one
     index bucket absorbs an append on EVERY batch (docs rejection-sampled
     through the operator's own band hashing to carry ≥1 band row in
     bucket 0), chain-triggered compaction must keep that bucket's chain

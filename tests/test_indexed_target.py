@@ -374,14 +374,11 @@ def test_compaction_loses_cas_race_cleanly(spark, tmp_path):
 
     orig_write = t.write
 
-    def racing_write(df, partition_by=None, metadata=None, expected_base=None, **kw):
+    def racing_write(df, metadata=None, expected_base=None, **kw):
         # the foreign commit lands after compact() read its base but
         # before its own commit
         other.write(other.read().withColumn("x", F.col("x") + 100))
-        return orig_write(
-            df, partition_by=partition_by, metadata=metadata,
-            expected_base=expected_base, **kw
-        )
+        return orig_write(df, metadata=metadata, expected_base=expected_base, **kw)
 
     t.write = racing_write
     with pytest.raises(Exception) as ei:

@@ -9,7 +9,7 @@ import random
 
 import pytest
 
-from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.sources.target import BucketedTargetTable, ParquetTargetTable
 from tipoca_stream_spark.streaming.join_view import MaterializedJoin
 
 CUST_SCHEMA = "cust_id long, name string"
@@ -20,19 +20,22 @@ def write_state(spark, target, rows, schema):
     target.write(spark.createDataFrame(rows, schema))
 
 
+def view_table(spark, root, name="cust_orders", buckets=4):
+    return BucketedTargetTable(spark, str(root), name, buckets=buckets, keys=["cust_id"])
+
+
 def make_view(spark, tmp_path):
     left = ParquetTargetTable(spark, str(tmp_path), "customers")
     right = ParquetTargetTable(spark, str(tmp_path), "orders")
-    view = ParquetTargetTable(spark, str(tmp_path), "cust_orders")
-    return MaterializedJoin(spark, view, left, right, "cust_id")
+    return MaterializedJoin(spark, view_table(spark, tmp_path), left, right, "cust_id")
 
 
 def as_set(df):
     return {tuple(r) for r in df.collect()}
 
 
-def refresh_and_check(mj, spark, keys, epoch):
-    mj.refresh(spark.createDataFrame([(k,) for k in keys], "cust_id long"), epoch)
+def refresh_and_check(mj, spark, keys, epoch, key_schema="cust_id long"):
+    mj.refresh(spark.createDataFrame([(k,) for k in keys], key_schema), epoch)
     got = as_set(mj.view.read().select("cust_id", "name", "order_id", "total"))
     exp = as_set(mj.full_join().select("cust_id", "name", "order_id", "total"))
     assert got == exp, f"epoch {epoch}: view diverged"
@@ -110,6 +113,8 @@ def test_epoch_replay_is_noop(spark, tmp_path):
     write_state(spark, mj.left, [(1, "ann2")], CUST_SCHEMA)
     mj.refresh(spark.createDataFrame([(1,)], "cust_id long"), epoch_id=0)
     assert mj.view.current_version() == v
+    mj.refresh(spark.createDataFrame([], "cust_id long"), epoch_id=1)  # no keys: no commit
+    assert mj.view.current_version() == v
     refresh_and_check(mj, spark, [1], epoch=1)  # real refresh catches up
 
 
@@ -172,8 +177,7 @@ def test_composes_with_cdc_pipeline_batches(spark, tmp_path):
             target_root=root, checkpoint_dir=str(tmp_path / "ck2"), store_offsets=False,
         ),
     )
-    view = ParquetTargetTable(spark, root, "cust_orders")
-    mj = MaterializedJoin(spark, view, cp.target, op.target, "cust_id")
+    mj = MaterializedJoin(spark, view_table(spark, root), cp.target, op.target, "cust_id")
 
     # batch 1: two customers, two orders
     run(cp, [envelope("t.c", None, {"cust_id": 1, "name": "ann"}, 1),
@@ -194,14 +198,14 @@ def test_composes_with_cdc_pipeline_batches(spark, tmp_path):
 
 
 def test_bucketed_view_delta_commit(spark, tmp_path):
-    """n_buckets mode: refresh rebuilds only the touched hash buckets and
-    hard-links the rest — and still equals the from-scratch join."""
+    """A refresh rebuilds only the touched view buckets and hard-links
+    the rest — and still equals the from-scratch join."""
     import os
 
     left = ParquetTargetTable(spark, str(tmp_path), "cust_b")
     right = ParquetTargetTable(spark, str(tmp_path), "ord_b")
-    view = ParquetTargetTable(spark, str(tmp_path), "view_b")
-    mj = MaterializedJoin(spark, view, left, right, "cust_id", n_buckets=8)
+    view = view_table(spark, tmp_path, "view_b", buckets=8)
+    mj = MaterializedJoin(spark, view, left, right, "cust_id")
     cust = [(k, f"c{k}") for k in range(20)]
     orders = [(100 + k, k, float(k)) for k in range(20)]
     write_state(spark, left, cust, CUST_SCHEMA)
@@ -215,20 +219,37 @@ def test_bucketed_view_delta_commit(spark, tmp_path):
     v2 = view.current_version()
 
     def inodes(v):
-        out = {}
-        vdir = os.path.join(view.path, f"v={v}")
-        for d in os.listdir(vdir):
-            if d.startswith("_bucket="):
-                for f in os.listdir(os.path.join(vdir, d)):
-                    if f.endswith(".parquet"):
-                        out[(d, f)] = os.stat(os.path.join(vdir, d, f)).st_ino
-        return out
+        return {b: {os.stat(f).st_ino for f in fs} for b, fs in view._bucket_files(v).items()}
 
     i1, i2 = inodes(v1), inodes(v2)
-    linked = {k for k in i2 if k in i1 and i1[k] == i2[k]}
-    rewritten_dirs = {d for (d, _) in set(i2) - linked}
-    assert linked, "no partitions were carried over as links"
-    assert len(rewritten_dirs) == 1, f"expected 1 rebuilt bucket, got {rewritten_dirs}"
+    linked = {b for b in i2 if i2[b] == i1.get(b)}
+    rewritten = set(i2) - linked
+    assert linked, "no bucket files were carried over as links"
+    assert len(rewritten) == 1, f"expected 1 rebuilt bucket, got {rewritten}"
     got = as_set(mj.read().select("cust_id", "name", "order_id", "total"))
     exp = as_set(mj.full_join().select("cust_id", "name", "order_id", "total"))
     assert got == exp
+
+
+def test_int_delta_keys_rebuild_the_right_buckets(spark, tmp_path):
+    """Delta keys arrive as ``int`` against ``bigint`` tables. Spark's
+    hash of an int differs from the hash of the same value as a bigint,
+    so the keys must take the view's key type before they are bucketed —
+    otherwise the refresh rebuilds the wrong buckets and the view goes
+    stale."""
+    mj = make_view(spark, tmp_path)
+    cust = [(k, f"c{k}") for k in range(12)]
+    write_state(spark, mj.left, cust, CUST_SCHEMA)
+    write_state(spark, mj.right, [(100 + k, k, float(k)) for k in range(12)], ORD_SCHEMA)
+    refresh_and_check(mj, spark, range(12), 0, key_schema="cust_id int")
+    # rename every customer: each key's rows change, whatever its bucket
+    write_state(spark, mj.left, [(k, f"{n}v2") for k, n in cust], CUST_SCHEMA)
+    refresh_and_check(mj, spark, range(12), 1, key_schema="cust_id int")
+
+
+def test_view_must_be_bucketed_on_the_join_key(spark, tmp_path):
+    left = ParquetTargetTable(spark, str(tmp_path), "customers")
+    right = ParquetTargetTable(spark, str(tmp_path), "orders")
+    view = BucketedTargetTable(spark, str(tmp_path), "v", buckets=4, keys=["order_id"])
+    with pytest.raises(ValueError, match="bucketed on"):
+        MaterializedJoin(spark, view, left, right, "cust_id")

@@ -5,12 +5,13 @@ no-op (guard commits atomically with the version flip)."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
-from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.sources.target import BucketedTargetTable
 from tipoca_stream_spark.streaming.rollup import ContinuousRollup
 
 
@@ -26,10 +27,13 @@ BATCH2 = [ev(1, 30, "click", 0.75), ev(2, 0, "view", 4.0)]
 BATCH3 = [ev(0, 59, "view", 10.0), ev(1, 59, "buy", 7.5)]
 
 
+def bucketed(spark, tmp_path, name="rollup"):
+    return BucketedTargetTable(spark, str(tmp_path), name, buckets=4, keys=["bucket_start"])
+
+
 @pytest.fixture()
 def rollup(spark, tmp_path):
-    target = ParquetTargetTable(spark, str(tmp_path), "rollup")
-    return ContinuousRollup(spark, target)
+    return ContinuousRollup(spark, bucketed(spark, tmp_path))
 
 
 def batch_df(spark, rows):
@@ -76,29 +80,18 @@ def test_epoch_replay_is_noop(spark, rollup):
     rollup.run_batch(batch_df(spark, BATCH1), epoch_id=0)  # redelivery
     assert as_set(rollup.read()) == before
     assert rollup.target.current_version() == v_before
+    rollup.run_batch(batch_df(spark, []), epoch_id=1)  # empty: nothing to commit
+    assert rollup.target.current_version() == v_before
 
 
 def test_restart_resumes_from_committed_state(spark, tmp_path):
-    target = ParquetTargetTable(spark, str(tmp_path), "rollup")
+    target = bucketed(spark, tmp_path)
     ContinuousRollup(spark, target).run_batch(batch_df(spark, BATCH1), epoch_id=0)
     # a fresh instance (process restart) sees the epoch guard + data
     r2 = ContinuousRollup(spark, target)
     r2.run_batch(batch_df(spark, BATCH1), epoch_id=0)  # replay skipped
     r2.run_batch(batch_df(spark, BATCH2), epoch_id=1)
     assert as_set(r2.read()) == as_set(oracle(spark, BATCH1, BATCH2))
-
-
-def test_partitioned_by_day_prunes_layout(spark, tmp_path):
-    target = ParquetTargetTable(spark, str(tmp_path), "rollup")
-    r = ContinuousRollup(spark, target, partition_by_day=True)
-    r.run_batch(batch_df(spark, BATCH1), epoch_id=0)
-    r.run_batch(batch_df(spark, BATCH2), epoch_id=1)
-    import glob
-    import os
-
-    vdir = os.path.join(target.path, f"v={target.current_version()}")
-    assert glob.glob(os.path.join(vdir, "bucket_date=*")), "expected hive partition dirs"
-    assert as_set(r.read()) == as_set(oracle(spark, BATCH1, BATCH2))
 
 
 def test_streaming_file_source_end_to_end(spark, tmp_path):
@@ -114,8 +107,7 @@ def test_streaming_file_source_end_to_end(spark, tmp_path):
             for ts, et, v in rows:
                 f.write(json.dumps({"ts": ts.isoformat(), "event_type": et, "value": v}) + "\n")
         os.utime(src / f"b{i}.json", (time.time() + i, time.time() + i))
-    target = ParquetTargetTable(spark, str(tmp_path), "rollup")
-    r = ContinuousRollup(spark, target)
+    r = ContinuousRollup(spark, bucketed(spark, tmp_path))
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -134,8 +126,7 @@ def test_merge_is_batch_order_invariant(spark, tmp_path):
 
     results = []
     for j, perm in enumerate(itertools.permutations([BATCH1, BATCH2, BATCH3])):
-        target = ParquetTargetTable(spark, str(tmp_path), f"rollup{j}")
-        r = ContinuousRollup(spark, target)
+        r = ContinuousRollup(spark, bucketed(spark, tmp_path, f"rollup{j}"))
         for i, rows in enumerate(perm):
             r.run_batch(batch_df(spark, rows), epoch_id=i)
         results.append(as_set(r.read()))
@@ -169,31 +160,39 @@ def test_quantize_roundtrip_error_bounded(spark):
     assert err <= 0.5 + 1e-9, err
 
 
-def test_partition_delta_links_untouched_days(spark, tmp_path):
-    """partition_by_day commits are REAL deltas: a batch touching only
-    day 2 must hard-link day 1's files from the previous version (same
-    inode), not rewrite them — write cost O(touched partitions)."""
-    import os
-
-    d1 = [ev(0, 5, "view", 1.0)]  # 2026-01-01 (ev fixes the date)
-    from datetime import datetime
-
-    d2 = [(datetime(2026, 1, 2, 9, 0, 0), "view", 2.0)]
-    d2_late = [(datetime(2026, 1, 2, 9, 0, 30), "click", 3.0)]
-    target = ParquetTargetTable(spark, str(tmp_path), "rollup")
-    r = ContinuousRollup(spark, target, partition_by_day=True)
-    r.run_batch(batch_df(spark, d1), 0)
-    r.run_batch(batch_df(spark, d2), 1)
+def test_late_batch_links_untouched_buckets(spark, tmp_path):
+    """Steady-state commits are REAL deltas: a late batch rewrites only
+    the target buckets its windows hash to, and every other bucket's
+    files are hard-linked from the previous version (same inode), not
+    rewritten — write cost O(touched buckets)."""
+    target = bucketed(spark, tmp_path)
+    r = ContinuousRollup(spark, target)
+    # eight one-minute windows spread the rows over the four buckets
+    r.run_batch(batch_df(spark, [ev(m, 5, "view", m) for m in range(8)]), 0)
+    v1 = target.current_version()
+    late = [ev(0, 59, "click", 3.0)]  # touches ONLY the minute-0 window
+    r.run_batch(batch_df(spark, late), 1)
     v2 = target.current_version()
-    r.run_batch(batch_df(spark, d2_late), 2)  # touches ONLY day 2
-    v3 = target.current_version()
-    day1_v2 = os.path.join(target.path, f"v={v2}", "bucket_date=2026-01-01")
-    day1_v3 = os.path.join(target.path, f"v={v3}", "bucket_date=2026-01-01")
-    files_v2 = {f: os.stat(os.path.join(day1_v2, f)).st_ino for f in os.listdir(day1_v2) if f.endswith(".parquet")}
-    files_v3 = {f: os.stat(os.path.join(day1_v3, f)).st_ino for f in os.listdir(day1_v3) if f.endswith(".parquet")}
-    assert files_v2 and files_v2 == files_v3  # same inodes: linked, not rewritten
-    # and the data still equals the one-shot aggregate
-    assert as_set(r.read()) == as_set(oracle(spark, d1, d2, d2_late))
+    touched = {
+        row["b"]
+        for row in r.partials(batch_df(spark, late)).select(target.bucket_of().alias("b")).collect()
+    }
+
+    def inodes(v):
+        return {
+            b: {os.stat(f).st_ino for f in files} for b, files in target._bucket_files(v).items()
+        }
+
+    i1, i2 = inodes(v1), inodes(v2)
+    assert touched and set(i1) - touched, "the late batch must leave a bucket untouched"
+    for b in i1:
+        if b in touched:
+            assert not i1[b] & i2[b], f"touched bucket {b} was not rewritten"
+        else:
+            assert i1[b] == i2[b], f"untouched bucket {b} was rewritten"
+    assert as_set(r.read()) == as_set(
+        oracle(spark, [ev(m, 5, "view", m) for m in range(8)], late)
+    )
 
 
 def test_partition_delta_survives_vacuum(spark, tmp_path):
@@ -203,9 +202,22 @@ def test_partition_delta_survives_vacuum(spark, tmp_path):
 
     d1 = [ev(0, 5, "view", 1.0)]
     d2 = [(datetime(2026, 1, 2, 9, 0, 0), "view", 2.0)]
-    target = ParquetTargetTable(spark, str(tmp_path), "rollup")
-    r = ContinuousRollup(spark, target, partition_by_day=True)
+    target = bucketed(spark, tmp_path)
+    r = ContinuousRollup(spark, target)
     r.run_batch(batch_df(spark, d1), 0)
     r.run_batch(batch_df(spark, d2), 1)
     target.vacuum(keep=1)
     assert as_set(r.read()) == as_set(oracle(spark, d1, d2))
+
+
+def test_target_keys_must_be_group_columns(spark, tmp_path):
+    """A target bucketed on a column outside (bucket_start, keys) cannot
+    host the rollup: the partials carry only the group columns."""
+    target = BucketedTargetTable(spark, str(tmp_path), "rollup", buckets=4, keys=["ts"])
+    with pytest.raises(ValueError, match="subset of the group key"):
+        ContinuousRollup(spark, target)
+    # any subset of the group key is accepted
+    both = BucketedTargetTable(
+        spark, str(tmp_path), "r2", buckets=4, keys=["bucket_start", "event_type"]
+    )
+    ContinuousRollup(spark, both)

@@ -57,17 +57,3 @@ def test_target_compact_reduces_files(spark, tmp_path):
     assert len(v2_files) <= 2
     assert t.read().count() == 10000
     assert t.read().agg(F.sum("id")).collect()[0][0] == sum(range(10000))
-
-
-def test_target_partitioned_write_prunes(spark, tmp_path):
-    t = ParquetTargetTable(spark, str(tmp_path), "events_p")
-    df = spark.range(0, 1000).select(F.col("id"), (F.col("id") % 4).alias("bucket"))
-    t.write(df, partition_by=["bucket"])
-    assert glob.glob(f"{t.path}/v=1/bucket=*"), "expected hive partition dirs"
-    got = t.read()
-    assert got.count() == 1000
-    # partition pruning: only one directory's files feed a bucket filter
-    pruned = got.filter(F.col("bucket") == 2)
-    assert pruned.count() == 250
-    scan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in scan or pruned.count() == 250

@@ -423,6 +423,29 @@ def test_epoch_mark_size_is_flat(spark, tmp_path):
     assert meta_size_after(10) == meta_size_after(30)
 
 
+def test_epoch_metrics_are_bounded(spark, tmp_path, monkeypatch):
+    """CdcPipeline.metrics keeps only the newest METRICS_KEPT epoch
+    records, so a long-running stream holds bounded driver memory."""
+    from tipoca_stream_spark.streaming import pipeline as pipeline_mod
+
+    monkeypatch.setattr(pipeline_mod, "METRICS_KEPT", 3)
+    cfg = CdcPipelineConfig(
+        table="customers",
+        primary_keys=["id"],
+        row_schema=ROW_SCHEMA,
+        target_root=str(tmp_path / "targets"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        store_offsets=False,
+    )
+    p = CdcPipeline(spark, cfg)
+    empty = spark.createDataFrame([], RAW_SCHEMA)
+    for epoch_id in range(5):  # empty epochs: counted, nothing committed
+        p.run_batch(empty, epoch_id)
+    assert len(p.metrics) == 3
+    assert [m["epoch"] for m in p.metrics] == [2, 3, 4]
+    assert p.metrics[-1] == {"epoch": 4, "create": 0, "update": 0, "delete": 0}
+
+
 def test_target_metadata_survives_compaction(spark, tmp_path):
     from tipoca_stream_spark.sources.target import ParquetTargetTable
 

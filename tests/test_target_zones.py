@@ -161,56 +161,20 @@ def test_cdc_pipeline_zone_cols_end_to_end(spark, tmp_path):
     assert os.path.isdir(zdir)
 
 
-def test_partition_delta_carries_stats_and_prunes(spark, tmp_path):
-    """write_partition_delta (the commit path of the day-partitioned rollup
-    and the bucketed join view) maintains zone stats: fresh rows for
-    rewritten partitions, carried rows for hard-linked ones; read_range
-    stays correct and pruned."""
-    t = ParquetTargetTable(spark, str(tmp_path), "pd", zone_cols=["ts"])
-    base = _events(spark, n=8000).withColumn(
-        "_bucket", (F.col("user_id") % 8).cast("int")
-    )
-    t.write(base, partition_by=["_bucket"])
-    v1 = t.current_version()
-    stats1 = spark.read.parquet(
-        os.path.join(str(tmp_path), "pd", f"v={v1}", "_zones")
-    )
-    assert stats1.count() > 0
-
-    # delta: rewrite bucket 3 only, with late ts values for 5 keys
-    changed = base.filter(F.col("_bucket") == 3)
-    bumped = changed.withColumn(
-        "ts",
-        F.when(F.col("user_id") < 50, F.col("ts") + F.lit(77_000_000_000)).otherwise(
-            F.col("ts")
-        ),
-    )
-    t.write_partition_delta(bumped, "_bucket", [3])
-    v2 = t.current_version()
-
-    # stats cover every v2 file exactly once
-    stats2 = spark.read.parquet(
-        os.path.join(str(tmp_path), "pd", f"v={v2}", "_zones")
-    )
-    stat_files = sorted(r["file"] for r in stats2.select("file").collect())
-    data_files = sorted(
-        os.path.relpath(f, os.path.join(str(tmp_path), "pd", f"v={v2}"))
-        for f in ParquetTargetTable._version_files(
-            os.path.join(str(tmp_path), "pd", f"v={v2}")
-        )
-    )
-    assert stat_files == data_files
-
-    # the late window lives only in bucket 3's rewritten files
-    got = t.read_range(1_770_000_000_000, 1_790_000_000_000)
-    assert got.count() == bumped.filter(
-        F.col("ts") >= 1_770_000_000_000
-    ).count() > 0
-    assert all("_bucket=3" in f for f in got.inputFiles())
-    # an early window still correct (carried stats serve linked files)
-    lo, hi = 1_700_000_001_000, 1_700_000_099_000
-    want = t.read().filter(F.col("ts").between(lo, hi)).count()
-    assert t.read_range(lo, hi).count() == want > 0
+def test_zero_row_write_leaves_a_schema_carrying_file(spark, tmp_path):
+    """A zero-row write (a delete-only epoch that empties a plain target)
+    still commits one part file carrying the schema, with or without
+    zone_cols, so the emptied version stays readable — versions are flat
+    and need no empty-file fallback."""
+    for zone_cols in (None, ["ts"]):
+        name = f"empty_{bool(zone_cols)}"
+        t = ParquetTargetTable(spark, str(tmp_path), name, zone_cols=zone_cols)
+        t.write(_events(spark, n=10).limit(0))
+        vdir = os.path.join(t.path, f"v={t.current_version()}")
+        assert len(ParquetTargetTable._version_files(vdir)) == 1, zone_cols
+        got = t.read()
+        assert got.count() == 0
+        assert got.dtypes == _events(spark, n=10).dtypes
 
 
 def test_delta_onto_pre_zone_target_stats_full_or_fallback(spark, tmp_path):

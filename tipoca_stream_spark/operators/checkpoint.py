@@ -56,17 +56,19 @@ def aqe_disabled(spark):
     by the same lock as pin builds (two interleaved flips could read
     "false" as prev and leave AQE off for the session).
 
-    Two callers, both with measured wins (OPTIMIZATION_r14/r15.md):
+    Three callers, each with a measured win (OPTIMIZATION_r14/r15.md):
     pin builds (an AdaptiveSparkPlanExec reports Unknown partitioning, so
     an AQE-on checkpoint loses the hashpartitioning it exists to
-    advertise) and the streaming steady-state delta commit (a micro-batch
-    merge is a handful of tasks over batch-sized inputs; AQE's per-stage
-    materialization turns it into 4-6 sequential jobs of pure driver
-    round-trip latency, ~0.4-0.5 s per trigger at bench scale, with
-    nothing for AQE to adapt — the only post-shuffle stage is a
-    user-pinned repartition AQE may not coalesce anyway). Plans built and
-    EXECUTED inside the block run entirely AQE-off; partitioning/stage
-    structure never changes results."""
+    advertise); the bucket-delta ``saveAsTable`` of a steady-state commit
+    (a micro-batch merge is a handful of tasks over batch-sized inputs;
+    AQE's per-stage materialization turns it into 4-6 sequential jobs of
+    pure driver round-trip latency, ~0.4-0.5 s per trigger at bench
+    scale, with nothing for AQE to adapt — the only post-shuffle stage is
+    a user-pinned repartition AQE may not coalesce anyway); and the Bloom
+    and text sidecars of delta and append commits, which are batch-sized
+    for the same reason (2.0 → 1.5 s per indexed delta commit). Plans
+    built and EXECUTED inside the block run entirely AQE-off;
+    partitioning/stage structure never changes results."""
     with _PIN_LOCK:
         prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.enabled", "false")

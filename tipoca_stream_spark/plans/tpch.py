@@ -499,7 +499,7 @@ def tpch_q17_small_lot_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows within one), and the avg is the same exact-decimal sum ÷ count
     in double (identical IEEE result in both engines). 2 scans + a
     full-corpus aggregate exchange → 1 scan + one brand-rows exchange;
-    measured 0.59x (probe_tpch_rewrites_r15, rows identical)."""
+    measured 0.59x (OPTIMIZATION_r15.md, rows identical)."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     li_b = li.join(
@@ -619,7 +619,7 @@ def tpch_q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + equi-join — sums of exact decimals are associative, so
     part_qty = Σ supp_qty is the same value. 2 scans + 2 detail-level
     exchanges + join → 1 scan + 1 detail exchange + 1 reduced-table
-    exchange; measured 0.89x (probe_tpch_rewrites_r15, rows identical)."""
+    exchange; measured 0.89x (OPTIMIZATION_r15.md, rows identical)."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     supp = load_table(spark, sf_dir, "supplier")
@@ -879,7 +879,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     3 lineitem scans / orderkey shuffles → 1 (the windows stack on one
     exchange: hashpartitioning(orderkey) satisfies both window specs).
-    Measured 0.77x with identical rows (probe_tpch_rewrites_r15); oracle
+    Measured 0.77x with identical rows (OPTIMIZATION_r15.md); oracle
     SQL unchanged and exact."""
     supp = load_table(spark, sf_dir, "supplier")
     li = load_table(spark, sf_dir, "lineitem").select(

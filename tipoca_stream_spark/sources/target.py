@@ -239,13 +239,14 @@ class ParquetTargetTable:
     def write(
         self,
         df: DataFrame,
-        partition_by: list[str] | None = None,
         metadata: dict | None = None,
         expected_base=_NO_CAS,
     ) -> int:
         """Write a new version and flip the pointer. The parquet write is to
         a not-yet-referenced directory; the pointer flip (a single tiny file
-        rename) is the commit point.
+        rename) is the commit point. Every version is flat: its part files
+        sit directly under ``v=<n>/``. A zero-row write still leaves one
+        schema-carrying part file, so an emptied table stays readable.
 
         ``metadata`` commits ATOMICALLY with the data: it is written to
         ``v=<n>/_meta.json`` before the pointer flip, so a reader either
@@ -254,97 +255,20 @@ class ParquetTargetTable:
         this (T4): the last merged epoch id lives in the same commit as the
         merge result (streaming/epoch_guard.py). ``None`` carries the
         current version's metadata forward (so compaction/maintenance
-        rewrites don't drop it).
-
-        ``partition_by`` lays the version out as hive-partitioned
-        directories — at 100 TB this is what lets the merge's anti-join and
-        downstream readers prune whole files by PK-range/date instead of
-        filtering rows (SCALE.md: partition pruning on the CDC target)."""
+        rewrites don't drop it)."""
         import json
 
         if metadata is None:
             metadata = self.read_metadata()
         v = self._claim_version()
         target_dir = os.path.join(self.path, f"v={v}")
-        if self.zone_cols and not partition_by:
+        if self.zone_cols:
             # range-cluster the rewrite on the primary zone column so each
-            # file owns a tight value range (the SORTKEY's physical
-            # meaning); partitioned layouts keep their directory layout and
-            # rely on stats within each partition
+            # file owns a tight value range (the SORTKEY's physical meaning)
             df = df.repartitionByRange(self.zone_files, F.col(self.zone_cols[0]))
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target_dir)
-        self._ensure_readable(target_dir, df)
+        df.write.mode("overwrite").parquet(target_dir)
         if self.zone_cols:
             self._write_zone_stats(target_dir, self._version_files(target_dir), None)
-        if metadata:
-            with open(os.path.join(target_dir, "_meta.json"), "w") as f:
-                json.dump(metadata, f)
-        return self._flip(v, expected_base)
-
-    def write_partition_delta(
-        self,
-        changed: DataFrame,
-        partition_col: str,
-        changed_values: list,
-        metadata: dict | None = None,
-        expected_base=_NO_CAS,
-    ) -> int:
-        """Commit a new version writing ONLY the changed partitions;
-        every other partition directory is carried over from the current
-        version via hard links (same-filesystem, O(files) not O(bytes)) —
-        the Delta/Iceberg file-reuse trick reduced to its core. This is
-        what makes an incremental merge's WRITE cost O(batch partitions)
-        instead of O(table): a 1 GiB batch against a 100 TB table links
-        ~all partitions and rewrites only the handful it touched.
-
-        ``changed`` must contain exactly the rows of the partitions in
-        ``changed_values`` (hive value strings as Spark renders them).
-        Vacuum safety: removing an old version only unlinks names — data
-        files survive through the links held by newer versions."""
-        import json
-
-        if metadata is None:
-            metadata = self.read_metadata()
-        prev = self.current_version()
-        v = self._claim_version()
-        target_dir = os.path.join(self.path, f"v={v}")
-        changed.write.mode("overwrite").partitionBy(partition_col).parquet(target_dir)
-        self._ensure_readable(target_dir, changed)
-        new_files = self._version_files(target_dir) if self.zone_cols else []
-        changed_names = {f"{partition_col}={val}" for val in changed_values}
-        if prev is not None:
-            prev_dir = os.path.join(self.path, f"v={prev}")
-            for entry in os.listdir(prev_dir):
-                src = os.path.join(prev_dir, entry)
-                if (
-                    not entry.startswith(f"{partition_col}=")
-                    or entry in changed_names
-                    or not os.path.isdir(src)
-                ):
-                    continue
-                dst = os.path.join(target_dir, entry)
-                os.makedirs(dst, exist_ok=True)
-                for fn in os.listdir(src):
-                    if fn.endswith(".parquet"):
-                        os.link(os.path.join(src, fn), os.path.join(dst, fn))
-        if self.zone_cols:
-            # stats rows: fresh for the rewritten partitions (O(batch)),
-            # carried for every hard-linked file (bytes unchanged). If the
-            # previous version has no stats (target predates zone_cols),
-            # stat EVERY file once — partial stats would make read_range
-            # silently skip the linked files.
-            carried = self._carried_zone_stats(
-                prev,
-                lambda s: F.substring_index(F.col("file"), "/", 1).isin(
-                    list(changed_names)
-                ),
-            )
-            if carried is None and prev is not None:
-                new_files = self._version_files(target_dir)
-            self._write_zone_stats(target_dir, new_files, carried)
         if metadata:
             with open(os.path.join(target_dir, "_meta.json"), "w") as f:
                 json.dump(metadata, f)
@@ -359,22 +283,30 @@ class ParquetTargetTable:
 
     @staticmethod
     def _version_files(vdir: str) -> list[str]:
-        """All data files of a version (recursive — partitioned layouts
-        nest), excluding the _zones sidecar."""
-        out = []
-        for base, dirs, files in os.walk(vdir):
-            # prune hidden/sidecar dirs (_zones) but KEEP hive partition
-            # dirs — a partition column named _bucket makes dirs like
-            # "_bucket=3" that start with an underscore yet hold data
-            dirs[:] = [
-                d for d in dirs if "=" in d or not d.startswith(("_", "."))
-            ]
-            out += [
-                os.path.join(base, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-        return out
+        """All data files of a version. Versions are flat, so these are the
+        part files directly under ``v=<n>/``; sidecars live in
+        ``_``-prefixed subdirectories and are not listed."""
+        return [
+            os.path.join(vdir, f)
+            for f in os.listdir(vdir)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+
+    def _read_sidecar(self, sdir: str) -> DataFrame | None:
+        """A ``_``-prefixed sidecar directory as a DataFrame, or None when
+        it holds no part files. Spark drops a root path whose name starts
+        with ``_`` and warns ``All paths were ignored``, so the part files
+        are listed and read with the directory as ``basePath``, which also
+        keeps the ``b=<id>`` partition column of the postings."""
+        files = [
+            os.path.join(base, f)
+            for base, _, fs in os.walk(sdir)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        if not files:
+            return None
+        return self.spark.read.option("basePath", sdir).parquet(*files)
 
     def _zone_stats_of(self, files: list[str]) -> DataFrame:
         """One column-pruned pass over ``files`` → one stats row per file
@@ -411,13 +343,8 @@ class ParquetTargetTable:
         names, so carried rows stay valid verbatim."""
         if prev is None:
             return None
-        sdir = os.path.join(self.path, f"v={prev}", subdir)
-        if not os.path.isdir(sdir) or not any(
-            f.endswith(".parquet") for f in os.listdir(sdir)
-        ):
-            return None
-        stats = self.spark.read.parquet(sdir)
-        return stats.filter(~drop_pred(stats))
+        stats = self._read_sidecar(os.path.join(self.path, f"v={prev}", subdir))
+        return None if stats is None else stats.filter(~drop_pred(stats))
 
     def _carried_zone_stats(self, prev: int | None, drop_pred) -> DataFrame | None:
         return self._carried_sidecar(prev, "_zones", drop_pred)
@@ -435,11 +362,8 @@ class ParquetTargetTable:
         if v is None:
             raise FileNotFoundError(f"table {self.name} has no committed version")
         vdir = os.path.join(self.path, f"v={v}")
-        zdir = self._zones_dir(vdir)
-        if not os.path.isdir(zdir):
-            return None
-        stats = self.spark.read.parquet(zdir)
-        if f"min_{col}" not in stats.columns:
+        stats = self._read_sidecar(self._zones_dir(vdir))
+        if stats is None or f"min_{col}" not in stats.columns:
             return None
         # defensive coverage check: a file the stats table doesn't know
         # about would be silently skipped — if counts disagree (partial
@@ -472,17 +396,6 @@ class ParquetTargetTable:
         return (
             self.spark.read.option("basePath", vdir).parquet(*files).filter(pred)
         )
-
-    def _ensure_readable(self, target_dir: str, df: DataFrame) -> None:
-        """A PARTITIONED write of zero rows emits no parquet files at all
-        (partition dirs come from row values), leaving an unreadable
-        version — e.g. a delete-only epoch that empties the table. Detect
-        the no-files case and write one schema-carrying empty file so
-        readers and later merges see an empty table, not an error."""
-        for _, _, files in os.walk(target_dir):
-            if any(f.endswith(".parquet") for f in files):
-                return
-        df.limit(0).write.mode("overwrite").parquet(target_dir)
 
     def changes(
         self, from_version: int, to_version: int, keys: list[str] | None = None
@@ -551,18 +464,12 @@ class ParquetTargetTable:
         )
         return old, new
 
-    def compact(self, target_files: int = 1, partition_by: list[str] | None = None) -> int:
+    def compact(self, target_files: int = 1) -> int:
         """Small-file compaction: rewrite the current version into
-        ``target_files`` files (one per partition directory if partitioned)
-        and commit it as a new version. Streaming merges produce one file
-        set per epoch; without periodic compaction a long-lived target's
-        scan cost is dominated by file-open overhead.
-
-        Unpartitioned: ``coalesce`` — a pure narrow rewrite, no shuffle.
-        Partitioned: hash-``repartition`` on the partition columns so each
-        task owns whole partition values and writes one file per value —
-        ``coalesce(1)`` here would funnel the entire table through a
-        single task, which is exactly the 100 TB mistake.
+        ``target_files`` files and commit it as a new version. Streaming
+        merges produce one file set per epoch; without periodic compaction
+        a long-lived target's scan cost is dominated by file-open overhead.
+        ``coalesce`` makes it a pure narrow rewrite, no shuffle.
 
         Always commits with CAS against the version it rewrites: a
         compaction is table-sized, so it is the LONGEST window in which a
@@ -570,12 +477,7 @@ class ParquetTargetTable:
         would silently overwrite it. On ConcurrentWriteError just skip;
         compaction is maintenance and can run again later."""
         base = self.current_version()
-        df = self.read(base)
-        if partition_by:
-            df = df.repartition(*[F.col(c) for c in partition_by])
-        else:
-            df = df.coalesce(target_files)
-        return self.write(df, partition_by=partition_by, expected_base=base)
+        return self.write(self.read(base).coalesce(target_files), expected_base=base)
 
     def swap_from(self, other: "ParquetTargetTable") -> None:
         """D7 release: make this table's current version point at the
@@ -656,10 +558,11 @@ class BucketedTargetTable(ParquetTargetTable):
     - **O(batch) steady-state commits**: Spark encodes the bucket id in
       each file name (``part-*-uuid_00042.c000``), so a merge that touches
       k buckets writes k bucket files and HARD-LINKS every other bucket's
-      files from the previous version (``write_bucket_delta``) — the same
-      file-reuse trick as ``write_partition_delta``, but the resulting
+      files from the previous version (``write_bucket_delta``) — the
+      Delta/Iceberg file-reuse trick reduced to its core; the resulting
       layout still satisfies the catalog bucket spec, because linked files
-      keep their bucket-id names.
+      keep their bucket-id names. Vacuum safety: removing an old version
+      only unlinks names, so linked files live on through newer versions.
 
     The bucket function is Spark's own (``pmod(hash(keys), n)``), so
     ``bucket_of`` computed on a batch agrees exactly with where the writer
@@ -761,10 +664,9 @@ class BucketedTargetTable(ParquetTargetTable):
         """Schema of a version dir — from the persisted ``_schema.json``
         when present, else inferred from the parquet files. The sidecar is
         what keeps a version READABLE when it holds zero parquet files
-        (delete-only epoch that empties the table: empty write tasks emit
-        no files, and a bucketed LOCATION cannot take the base class's
-        plain empty-file fallback — Spark rejects data files whose names
-        carry no bucket id)."""
+        (delete-only epoch that empties the table: a bucketed write's
+        empty tasks emit no files, and no schema-only file can stand in —
+        Spark rejects data files whose names carry no bucket id)."""
         from pyspark.sql import types as T
 
         sfile = os.path.join(vdir, "_schema.json")
@@ -925,7 +827,6 @@ class BucketedTargetTable(ParquetTargetTable):
     def write(
         self,
         df: DataFrame,
-        partition_by: list[str] | None = None,  # ignored: layout is the bucket spec
         metadata: dict | None = None,
         expected_base=_NO_CAS,
     ) -> int:
@@ -1354,12 +1255,9 @@ class BucketedTargetTable(ParquetTargetTable):
         layout (see ``_sidecar_ready``): when the committed sidecar holds
         no parquet, derive the (empty) postings frame with the exact
         schema the tokenizer defines instead of failing schema inference."""
-        tdir = self._text_dir(self._vdir(v))
-        has_parquet = os.path.isdir(tdir) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(tdir) for f in fs
-        )
-        if has_parquet:
-            return self.spark.read.parquet(tdir)
+        postings = self._read_sidecar(self._text_dir(self._vdir(v)))
+        if postings is not None:
+            return postings
         postings, _ = self._text_tables(self.read(v).limit(0))
         return postings
 
@@ -1391,7 +1289,9 @@ class BucketedTargetTable(ParquetTargetTable):
         merged = probe_word_masks(
             self.spark, value, key_type, pp["m_bits"], pp["k"]
         )
-        stats = self.spark.read.parquet(self._bloom_dir(vdir))
+        stats = self._read_sidecar(self._bloom_dir(vdir))
+        if stats is None:
+            return None
         rel = covering_files(stats, merged)
         return [
             os.path.join(vdir, f) for f in rel if os.path.exists(os.path.join(vdir, f))
@@ -1441,7 +1341,7 @@ class BucketedTargetTable(ParquetTargetTable):
             F.col("term").isin(list(query_terms))
         )
         totals = self._totals_from_summary(
-            self.spark.read.parquet(self._text_summary_dir(vdir))
+            self._read_sidecar(self._text_summary_dir(vdir))
         )
         return okapi_score(tf, totals, k1, b, k)
 
@@ -1634,7 +1534,7 @@ class BucketedTargetTable(ParquetTargetTable):
         self.write_bucket_delta(survivors, touched, expected_base=base)
         return n
 
-    def compact(self, target_files: int = 1, partition_by: list[str] | None = None) -> int:
+    def compact(self, target_files: int = 1) -> int:
         """Bucketed rewrite IS compaction: one file per bucket. CAS
         against the version being rewritten (see base class)."""
         base = self.current_version()

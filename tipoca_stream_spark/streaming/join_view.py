@@ -8,21 +8,20 @@ classic incremental view maintenance, specialized to the CDC shape:
     J = A ⋈ B on A.join_key = B.join_key
 
 After the per-table merges land a micro-batch, only join keys touched by
-either delta can change in J. So the refresh is:
+either delta can change in J. The view is a ``BucketedTargetTable``
+bucketed on the join key, so the refresh works on the view buckets those
+keys hash to:
 
-    touched  = keys(ΔA) ∪ keys(ΔB)              -- delta-sized, broadcast
-    J'       = J ▷ touched                       -- broadcast ANTI: keep untouched
-               ∪ (A' ⋉ touched) ⋈ (B' ⋉ touched) -- recompute only touched keys
+    touched  = bucket(keys(ΔA) ∪ keys(ΔB))        -- delta-sized
+    J'       = J outside touched                   -- hard links, never read
+               ∪ σ_touched(A') ⋈ σ_touched(B')     -- rebuild touched buckets
 
-The view table is never shuffled (anti/semi joins are broadcast against
-the tiny touched-key set); the recompute joins two delta-pruned slices.
-The COMPUTE is O(batch) in both modes; the WRITE is O(batch) only with
-``n_buckets`` set — the view is then hive-partitioned on
-pmod(hash(key), n) and each refresh is a partition-delta commit
-(``ParquetTargetTable.write_partition_delta``): touched buckets rebuild,
-untouched buckets carry over as hard links. At 100 TB with a 1 GiB
-batch that's a handful of bucket rewrites versus a full-table rewrite
-per batch.
+The first refresh bootstraps the view with one full ``write`` of the
+join; every later one filters both base tables by the view's bucket
+expression (a scan predicate, no join against the view) and commits the
+rebuilt buckets with ``write_bucket_delta``. At 100 TB with a 1 GiB batch
+that's a handful of bucket rewrites versus a full-table rewrite per
+batch.
 
 Exactly-once: the last refreshed epoch id commits atomically with the
 view's version flip (CdcPipeline's T4 guard, streaming/epoch_guard.py), so
@@ -38,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tipoca_stream_spark.sources.target import ParquetTargetTable
+from tipoca_stream_spark.sources.target import BucketedTargetTable, ParquetTargetTable
 from tipoca_stream_spark.streaming import epoch_guard
 
 
@@ -53,25 +52,21 @@ class MaterializedJoin:
     def __init__(
         self,
         spark: SparkSession,
-        view: ParquetTargetTable,
+        view: BucketedTargetTable,
         left: ParquetTargetTable,
         right: ParquetTargetTable,
         join_key: str,
-        n_buckets: int | None = None,
     ):
+        if view.keys != [join_key]:
+            # the touched buckets are computed from join-key values alone
+            raise ValueError(
+                f"join view must be bucketed on [{join_key!r}], got {view.keys}"
+            )
         self.spark = spark
         self.view = view
         self.left = left
         self.right = right
         self.join_key = join_key
-        # with n_buckets set, the view is hive-partitioned on
-        # pmod(hash(join_key), n) and refresh commits are partition deltas:
-        # untouched buckets carry over as hard links, so the WRITE (not
-        # just the compute) is O(touched buckets) per batch
-        self.n_buckets = n_buckets
-
-    def _bucket(self, col: str):
-        return F.pmod(F.hash(F.col(col)), F.lit(self.n_buckets))
 
     def full_join(self) -> DataFrame:
         """The from-scratch join — used for bootstrap and as the test
@@ -79,8 +74,7 @@ class MaterializedJoin:
         return self.left.read().join(self.right.read(), self.join_key)
 
     def read(self) -> DataFrame:
-        df = self.view.read()
-        return df.drop("_bucket") if self.n_buckets else df
+        return self.view.read()
 
     def refresh(self, delta_keys: DataFrame, epoch_id: int = 0) -> None:
         """Incremental maintenance: ``delta_keys`` is a 1-column DataFrame
@@ -88,39 +82,22 @@ class MaterializedJoin:
         if epoch_guard.committed(self.view, epoch_id):
             return
         meta = epoch_guard.mark(epoch_id)
-        touched = delta_keys.select(
-            F.col(delta_keys.columns[0]).alias(self.join_key)
-        ).distinct()
         base = self.view.current_version()  # CAS base (see rollup.merge_batch)
-        if not self.view.exists():
-            out = self.full_join()
-            if self.n_buckets:
-                out = out.withColumn("_bucket", self._bucket(self.join_key))
-                self.view.write(out, partition_by=["_bucket"], metadata=meta, expected_base=base)
-            else:
-                self.view.write(out, metadata=meta, expected_base=base)
+        if base is None:
+            self.view.write(self.full_join(), metadata=meta, expected_base=base)
             return
-        if self.n_buckets:
-            # rebuild only the touched hash buckets from the base tables
-            # (each side filtered by the same bucket expression — a scan
-            # predicate, no join); everything else hard-links over
-            buckets = [
-                r["b"] for r in touched.select(self._bucket(self.join_key).alias("b")).distinct().collect()
-            ]
-            lf = self.left.read().filter(self._bucket(self.join_key).isin(buckets))
-            rf = self.right.read().filter(self._bucket(self.join_key).isin(buckets))
-            rebuilt = lf.join(rf, self.join_key).withColumn("_bucket", self._bucket(self.join_key))
-            self.view.write_partition_delta(
-                rebuilt, "_bucket", buckets, metadata=meta, expected_base=base
-            )
-            return
-        recomputed = (
-            self.left.read()
-            .join(F.broadcast(touched), self.join_key, "left_semi")
-            .join(
-                self.right.read().join(F.broadcast(touched), self.join_key, "left_semi"),
-                self.join_key,
-            )
+        # hash() depends on the type (an int key and the same value as a
+        # bigint hash differently), so the keys take the view's key type
+        # before they are bucketed
+        key_type = self.view.read(base).schema[self.join_key].dataType
+        keys = delta_keys.select(F.col(delta_keys.columns[0]).cast(key_type).alias(self.join_key))
+        touched = [
+            r["b"] for r in keys.select(self.view.bucket_of().alias("b")).distinct().collect()
+        ]
+        if not touched:
+            return  # no keys: nothing to commit (see epoch_guard)
+        in_touched = self.view.bucket_of().isin(touched)
+        rebuilt = self.left.read().filter(in_touched).join(
+            self.right.read().filter(in_touched), self.join_key
         )
-        untouched = self.view.read().join(F.broadcast(touched), self.join_key, "left_anti")
-        self.view.write(untouched.unionByName(recomputed), metadata=meta, expected_base=base)
+        self.view.write_bucket_delta(rebuilt, touched, metadata=meta, expected_base=base)

@@ -29,6 +29,7 @@ builds the reader when they are).
 from __future__ import annotations
 
 import os
+from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +58,10 @@ from tipoca_stream_spark.sources.target import (
     ParquetTargetTable,
 )
 from tipoca_stream_spark.streaming import epoch_guard
+
+# per-epoch counter records kept in ``CdcPipeline.metrics``: the newest
+# ones only, so a long-running stream holds bounded driver memory
+METRICS_KEPT = 1024
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -147,7 +152,8 @@ class CdcPipeline:
             self.target = ParquetTargetTable(
                 spark, config.target_root, config.table, zone_cols=config.zone_cols
             )
-        self.metrics: list[dict] = []  # A1/A2 counters per epoch
+        # A1/A2 counters per epoch, newest METRICS_KEPT only
+        self.metrics: deque[dict] = deque(maxlen=METRICS_KEPT)
         os.makedirs(config.checkpoint_dir, exist_ok=True)
 
     def transform(self, raw: DataFrame) -> DataFrame:
