@@ -160,22 +160,48 @@ def test_quantize_roundtrip_error_bounded(spark):
     assert err <= 0.5 + 1e-9, err
 
 
-def test_late_batch_links_untouched_buckets(spark, tmp_path):
-    """Steady-state commits are REAL deltas: a late batch rewrites only
-    the target buckets its windows hash to, and every other bucket's
-    files are hard-linked from the previous version (same inode), not
-    rewritten — write cost O(touched buckets)."""
+def test_partitioned_by_day_prunes_layout(spark, tmp_path):
+    """Every version is one flat directory of bucket files (no hive
+    directories), and an equality read on the bucket key schedules only
+    the files of the bucket its value hashes to."""
     target = bucketed(spark, tmp_path)
     r = ContinuousRollup(spark, target)
-    # eight one-minute windows spread the rows over the four buckets
-    r.run_batch(batch_df(spark, [ev(m, 5, "view", m) for m in range(8)]), 0)
-    v1 = target.current_version()
-    late = [ev(0, 59, "click", 3.0)]  # touches ONLY the minute-0 window
-    r.run_batch(batch_df(spark, late), 1)
+    r.run_batch(batch_df(spark, BATCH1), epoch_id=0)
+    r.run_batch(batch_df(spark, BATCH2), epoch_id=1)
+    v = target.current_version()
+    vdir = os.path.join(target.path, f"v={v}")
+    assert not [d for d in os.listdir(vdir) if "=" in d], "expected a flat version"
+    by_bucket = target._bucket_files(v)
+    assert len(by_bucket) > 1, "the windows must spread over several buckets"
+    minute0 = datetime(2026, 1, 1, 12, 0, 0)
+    routed = target.route_read(eq=("bucket_start", minute0))
+    assert routed.route == "bucket"
+    assert 0 < routed.n_files < routed.total_files
+    want = oracle(spark, BATCH1, BATCH2)
+    assert as_set(routed.df) == as_set(want.filter(F.col("bucket_start") == minute0))
+    assert as_set(r.read()) == as_set(want)
+
+
+def test_partition_delta_links_untouched_days(spark, tmp_path):
+    """Steady-state commits are REAL deltas: a late batch touching only
+    day 2 rewrites only the bucket its window hashes to, and the buckets
+    holding day 1's windows are hard-linked from the previous version
+    (same inode), not rewritten — write cost O(touched buckets)."""
+    day1 = [ev(m, 5, "view", m) for m in range(8)]  # eight windows on 2026-01-01
+    day2 = [(datetime(2026, 1, 2, 9, 0, 0), "view", 2.0)]
+    day2_late = [(datetime(2026, 1, 2, 9, 0, 30), "click", 3.0)]
+    target = bucketed(spark, tmp_path)
+    r = ContinuousRollup(spark, target)
+    r.run_batch(batch_df(spark, day1), 0)
+    r.run_batch(batch_df(spark, day2), 1)
     v2 = target.current_version()
+    r.run_batch(batch_df(spark, day2_late), 2)  # touches ONLY day 2's window
+    v3 = target.current_version()
     touched = {
         row["b"]
-        for row in r.partials(batch_df(spark, late)).select(target.bucket_of().alias("b")).collect()
+        for row in r.partials(batch_df(spark, day2_late))
+        .select(target.bucket_of().alias("b"))
+        .collect()
     }
 
     def inodes(v):
@@ -183,23 +209,19 @@ def test_late_batch_links_untouched_buckets(spark, tmp_path):
             b: {os.stat(f).st_ino for f in files} for b, files in target._bucket_files(v).items()
         }
 
-    i1, i2 = inodes(v1), inodes(v2)
-    assert touched and set(i1) - touched, "the late batch must leave a bucket untouched"
-    for b in i1:
+    i2, i3 = inodes(v2), inodes(v3)
+    assert len(touched) == 1 and set(i2) - touched, "the late batch must leave a bucket untouched"
+    for b in i2:
         if b in touched:
-            assert not i1[b] & i2[b], f"touched bucket {b} was not rewritten"
+            assert not i2[b] & i3[b], f"touched bucket {b} was not rewritten"
         else:
-            assert i1[b] == i2[b], f"untouched bucket {b} was rewritten"
-    assert as_set(r.read()) == as_set(
-        oracle(spark, [ev(m, 5, "view", m) for m in range(8)], late)
-    )
+            assert i2[b] == i3[b], f"untouched bucket {b} was rewritten"
+    assert as_set(r.read()) == as_set(oracle(spark, day1, day2, day2_late))
 
 
 def test_partition_delta_survives_vacuum(spark, tmp_path):
     """Removing old versions only unlinks names — the linked files live on
     through the newer version's directory entries."""
-    from datetime import datetime
-
     d1 = [ev(0, 5, "view", 1.0)]
     d2 = [(datetime(2026, 1, 2, 9, 0, 0), "view", 2.0)]
     target = bucketed(spark, tmp_path)
