@@ -438,70 +438,6 @@ def main() -> None:
     stream_row("streaming", 20000, 8)  # legacy keys keep their r9 names
     stream_row("streaming_envelope", 45000, 4)  # ≥0.8 MiB per micro-batch
 
-    # aggregate JPEG decode throughput THROUGH the Spark surface (round
-    # 10b): the board fixture replicated across rows, pixel-decoded in
-    # Arrow-batched mapInPandas on every core — connects BENCH_JPEG's
-    # single-core MB/s to the engine's deployment shape (decode is the
-    # one stage a 100 TB media corpus feels; VERDICT r9 wrong #1)
-    try:
-        import pandas as _pd
-        from pyspark.sql import types as _T
-
-        fix = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "tests", "fixtures", "baseline_board.jpg",
-        )
-        with open(fix, "rb") as fh:
-            jpeg_payload = fh.read()
-        # 4096 images (~410 MB decoded/rep): at 1024 the ~0.8 s per-job
-        # fixed cost ate half the measurement (98 vs a multiprocessing
-        # ceiling of 228 MB/s on this host); 4096 amortizes it to <15%
-        n_img = 4096
-        n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        # repartition the bare ids (tiny shuffle), THEN attach the payload
-        # literal — repartitioning after the attach would move the full
-        # n_img x 100 KB corpus through the exchange
-        img_df = (
-            spark.range(n_img)
-            .repartition(n_cpus)
-            .select(F.col("id"), F.lit(jpeg_payload).alias("payload"))
-        )
-        dec_schema = _T.StructType(
-            [
-                _T.StructField("id", _T.LongType()),
-                _T.StructField("px_sum", _T.LongType()),
-            ]
-        )
-
-        def _decode_batches(batches):
-            # round 11: whole-Arrow-batch C decode — two ctypes crossings
-            # per batch instead of per-image Python staging
-            from tipoca_stream_spark.operators.imagecodec import (
-                decode_jpeg_batch,
-            )
-
-            for pdf in batches:
-                imgs = decode_jpeg_batch([bytes(p) for p in pdf["payload"]])
-                rows = [
-                    (int(i), int(img.sum()))
-                    for i, img in zip(pdf["id"], imgs)
-                ]
-                yield _pd.DataFrame(rows, columns=["id", "px_sum"])
-
-        def run_decode():
-            img_df.mapInPandas(_decode_batches, dec_schema).agg(
-                F.sum("px_sum")
-            ).collect()
-
-        run_decode()  # warm: compiles/loads the .so once per worker
-        t_dec = max(best_of(2, run_decode), 1e-9)
-        extras["image_decode_mb_per_s"] = round(
-            n_img * len(jpeg_payload) / 1e6 / t_dec, 1
-        )
-        extras["image_decode_images_per_s"] = round(n_img / t_dec, 1)
-    except Exception as e:  # a broken stage must be visible, not absent
-        extras["image_decode_error"] = f"{type(e).__name__}: {e}"[:300]
-
     # the multimodal fingerprint/near-dup family (r10b queries 216-222):
     # codec round-trips + banding through the registered query surface
     for q in ("multimodal_phash", "multimodal_audio_near_dup",

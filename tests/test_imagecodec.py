@@ -1,46 +1,23 @@
-"""Round-trip tests for the pure-Python JPEG/GIF decoders.
+"""Round-trip tests for the lossless JPEG (SOF3) and GIF decoders.
 
-The encoders in this file are TEST ORACLES only: a minimal baseline JPEG
-encoder (FDCT + quantize + canonical-Huffman entropy code, T.81 Annex F)
-and a real GIF LZW encoder (variable code width, table overflow, optional
-mid-stream clears). Because JPEG is lossy, the JPEG tests compare the
-decoder's output against pixels reconstructed independently from the
-*quantized coefficients* (the information that actually survives
-encoding), making the expected value exact up to float rounding (tolerance
-1). GIF is lossless, so GIF round-trips assert exact equality.
+The encoders in this file are TEST ORACLES only: an independent lossless
+JPEG encoder (T.81 Annex H: every predictor, 2-16-bit precision, point
+transform, line-aligned restarts, per-component Huffman tables) and a real
+GIF LZW encoder (variable code width, table overflow, optional mid-stream
+clears). Both formats are lossless, so every round trip asserts exact
+equality. Every other JPEG process must be refused with
+NotImplementedError.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pytest
 
-from tipoca_stream_spark.operators.imagecodec import (
-    _ZIGZAG,
-    decode_gif,
-    decode_jpeg,
-)
+from tipoca_stream_spark.operators.imagecodec import decode_gif, decode_jpeg
 
 
 # ---------------------------------------------------------------- JPEG ---
-
-def _basis():
-    x = np.arange(8)
-    u = np.arange(8)
-    a = 0.5 * np.cos((2 * x[None, :] + 1) * u[:, None] * np.pi / 16)
-    a[0] /= np.sqrt(2.0)
-    return a
-
-
-_A = _basis()
-
-# Arbitrary-but-valid quant tables (values 1..255); flat-ish luma, coarser
-# chroma, deterministic.
-_QT_LUMA = np.array([[6 + ((i + j) % 5) * 2 for j in range(8)] for i in range(8)])
-_QT_CHROMA = np.array([[10 + ((i * 3 + j) % 7) * 3 for j in range(8)] for i in range(8)])
-
 
 class _BitWriter:
     def __init__(self):
@@ -64,10 +41,6 @@ class _BitWriter:
             self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)  # pad 1s
 
 
-def _category(v: int) -> int:
-    return 0 if v == 0 else int(v).bit_length() if v > 0 else int(-v).bit_length()
-
-
 def _magnitude_bits(v: int, s: int) -> int:
     return v if v >= 0 else v + (1 << s) - 1
 
@@ -82,336 +55,9 @@ def _fixed_table(symbols):
     return counts, syms, codes
 
 
-def _zigzag_scan(block):
-    flat = block.reshape(64)
-    return [int(flat[_ZIGZAG[i]]) for i in range(64)]
-
-
-def _block_symbols(qblocks_per_comp, comp_classes):
-    """First pass: collect DC categories / AC run-size symbols per table."""
-    dc_syms = {0: [], 1: []}
-    ac_syms = {0: [], 1: []}
-    for ci, qblocks in enumerate(qblocks_per_comp):
-        tclass = comp_classes[ci]
-        pred = 0
-        for blk in qblocks:
-            zz = _zigzag_scan(blk)
-            diff = zz[0] - pred
-            pred = zz[0]
-            dc_syms[tclass].append(_category(diff))
-            run = 0
-            for k in range(1, 64):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    ac_syms[tclass].append(0xF0)
-                    run -= 16
-                ac_syms[tclass].append((run << 4) | _category(zz[k]))
-                run = 0
-            if run:
-                ac_syms[tclass].append(0x00)
-    return dc_syms, ac_syms
-
-
-def _quantize_and_expect(px, chroma_sub=(1, 1)):
-    """Shared front half of the JPEG encoders: color transform,
-    subsample, MCU padding, quantization — plus the reconstruction a
-    correct decoder must produce from those quantized coefficients.
-
-    Returns (qblocks_per_comp [MCU order], quants, samp, comp_classes,
-    (hmax, vmax, mcus_x, mcus_y), gray, expected)."""
-    px = np.asarray(px, dtype=np.float64)
-    gray = px.ndim == 2
-    h, w = px.shape[:2]
-    if gray:
-        planes = [px - 128.0]
-        quants = [_QT_LUMA]
-        samp = [(1, 1)]
-        comp_classes = [0]
-    else:
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        sx, sy = chroma_sub
-        # chroma planes: box-mean downsample by (sy, sx)
-        def down(p):
-            hh = -(-h // sy) * sy
-            ww = -(-w // sx) * sx
-            padded = np.pad(p, ((0, hh - h), (0, ww - w)), mode="edge")
-            return padded.reshape(hh // sy, sy, ww // sx, sx).mean(axis=(1, 3))
-
-        planes = [y - 128.0, down(cb) - 128.0, down(cr) - 128.0]
-        quants = [_QT_LUMA, _QT_CHROMA, _QT_CHROMA]
-        samp = [(sx, sy), (1, 1), (1, 1)]
-        comp_classes = [0, 1, 1]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-
-    # pad planes to the MCU grid (edge replication) and quantize blocks
-    qblocks_per_comp = []
-    for ci, plane in enumerate(planes):
-        hi, vi = samp[ci]
-        pw, ph = mcus_x * hi * 8, mcus_y * vi * 8
-        padded = np.pad(
-            plane,
-            ((0, ph - plane.shape[0]), (0, pw - plane.shape[1])),
-            mode="edge",
-        )
-        qblocks = []
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for by in range(vi):
-                    for bx in range(hi):
-                        y0, x0 = (my * vi + by) * 8, (mx * hi + bx) * 8
-                        f = padded[y0 : y0 + 8, x0 : x0 + 8]
-                        coeffs = _A @ f @ _A.T
-                        qblocks.append(
-                            np.rint(coeffs / quants[ci]).astype(np.int64)
-                        )
-        qblocks_per_comp.append(qblocks)
-
-    # --- expected reconstruction from quantized coefficients ---
-    rec_planes = []
-    for ci, qblocks in enumerate(qblocks_per_comp):
-        hi, vi = samp[ci]
-        pw, ph = mcus_x * hi * 8, mcus_y * vi * 8
-        plane = np.zeros((ph, pw))
-        i = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for by in range(vi):
-                    for bx in range(hi):
-                        deq = qblocks[i] * quants[ci]
-                        f = _A.T @ deq @ _A + 128.0
-                        y0, x0 = (my * vi + by) * 8, (mx * hi + bx) * 8
-                        plane[y0 : y0 + 8, x0 : x0 + 8] = f
-                        i += 1
-        plane = np.clip(np.rint(plane), 0, 255)
-        plane = np.repeat(plane, vmax // vi, axis=0)
-        plane = np.repeat(plane, hmax // hi, axis=1)
-        rec_planes.append(plane[:h, :w])
-    if gray:
-        expected = rec_planes[0][:, :, None].astype(np.uint8)
-    else:
-        yy = rec_planes[0]
-        cbb = rec_planes[1] - 128.0
-        crr = rec_planes[2] - 128.0
-        rr = yy + 1.402 * crr
-        gg = yy - 0.344136 * cbb - 0.714136 * crr
-        bb = yy + 1.772 * cbb
-        expected = np.clip(
-            np.rint(np.stack([rr, gg, bb], axis=-1)), 0, 255
-        ).astype(np.uint8)
-    return (
-        qblocks_per_comp,
-        quants,
-        samp,
-        comp_classes,
-        (hmax, vmax, mcus_x, mcus_y),
-        gray,
-        expected,
-    )
-
-
-def jpeg_encode(px, chroma_sub=(1, 1), restart_interval=0):
-    """Encode (h, w, 3) RGB or (h, w) grayscale as baseline JPEG.
-
-    Returns (jpeg_bytes, expected_pixels) where expected_pixels is the
-    reconstruction from the quantized coefficients (what a correct decoder
-    must produce, up to float rounding).
-    """
-    px = np.asarray(px, dtype=np.float64)
-    h, w = px.shape[:2]
-    (
-        qblocks_per_comp,
-        quants,
-        samp,
-        comp_classes,
-        (hmax, vmax, mcus_x, mcus_y),
-        gray,
-        expected,
-    ) = _quantize_and_expect(px, chroma_sub)
-
-    # --- entropy coding ---
-    dc_syms, ac_syms = _block_symbols(qblocks_per_comp, comp_classes)
-    tables = {}  # (class, id) -> (counts, syms, codes)
-    for tid in set(comp_classes):
-        tables[(0, tid)] = _fixed_table(dc_syms[tid] or [0])
-        tables[(1, tid)] = _fixed_table(ac_syms[tid] or [0])
-
-    out = bytearray(b"\xff\xd8")
-
-    def segment(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend((len(body) + 2).to_bytes(2, "big"))
-        out.extend(body)
-
-    for tid, qtab in {0: _QT_LUMA, **({} if gray else {1: _QT_CHROMA})}.items():
-        flat = qtab.reshape(64)
-        zz = bytes(int(flat[_ZIGZAG[i]]) for i in range(64))
-        segment(0xDB, bytes([tid]) + zz)
-    ncomp = 1 if gray else 3
-    sof = bytearray([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
-    for ci in range(ncomp):
-        hi, vi = samp[ci]
-        sof += bytes([ci + 1, (hi << 4) | vi, 0 if comp_classes[ci] == 0 else 1])
-    segment(0xC0, bytes(sof))
-    for (tclass, tid), (counts, syms, _) in sorted(tables.items()):
-        segment(0xC4, bytes([(tclass << 4) | tid] + counts + syms))
-    if restart_interval:
-        segment(0xDD, restart_interval.to_bytes(2, "big"))
-    sos = bytearray([ncomp])
-    for ci in range(ncomp):
-        tid = 0 if comp_classes[ci] == 0 else 1
-        sos += bytes([ci + 1, (tid << 4) | tid])
-    sos += bytes([0, 63, 0])
-    segment(0xDA, bytes(sos))
-
-    writer = _BitWriter()
-    preds = [0] * ncomp
-    blk_idx = [0] * ncomp
-    rst = 0
-    for mcu in range(mcus_x * mcus_y):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            writer.flush()
-            out.extend(writer.out)
-            out.extend(bytes([0xFF, 0xD0 + (rst % 8)]))
-            rst += 1
-            writer = _BitWriter()
-            preds = [0] * ncomp
-        for ci in range(ncomp):
-            hi, vi = samp[ci]
-            tid = 0 if comp_classes[ci] == 0 else 1
-            _, _, dc_codes = tables[(0, tid)]
-            _, _, ac_codes = tables[(1, tid)]
-            for _ in range(hi * vi):
-                zz = _zigzag_scan(qblocks_per_comp[ci][blk_idx[ci]])
-                blk_idx[ci] += 1
-                diff = zz[0] - preds[ci]
-                preds[ci] = zz[0]
-                s = _category(diff)
-                length, code = dc_codes[s]
-                writer.write(code, length)
-                if s:
-                    writer.write(_magnitude_bits(diff, s), s)
-                run = 0
-                for k in range(1, 64):
-                    if zz[k] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        length, code = ac_codes[0xF0]
-                        writer.write(code, length)
-                        run -= 16
-                    s = _category(zz[k])
-                    length, code = ac_codes[(run << 4) | s]
-                    writer.write(code, length)
-                    writer.write(_magnitude_bits(zz[k], s), s)
-                    run = 0
-                if run:
-                    length, code = ac_codes[0x00]
-                    writer.write(code, length)
-    writer.flush()
-    out.extend(writer.out)
-    out.extend(b"\xff\xd9")
-    return bytes(out), expected
-
-
-def _gradient_rgb(h, w, seed=0):
-    rng = np.random.default_rng(seed)
-    base = (
-        np.arange(h)[:, None, None] * 5
-        + np.arange(w)[None, :, None] * 3
-        + np.arange(3)[None, None, :] * 40
-    )
-    noise = rng.integers(0, 24, size=(h, w, 3))
-    return ((base + noise) % 256).astype(np.uint8)
-
-
-def test_jpeg_grayscale_roundtrip_exact_vs_coefficients():
-    px = (np.add.outer(np.arange(16) * 7, np.arange(24) * 3) % 256).astype(
-        np.uint8
-    )
-    payload, expected = jpeg_encode(px)
-    out = decode_jpeg(payload)
-    assert out.shape == (16, 24, 1)
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
-
-
-def test_jpeg_color_444_roundtrip():
-    px = _gradient_rgb(24, 17, seed=1)  # non-multiple-of-8 width → crop path
-    payload, expected = jpeg_encode(px, chroma_sub=(1, 1))
-    out = decode_jpeg(payload)
-    assert out.shape == (24, 17, 3)
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
-
-
-def test_jpeg_color_420_subsampled_roundtrip():
-    px = _gradient_rgb(33, 46, seed=2)  # odd dims: padded MCU grid + crop
-    payload, expected = jpeg_encode(px, chroma_sub=(2, 2))
-    out = decode_jpeg(payload)
-    assert out.shape == (33, 46, 3)
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
-
-
-def test_jpeg_restart_markers():
-    px = _gradient_rgb(32, 64, seed=3)
-    payload, expected = jpeg_encode(px, chroma_sub=(2, 2), restart_interval=2)
-    assert any(
-        payload[i] == 0xFF and 0xD0 <= payload[i + 1] <= 0xD7
-        for i in range(len(payload) - 1)
-    )
-    out = decode_jpeg(payload)
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
-
-
-def test_jpeg_flat_color_decodes_to_flat():
-    px = np.full((16, 16, 3), 200, dtype=np.uint8)
-    payload, expected = jpeg_encode(px)
-    out = decode_jpeg(payload)
-    # flat image → DC-only blocks; every pixel identical
-    assert len(np.unique(out.reshape(-1, 3), axis=0)) == 1
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
-
-
 def test_jpeg_not_a_jpeg_returns_none():
     assert decode_jpeg(b"") is None
     assert decode_jpeg(b"\x89PNG\r\n\x1a\n") is None
-
-
-def test_jpeg_unsupported_process_gated_truncated_raises():
-    px = (np.zeros((8, 8)) + 100).astype(np.uint8)
-    payload, _ = jpeg_encode(px)
-    # flip SOF0 -> arithmetic lossless (0xCB): honest gate — only the
-    # arithmetic-lossless and differential/hierarchical processes remain
-    # unimplemented (Huffman progressive decodes fully as of round 6;
-    # lossless, 12-bit, and arithmetic DCT as of round 8)
-    arith = bytearray(payload)
-    i = arith.index(b"\xff\xc0")
-    arith[i + 1] = 0xCB
-    with pytest.raises(NotImplementedError):
-        decode_jpeg(bytes(arith))
-    # truncated stream: SOI+half the segments
-    with pytest.raises(ValueError):
-        decode_jpeg(payload[: len(payload) // 3])
-
-
-def test_jpeg_decode_via_decode_image():
-    from tipoca_stream_spark.operators.multimodal import (
-        decode_image,
-        decode_image_header,
-    )
-
-    px = _gradient_rgb(16, 16, seed=4)
-    payload, expected = jpeg_encode(px)
-    assert decode_image_header(payload) == ("jpeg", 16, 16)
-    out = decode_image(payload)
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
 
 
 # ----------------------------------------------------------------- GIF ---
@@ -611,399 +257,10 @@ def test_gif_decode_via_decode_image():
     assert np.array_equal(decode_image(payload), pal[idx])
 
 
-# ----------------------------------------------------- progressive JPEG ---
-
-
-def jpeg_encode_progressive(px, chroma_sub=(1, 1), dc_al=1, band_split=6, ac_al=1):
-    """Encode as progressive JPEG (SOF2) exercising the full Annex G
-    feature set: an interleaved DC first scan at point transform
-    ``dc_al``, DC refinement scans down to Al=0 (raw bits), per-component
-    AC spectral-selection first scans ([1, band_split-1] and
-    [band_split, 63]) at point transform ``ac_al``, and AC refinement
-    scans down to Al=0 (newly-significant coefficients, buffered
-    correction bits, EOB runs — the libjpeg emission order, which is what
-    every decoder interoperates with). Same quantized coefficients as the
-    baseline encoder, so ``expected`` is identical: a correct progressive
-    decoder must reproduce the baseline reconstruction exactly.
-
-    Returns (jpeg_bytes, expected_pixels)."""
-    px = np.asarray(px, dtype=np.float64)
-    h, w = px.shape[:2]
-    (
-        qblocks,
-        quants,
-        samp,
-        comp_classes,
-        (hmax, vmax, mcus_x, mcus_y),
-        gray,
-        expected,
-    ) = _quantize_and_expect(px, chroma_sub)
-    ncomp = 1 if gray else 3
-
-    # MCU-ordered block lists -> per-component (gb_h, gb_w) grids
-    grids = []
-    for ci in range(ncomp):
-        hi, vi = samp[ci]
-        grid = [[None] * (mcus_x * hi) for _ in range(mcus_y * vi)]
-        i = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        grid[my * vi + byi][mx * hi + bxi] = qblocks[ci][i]
-                        i += 1
-        grids.append(grid)
-    # non-interleaved scan dims (T.81 A.2.2): whole blocks of the
-    # component's own sampled size
-    nonint = []
-    for ci in range(ncomp):
-        hi, vi = samp[ci]
-        comp_h = -(-h * vi // vmax)
-        comp_w = -(-w * hi // hmax)
-        nonint.append((-(-comp_h // 8), -(-comp_w // 8)))
-
-    def band_coefs(ci, by, bx, ss, se):
-        blk = grids[ci][by][bx].reshape(64)
-        return [int(blk[_ZIGZAG[k]]) for k in range(ss, se + 1)]
-
-    # --- per-scan event generation: ("sym", tkey, s) | ("bits", v, n) ---
-
-    def ev_dc_first(al):
-        events, pred = [], [0] * ncomp
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in range(ncomp):
-                    hi, vi = samp[ci]
-                    tk = ("dc", comp_classes[ci])
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            v = int(grids[ci][my * vi + byi][mx * hi + bxi].reshape(64)[0]) >> al
-                            diff = v - pred[ci]
-                            pred[ci] = v
-                            s = _category(diff)
-                            events.append(("sym", tk, s))
-                            if s:
-                                events.append(("bits", _magnitude_bits(diff, s), s))
-        return events
-
-    def ev_dc_refine(al):
-        events = []
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in range(ncomp):
-                    hi, vi = samp[ci]
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            v = int(grids[ci][my * vi + byi][mx * hi + bxi].reshape(64)[0])
-                            events.append(("bits", (v >> al) & 1, 1))
-        return events
-
-    def ev_ac_first(ci, ss, se, al):
-        events = []
-        tk = ("ac", comp_classes[ci])
-        state = {"eob": 0}
-
-        def flush_eob():
-            if state["eob"]:
-                nb = state["eob"].bit_length() - 1
-                events.append(("sym", tk, nb << 4))
-                if nb:
-                    events.append(("bits", state["eob"] - (1 << nb), nb))
-                state["eob"] = 0
-
-        nb_h, nb_w = nonint[ci]
-        for by in range(nb_h):
-            for bx in range(nb_w):
-                coefs = band_coefs(ci, by, bx, ss, se)
-                vals = [
-                    (abs(c) >> al) * (1 if c >= 0 else -1) for c in coefs
-                ]
-                if not any(vals):
-                    state["eob"] += 1
-                    if state["eob"] == 0x7FFF:
-                        flush_eob()
-                    continue
-                flush_eob()
-                r = 0
-                for v in vals:
-                    if v == 0:
-                        r += 1
-                        continue
-                    while r > 15:
-                        events.append(("sym", tk, 0xF0))
-                        r -= 16
-                    s = _category(v)
-                    events.append(("sym", tk, (r << 4) | s))
-                    events.append(("bits", _magnitude_bits(v, s), s))
-                    r = 0
-                if r:
-                    state["eob"] += 1
-                    if state["eob"] == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        return events
-
-    def ev_ac_refine(ci, ss, se, al):
-        events = []
-        tk = ("ac", comp_classes[ci])
-        state = {"eob": 0, "bbuf": []}
-
-        def flush_eob():
-            if state["eob"]:
-                nb = state["eob"].bit_length() - 1
-                events.append(("sym", tk, nb << 4))
-                if nb:
-                    events.append(("bits", state["eob"] - (1 << nb), nb))
-                for b in state["bbuf"]:
-                    events.append(("bits", b, 1))
-                state["eob"] = 0
-                state["bbuf"] = []
-
-        nb_h, nb_w = nonint[ci]
-        for by in range(nb_h):
-            for bx in range(nb_w):
-                coefs = band_coefs(ci, by, bx, ss, se)
-                absv = [abs(c) >> al for c in coefs]
-                eobpos = -1
-                for i, a in enumerate(absv):
-                    if a == 1:
-                        eobpos = i
-                r, br = 0, []
-                for i, a in enumerate(absv):
-                    if a == 0:
-                        r += 1
-                        continue
-                    while r > 15 and i <= eobpos:
-                        flush_eob()
-                        events.append(("sym", tk, 0xF0))
-                        for b in br:
-                            events.append(("bits", b, 1))
-                        br = []
-                        r -= 16
-                    if a > 1:
-                        br.append(a & 1)  # correction bit for an old coef
-                        continue
-                    flush_eob()
-                    events.append(("sym", tk, (r << 4) | 1))
-                    events.append(("bits", 1 if coefs[i] >= 0 else 0, 1))
-                    for b in br:
-                        events.append(("bits", b, 1))
-                    br = []
-                    r = 0
-                if r > 0 or br:
-                    state["eob"] += 1
-                    state["bbuf"].extend(br)
-                    if state["eob"] == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        return events
-
-    # --- scan plan ---
-    scans = []  # (events, sos_components [(comp, dc_id, ac_id)], ss, se, ah, al)
-    all_comps = list(range(ncomp))
-    scans.append((ev_dc_first(dc_al), all_comps, 0, 0, 0, dc_al))
-    for al in range(dc_al - 1, -1, -1):
-        scans.append((ev_dc_refine(al), all_comps, 0, 0, al + 1, al))
-    for ci in range(ncomp):
-        scans.append((ev_ac_first(ci, 1, band_split - 1, ac_al), [ci], 1, band_split - 1, 0, ac_al))
-        scans.append((ev_ac_first(ci, band_split, 63, ac_al), [ci], band_split, 63, 0, ac_al))
-    for al in range(ac_al - 1, -1, -1):
-        for ci in range(ncomp):
-            scans.append((ev_ac_refine(ci, 1, 63, al), [ci], 1, 63, al + 1, al))
-
-    # --- assembly ---
-    out = bytearray(b"\xff\xd8")
-
-    def segment(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend((len(body) + 2).to_bytes(2, "big"))
-        out.extend(body)
-
-    for tid, qtab in {0: _QT_LUMA, **({} if gray else {1: _QT_CHROMA})}.items():
-        flat = qtab.reshape(64)
-        segment(0xDB, bytes([tid]) + bytes(int(flat[_ZIGZAG[i]]) for i in range(64)))
-    sof = bytearray([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
-    for ci in range(ncomp):
-        hi, vi = samp[ci]
-        sof += bytes([ci + 1, (hi << 4) | vi, comp_classes[ci]])
-    segment(0xC2, bytes(sof))
-
-    for events, comps_in_scan, ss, se, ah, al in scans:
-        # per-scan tables from this scan's own symbols (DHT redefinition)
-        syms_by_key: dict = {}
-        for ev in events:
-            if ev[0] == "sym":
-                syms_by_key.setdefault(ev[1], []).append(ev[2])
-        tables = {}
-        for (kind, cls), syms in syms_by_key.items():
-            tables[(kind, cls)] = _fixed_table(syms)
-            tclass = 0 if kind == "dc" else 1
-            counts, symbols, _ = tables[(kind, cls)]
-            segment(0xC4, bytes([(tclass << 4) | cls] + counts + symbols))
-        sos = bytearray([len(comps_in_scan)])
-        for ci in comps_in_scan:
-            cls = comp_classes[ci]
-            sos += bytes([ci + 1, (cls << 4) | cls])
-        sos += bytes([ss, se, (ah << 4) | al])
-        segment(0xDA, bytes(sos))
-        writer = _BitWriter()
-        for ev in events:
-            if ev[0] == "sym":
-                _, _, codes = tables[ev[1]]
-                length, code = codes[ev[2]]
-                writer.write(code, length)
-            else:
-                writer.write(ev[1], ev[2])
-        writer.flush()
-        out.extend(writer.out)
-    out.extend(b"\xff\xd9")
-    return bytes(out), expected
-
-
-def test_jpeg_progressive_grayscale_full_feature_roundtrip():
-    rng = np.random.default_rng(3)
-    px = np.clip(
-        np.arange(20)[:, None] * 6 + np.arange(17)[None, :] * 4
-        + rng.integers(0, 60, size=(20, 17)),
-        0, 255,
-    ).astype(np.uint8)
-    payload, expected = jpeg_encode_progressive(px)
-    got = decode_jpeg(payload)
-    assert got.shape == (20, 17, 1)
-    assert np.array_equal(got[:, :, 0], expected[:, :, 0])
-    # and it really is progressive + matches the baseline reconstruction
-    assert b"\xff\xc2" in payload and b"\xff\xc0" not in payload
-    base_payload, base_expected = jpeg_encode(px)
-    assert np.array_equal(expected, base_expected)
-    assert np.array_equal(got, decode_jpeg(base_payload))
-
-
-def test_jpeg_progressive_color_420_roundtrip():
-    px = _gradient_rgb(23, 21, seed=5)
-    payload, expected = jpeg_encode_progressive(px, chroma_sub=(2, 2))
-    got = decode_jpeg(payload)
-    assert got.shape == expected.shape
-    assert np.array_equal(got, expected)
-
-
-def test_jpeg_progressive_spectral_selection_only():
-    # Al=0 everywhere: pure spectral selection, no successive approximation
-    px = _gradient_rgb(16, 16, seed=9)
-    payload, expected = jpeg_encode_progressive(px, dc_al=0, ac_al=0, band_split=10)
-    assert np.array_equal(decode_jpeg(payload), expected)
-
-
-def test_jpeg_progressive_deeper_approximation():
-    # two AC refinement passes (ac_al=2) and two DC refinements (dc_al=2)
-    px = _gradient_rgb(19, 13, seed=11)
-    payload, expected = jpeg_encode_progressive(px, dc_al=2, ac_al=2)
-    assert np.array_equal(decode_jpeg(payload), expected)
-
-
-def test_jpeg_progressive_eob_runs_across_blocks():
-    # a mostly-flat image: AC bands are zero almost everywhere, so the
-    # encoder emits multi-block EOB runs and the decoder must walk them
-    px = np.full((40, 40), 128, dtype=np.uint8)
-    px[3, 3] = 140  # one block with AC energy
-    payload, expected = jpeg_encode_progressive(px)
-    assert np.array_equal(decode_jpeg(payload)[:, :, 0], expected[:, :, 0])
-
-
-# --- independently-encoded fixtures (ADVICE r6) -----------------------------
-# Every progressive test above verifies the decoder against the repo's own
-# test-side encoder — a shared misreading of T.81 Annex G would pass them
-# all. These two byte fixtures were produced by a STANDARD encoder (libjpeg
-# scan script; photos from the Rust embedded-book docs shipped with the
-# toolchain on this host, MIT/Apache-licensed), so the decoder must handle a
-# real-world marker layout it never negotiated with. The progressive one
-# exercises the full Annex-G surface the hand-written encoder only samples:
-#   SOF2, 3 components, 2x1 chroma subsampling,
-#   interleaved DC-first with point transform (Ss=0 Se=0 Ah=0 Al=1),
-#   luma spectral-selection bands (1-5, then 6-63),
-#   AC successive approximation Al=2 -> refinement Ah=2 Al=1 -> Ah=1 Al=0,
-#   DC refinement scan (Ss=0 Ah=1 Al=0), per-component chroma scans.
-# The pinned sha256 is this decoder's verified output: the decoded pixels
-# were rendered and visually confirmed against the published photo (sharp
-# silkscreen text, correct colors) when the fixture was checked in, so the
-# hash pins real-world correctness, not just stability.
-#
-# Round-9 regeneration (baseline digest only): switching the shared IDCT
-# to the separable two-pass contraction (_idct_blocks) moved ±1 LSB on
-# 24 of 1,030,320 baseline pixels — values sitting exactly on a rounding
-# boundary, i.e. T.81 decoder-accuracy territory, not a defect; the
-# progressive fixture decoded bit-identically. Verified at regeneration:
-# the 24 diffs are all |Δ|=1 against the previous output, and the
-# pure-Python and native entropy paths still agree bit-for-bit.
-
-_FIXDIR = os.path.join(os.path.dirname(__file__), "fixtures")
-
-
-def _fixture_pixels(name):
-    import hashlib
-
-    with open(os.path.join(_FIXDIR, name), "rb") as f:
-        px = decode_jpeg(f.read())
-    return px, hashlib.sha256(np.asarray(px).tobytes()).hexdigest()
-
-
-def test_jpeg_progressive_independent_fixture():
-    px, digest = _fixture_pixels("progressive_board.jpg")
-    assert px.shape == (477, 720, 3)
-    assert digest == "5158c38d6e8df942c7c3188daf3bddb7c2116bd330a5b6f07a3031ff650f0d94"
-
-
-def test_jpeg_baseline_independent_fixture():
-    px, digest = _fixture_pixels("baseline_board.jpg")
-    assert px.shape == (477, 720, 3)
-    assert digest == "81aab5adf7a56ef28ad1eac8f07a5430f3fca3a72d52ccbf33f28c8f89d231c6"
-
-
-def test_independent_fixture_is_really_progressive():
-    """Guard the guard: the fixture must keep its SOF2 marker and a
-    multi-scan successive-approximation scan script — a re-save with a
-    baseline encoder would silently drop the coverage this test exists
-    to provide."""
-    import struct
-
-    with open(os.path.join(_FIXDIR, "progressive_board.jpg"), "rb") as f:
-        data = f.read()
-    scans, has_sof2, i = [], False, 2
-    while i < len(data) - 1:
-        if data[i] == 0xFF and data[i + 1] not in (0, 0xFF):
-            m = data[i + 1]
-            if m in (0xD8, 0xD9) or 0xD0 <= m <= 0xD7:
-                i += 2
-                continue
-            ln = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            body = data[i + 4 : i + 2 + ln]
-            if m == 0xC2:
-                has_sof2 = True
-            if m == 0xDA:
-                ns = body[0]
-                ss, se, ah_al = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-                scans.append((ss, se, ah_al >> 4, ah_al & 15))
-                j = i + 2 + ln
-                while j < len(data) - 1:
-                    if data[j] == 0xFF and data[j + 1] not in (0,) and not (
-                        0xD0 <= data[j + 1] <= 0xD7
-                    ):
-                        break
-                    j += 1
-                i = j
-                continue
-            i += 2 + ln
-        else:
-            i += 1
-    assert has_sof2
-    assert len(scans) >= 6  # real multi-scan script
-    assert any(ah > 0 for _, _, ah, _ in scans)  # refinement passes present
-    assert any(ss > 0 and se < 63 for ss, se, _, _ in scans)  # spectral bands
-
-
 # --------------------------------------------- lossless JPEG (SOF3) ---
-# Independent second encoder (the progressive-fixture discipline): this
-# implementation of T.81 Annex H was written against the spec separately
-# from both operators.imagecodec._decode_jpeg_lossless AND the package's
+# Independent second encoder: this implementation of T.81 Annex H was
+# written against the spec separately from both
+# operators.imagecodec.decode_jpeg AND the package's
 # own encode_jpeg_lossless_gray, covering the surface the package encoder
 # doesn't (multi-component, 2-16-bit precision, point transform,
 # line-aligned restart intervals, per-component Huffman tables).
@@ -1229,432 +486,41 @@ def test_jpeg_lossless_via_decode_image():
     assert np.array_equal(decode_image(payload)[:, :, 0].astype(np.int64), px)
 
 
-# ------------------------------- 12-bit extended sequential (SOF1) ---
-
-
-def jpeg_encode_12bit_gray(px):
-    """12-bit extended-sequential DCT encode of an (h, w) raster in
-    [0, 4095]: SOF1 with precision 12, level shift 2048. Returns
-    (payload, expected) with expected the dequantized reconstruction."""
-    px = np.asarray(px, dtype=np.float64)
-    h, w = px.shape
-    mcus_x, mcus_y = -(-w // 8), -(-h // 8)
-    q = _QT_LUMA
-    padded = np.pad(px - 2048.0, ((0, mcus_y * 8 - h), (0, mcus_x * 8 - w)), mode="edge")
-    qblocks = []
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            f = padded[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-            qblocks.append(np.rint((_A @ f @ _A.T) / q).astype(np.int64))
-
-    # expected reconstruction
-    rec = np.zeros((mcus_y * 8, mcus_x * 8))
-    for i, blk in enumerate(qblocks):
-        my, mx = divmod(i, mcus_x)
-        rec[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = _A.T @ (blk * q) @ _A + 2048.0
-    expected = np.clip(np.rint(rec[:h, :w]), 0, 4095).astype(np.uint16)[:, :, None]
-
-    dc_syms, ac_syms = _block_symbols([qblocks], [0])
-    dc_tab = _fixed_table(dc_syms[0] or [0])
-    ac_tab = _fixed_table(ac_syms[0] or [0])
-
-    out = bytearray(b"\xff\xd8")
-
-    def segment(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend((len(body) + 2).to_bytes(2, "big"))
-        out.extend(body)
-
-    flat = q.reshape(64)
-    zz = bytes(int(flat[_ZIGZAG[i]]) for i in range(64))
-    segment(0xDB, bytes([0]) + zz)
-    segment(
-        0xC1,
-        bytes([12]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]),
-    )
-    segment(0xC4, bytes([0x00] + dc_tab[0] + dc_tab[1]))
-    segment(0xC4, bytes([0x10] + ac_tab[0] + ac_tab[1]))
-    segment(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-
-    writer = _BitWriter()
-    pred = 0
-    for blk in qblocks:
-        zzs = _zigzag_scan(blk)
-        diff = zzs[0] - pred
-        pred = zzs[0]
-        s = _category(diff)
-        length, code = dc_tab[2][s]
-        writer.write(code, length)
-        if s:
-            writer.write(_magnitude_bits(diff, s), s)
-        run = 0
-        for k in range(1, 64):
-            if zzs[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                length, code = ac_tab[2][0xF0]
-                writer.write(code, length)
-                run -= 16
-            s = _category(zzs[k])
-            length, code = ac_tab[2][(run << 4) | s]
-            writer.write(code, length)
-            writer.write(_magnitude_bits(zzs[k], s), s)
-            run = 0
-        if run:
-            length, code = ac_tab[2][0x00]
-            writer.write(code, length)
-    writer.flush()
-    out.extend(writer.out)
-    out.extend(b"\xff\xd9")
-    return bytes(out), expected
-
-
-def test_jpeg_12bit_extended_sequential():
-    rng = np.random.default_rng(20)
-    base = np.add.outer(np.arange(21) * 97.0, np.arange(18) * 53.0)
-    px = np.clip(base + rng.normal(0, 40, base.shape), 0, 4095).astype(np.int64)
-    payload, expected = jpeg_encode_12bit_gray(px)
-    out = decode_jpeg(payload)
-    assert out.dtype == np.uint16
-    assert out.shape == (21, 18, 1)
-    assert np.max(np.abs(out.astype(int) - expected.astype(int))) <= 1
-
-
-def test_jpeg_12bit_baseline_sof0_still_gated():
-    # 12-bit is legal only for SOF1: a 12-bit SOF0 stream must be refused
-    px = _lossless_px(8, 8, top=4095, seed=21)
-    payload, _ = jpeg_encode_12bit_gray(px)
-    bad = bytearray(payload)
-    bad[bad.index(b"\xff\xc1") + 1] = 0xC0
+def test_jpeg_unsupported_process_gated_truncated_raises():
+    px = _lossless_px(8, 8, seed=16)
+    payload, _ = jpeg_encode_lossless(px, predictor=1)
+    # flip SOF3 -> arithmetic lossless (0xCB): refused, not mis-decoded
+    arith = bytearray(payload)
+    i = arith.index(b"\xff\xc3")
+    arith[i + 1] = 0xCB
     with pytest.raises(NotImplementedError):
-        decode_jpeg(bytes(bad))
+        decode_jpeg(bytes(arith))
+    # truncated streams: inside the header segments, and inside the scan
+    for cut in (len(payload) // 3, len(payload) - 3):
+        with pytest.raises(ValueError):
+            decode_jpeg(payload[:cut])
 
 
-# ------------------------------------ arithmetic-coded JPEG (QM coder) ---
-# Fixtures were produced by a REAL independent encoder (libjpeg, via
-# scripts/make_arith_fixtures.c) together with a losslessly-transcoded
-# Huffman TWIN of each (jpeg_read_coefficients -> jpeg_write_coefficients,
-# the jpegtran shape). Twin pairs carry identical quantized coefficients,
-# so the decoder must produce byte-identical pixels for both — an exact
-# oracle for the arithmetic entropy layer with no shared code, no shared
-# spec misreading, and no IDCT tolerance. A 24-config random sweep
-# (sizes 8-150, gray/color, sequential/progressive, restart 0-5,
-# quality 20-92, noise content) was run against libjpeg at fixture
-# creation; these committed pairs pin the three structural variants.
+@pytest.mark.parametrize(
+    "sof", [0xC0, 0xC1, 0xC2, 0xC9, 0xCA, 0xCB], ids=lambda m: f"{m:#04x}"
+)
+def test_jpeg_arith_lossless_still_gated(sof):
+    # only lossless SOF3 decodes: a DCT (baseline, extended, progressive)
+    # or arithmetic-coded frame is an honest NotImplementedError, through
+    # the codec and through the multimodal entry point alike
+    from tipoca_stream_spark.operators.multimodal import decode_image
 
-
-def _twin_pair(name):
-    with open(os.path.join(_FIXDIR, f"{name}.jpg"), "rb") as f:
-        arith = decode_jpeg(f.read())
-    with open(os.path.join(_FIXDIR, f"{name}_huff_twin.jpg"), "rb") as f:
-        huff = decode_jpeg(f.read())
-    return arith, huff
-
-
-def test_jpeg_arith_sequential_gray_exact_vs_twin():
-    arith, huff = _twin_pair("arith_seq_gray")
-    assert arith.shape == (47, 61, 1)
-    assert np.array_equal(arith, huff)
-
-
-def test_jpeg_arith_sequential_color_restarts_exact_vs_twin():
-    # 4:2:0 subsampling + DRI=3: restart markers must reset the QM
-    # registers AND every statistics bank
-    with open(os.path.join(_FIXDIR, "arith_seq_color.jpg"), "rb") as f:
-        payload = f.read()
-    assert b"\xff\xdd" in payload  # DRI present
-    assert any(
-        payload[i] == 0xFF and 0xD0 <= payload[i + 1] <= 0xD7
-        for i in range(len(payload) - 1)
-    )
-    arith, huff = _twin_pair("arith_seq_color")
-    assert arith.shape == (59, 83, 3)
-    assert np.array_equal(arith, huff)
-
-
-def test_jpeg_arith_progressive_color_exact_vs_twin():
-    arith, huff = _twin_pair("arith_prog_color")
-    assert arith.shape == (56, 72, 3)
-    assert np.array_equal(arith, huff)
-
-
-def test_jpeg_arith_fixtures_really_arithmetic():
-    """Guard the guard: the fixtures must keep their SOF9/SOFA markers —
-    a re-save through a Huffman encoder would silently drop the coverage
-    these tests exist to provide."""
-    for name, sof in [
-        ("arith_seq_gray", 0xC9),
-        ("arith_seq_color", 0xC9),
-        ("arith_prog_color", 0xCA),
-        ("arith_seq_gray_huff_twin", 0xC0),
-        ("arith_prog_color_huff_twin", 0xC0),
-    ]:
-        with open(os.path.join(_FIXDIR, f"{name}.jpg"), "rb") as f:
-            data = f.read()
-        found = {
-            data[i + 1]
-            for i in range(len(data) - 1)
-            if data[i] == 0xFF
-            and data[i + 1] in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA, 0xCB)
-        }
-        assert found == {sof}, (name, found)
-
-
-def test_arith_state_table_matches_system_libjpeg():
-    """Cross-check the _ARITH_TABLE transcription of T.81 Table D.3
-    against the state machine exported by the system libjpeg, when one
-    is present (jpeg_aritab packs (Qe<<16 | NMPS<<8 | SW<<7 | NLPS) per
-    state)."""
-    import ctypes
-
-    from tipoca_stream_spark.operators.imagecodec import _ARITH_TABLE
-
-    assert len(_ARITH_TABLE) == 114
-    try:
-        lib = ctypes.CDLL("libjpeg.so.62")
-        tab = (ctypes.c_int64 * 114).in_dll(lib, "jpeg_aritab")
-    except (OSError, ValueError):
-        pytest.skip("no system libjpeg with jpeg_aritab exported")
-    for i in range(114):
-        v = tab[i]
-        assert _ARITH_TABLE[i] == (
-            v >> 16,
-            (v >> 8) & 0xFF,
-            v & 0x7F,
-            (v >> 7) & 1,
-        ), i
-
-
-def test_jpeg_arith_lossless_still_gated():
-    # 0xCB (arithmetic lossless) remains an honest NotImplementedError:
-    # no real-world encoder emits it (even libjpeg cannot), so there is
-    # no independent fixture to verify a decoder against
     px = _lossless_px(8, 8, seed=30)
     payload, _ = jpeg_encode_lossless(px, predictor=1)
     bad = bytearray(payload)
-    bad[bad.index(b"\xff\xc3") + 1] = 0xCB
+    bad[bad.index(b"\xff\xc3") + 1] = sof
     with pytest.raises(NotImplementedError):
         decode_jpeg(bytes(bad))
+    with pytest.raises(NotImplementedError):
+        decode_image(bytes(bad))
 
 
-def test_jpeg_arith_via_decode_image():
-    from tipoca_stream_spark.operators.multimodal import (
-        decode_image,
-        decode_image_header,
-    )
-
-    with open(os.path.join(_FIXDIR, "arith_seq_gray.jpg"), "rb") as f:
-        payload = f.read()
-    assert decode_image_header(payload) == ("jpeg", 61, 47)
-    arith, huff = _twin_pair("arith_seq_gray")
-    assert np.array_equal(decode_image(payload), huff)
-
-
-# --- native-vs-pure entropy path parity (round 9) ---------------------------
-
-
-def test_native_and_pure_entropy_paths_agree():
-    """The compiled scan decoder and the pure-Python LUT decoder must be
-    bit-identical on every byte fixture (the fast path is an optimization,
-    never a semantic fork). Skips the native side gracefully where no C
-    compiler exists — the pure path is then the only path and trivially
-    agrees with itself."""
-    import glob
-
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    native = ic._native_entropy()
-    if native is None:
-        return  # no compiler on host: single-path, nothing to diverge
-    for p in glob.glob(os.path.join(_FIXDIR, "*.jpg")):
-        with open(p, "rb") as f:
-            payload = f.read()
-        fast = ic.decode_jpeg(payload)
-        saved, ic._NATIVE = ic._NATIVE, None
-        try:
-            pure = ic.decode_jpeg(payload)
-        finally:
-            ic._NATIVE = saved
-        assert fast.shape == pure.shape and (fast == pure).all(), p
-
-
-def test_native_path_restart_and_subsampled_parity():
-    """Restart markers + 2x2 chroma subsampling through BOTH entropy
-    paths: the synthetic encoder covers the restart-reset and
-    multi-unit-MCU branches of the C loop that the board fixture
-    (no DRI) does not."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    if ic._native_entropy() is None:
-        return
-    rng = np.random.default_rng(9)
-    px = rng.integers(0, 256, size=(33, 41, 3), dtype=np.uint8)
-    payload, expected = jpeg_encode(px, chroma_sub=(2, 2), restart_interval=3)
-    fast = ic.decode_jpeg(payload)
-    saved, ic._NATIVE = ic._NATIVE, None
-    try:
-        pure = ic.decode_jpeg(payload)
-    finally:
-        ic._NATIVE = saved
-    assert (fast == pure).all()
-    assert np.array_equal(fast, expected)
-
-
-# --- progressive restarts (round 9): hand-assembled DRI stream --------------
-
-
-def jpeg_encode_progressive_gray_dri(px, dri=3, dc_al=1):
-    """Grayscale progressive stream WITH restart markers — the one Annex-G
-    shape no fixture covered (the libjpeg board has no DRI and the main
-    synthetic progressive encoder never emits one). Three scans — DC first
-    at Al, DC refinement to 0, full-band AC first — each entropy stream
-    split into restart intervals of ``dri`` blocks with predictor/EOB-run
-    reset per segment (T.81 G.1 restart semantics). Returns
-    (jpeg_bytes, expected_pixels); all coefficient bits are delivered, so
-    a correct decoder reproduces the baseline reconstruction exactly."""
-    px = np.asarray(px, dtype=np.float64)
-    h, w = px.shape[:2]
-    (qblocks, quants, samp, comp_classes, geom, gray, expected) = (
-        _quantize_and_expect(px)
-    )
-    assert gray
-    blocks = [b.reshape(64) for b in qblocks[0]]
-
-    def dc_first_segs():
-        segs, ev, pred = [], [], 0
-        for i, blk in enumerate(blocks):
-            if i and i % dri == 0:
-                segs.append(ev)
-                ev, pred = [], 0
-            v = int(blk[0]) >> dc_al
-            diff = v - pred
-            pred = v
-            s = _category(diff)
-            ev.append(("sym", s))
-            if s:
-                ev.append(("bits", _magnitude_bits(diff, s), s))
-        segs.append(ev)
-        return segs
-
-    def dc_refine_segs():
-        segs, ev = [], []
-        for i, blk in enumerate(blocks):
-            if i and i % dri == 0:
-                segs.append(ev)
-                ev = []
-            ev.append(("bits", int(blk[0]) & 1, 1))
-        segs.append(ev)
-        return segs
-
-    def ac_first_segs():
-        segs, ev = [], []
-        eob = 0
-
-        def flush():
-            nonlocal eob
-            if eob:
-                nbits = eob.bit_length() - 1
-                ev.append(("sym", nbits << 4))
-                if nbits:
-                    ev.append(("bits", eob - (1 << nbits), nbits))
-                eob = 0
-
-        for i, blk in enumerate(blocks):
-            if i and i % dri == 0:
-                flush()  # an EOB run must not cross a restart boundary
-                segs.append(ev)
-                ev = []
-            zz = [int(blk[_ZIGZAG[k]]) for k in range(1, 64)]
-            if not any(zz):
-                eob += 1
-                continue
-            flush()
-            run = 0
-            for v in zz:
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    ev.append(("sym", 0xF0))
-                    run -= 16
-                s = _category(v)
-                ev.append(("sym", (run << 4) | s))
-                ev.append(("bits", _magnitude_bits(v, s), s))
-                run = 0
-            if run:
-                eob += 1
-        flush()
-        segs.append(ev)
-        return segs
-
-    dc_segs, ref_segs, ac_segs = dc_first_segs(), dc_refine_segs(), ac_first_segs()
-    dc_counts, dc_syms, dc_codes = _fixed_table(
-        [e[1] for seg in dc_segs for e in seg if e[0] == "sym"] or [0]
-    )
-    ac_counts, ac_syms, ac_codes = _fixed_table(
-        [e[1] for seg in ac_segs for e in seg if e[0] == "sym"] or [0]
-    )
-
-    out = bytearray(b"\xff\xd8")
-
-    def segment(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend((len(body) + 2).to_bytes(2, "big"))
-        out.extend(body)
-
-    flat = _QT_LUMA.reshape(64)
-    segment(0xDB, bytes([0]) + bytes(int(flat[_ZIGZAG[i]]) for i in range(64)))
-    segment(
-        0xC2,
-        bytes(bytearray([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-              + bytes([1, 1, 0x11, 0])),
-    )
-    segment(0xDD, dri.to_bytes(2, "big"))
-
-    def emit_scan(segs, codes, ss, se, ah, al):
-        segment(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-        for i, ev in enumerate(segs):
-            wtr = _BitWriter()
-            for e in ev:
-                if e[0] == "sym":
-                    length, code = codes[e[1]]
-                    wtr.write(code, length)
-                else:
-                    wtr.write(e[1], e[2])
-            wtr.flush()
-            out.extend(wtr.out)
-            if i < len(segs) - 1:
-                out.extend(bytes([0xFF, 0xD0 + (i % 8)]))
-
-    segment(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(dc_syms))
-    emit_scan(dc_segs, dc_codes, 0, 0, 0, dc_al)
-    emit_scan(ref_segs, {}, 0, 0, 1, 0)  # raw correction bits only
-    segment(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(ac_syms))
-    emit_scan(ac_segs, ac_codes, 1, 63, 0, 0)
-    out.extend(b"\xff\xd9")
-    return bytes(out), expected
-
-
-def test_jpeg_progressive_restart_markers_both_paths():
-    """Progressive + DRI through BOTH entropy paths: predictor and
-    EOB-run reset at every restart, segments advanced identically —
-    4 restart segments across 10 blocks, three scan types."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    px = (np.add.outer(np.arange(40) * 7, np.arange(16) * 3) % 256).astype(
-        np.uint8
-    )
-    payload, expected = jpeg_encode_progressive_gray_dri(px, dri=3)
-    fast = decode_jpeg(payload)
-    assert np.array_equal(fast, expected)
-    if ic._native_lib() is not None:
-        saved, ic._NATIVE = ic._NATIVE, None
-        try:
-            pure = decode_jpeg(payload)
-        finally:
-            ic._NATIVE = saved
-        assert (fast == pure).all()
+# --- native-vs-pure parity and the compile cache ------------------------
 
 
 def test_so_cache_is_user_private_and_verified(tmp_path):
@@ -1684,174 +550,6 @@ def test_so_cache_is_user_private_and_verified(tmp_path):
         ic._verify_private_file(str(bad))
     os.chmod(bad, 0o600)
     ic._verify_private_file(str(bad))  # ours + private: accepted
-
-
-def test_native_idct_color_bit_exact_with_numpy_chain():
-    """Round 10: the compiled jpeg_idct_plane / jpeg_ycbcr_to_rgb units
-    must be BIT-EXACT with the numpy chain they replace (_idct_blocks →
-    rint → clip → transpose-assemble → repeat-upsample → BT.601 → rint →
-    clip) — element equality on random coefficient blocks across
-    magnitudes, both layouts, and the dequant variant. The full-decode
-    native-vs-pure fixture parity rides on this; a ±1 LSB divergence at
-    a rounding boundary is a failure, not noise."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    lib = ic._native_lib()
-    if lib is None:
-        import pytest as _pytest
-
-        _pytest.skip("no C compiler on this host")
-    a = ic._idct_basis()
-    rng = np.random.default_rng(11)
-    mcus_y, mcus_x, vi, hi = 6, 7, 2, 2
-    n_blocks = mcus_y * mcus_x * vi * hi
-    for scale in (8, 1000, 2**20, 2**40):
-        blocks = rng.integers(-scale, scale, size=(n_blocks, 64), dtype=np.int64)
-        arr = np.asarray(blocks, dtype=np.float64).reshape(-1, 8, 8)
-        ref = np.clip(np.rint(ic._idct_blocks(arr, a) + 128.0), 0, 255).astype(
-            np.uint16
-        )
-        plane_ref = (
-            ref.reshape(mcus_y, mcus_x, vi, hi, 8, 8)
-            .transpose(0, 2, 4, 1, 3, 5)
-            .reshape(mcus_y * vi * 8, mcus_x * hi * 8)
-        )
-        plane_c = np.zeros_like(plane_ref)
-        bc = np.ascontiguousarray(blocks)
-        lib["idct"](
-            bc.ctypes.data, n_blocks, ic._idct_basis_c().ctypes.data, None,
-            128.0, 255.0, mcus_y, mcus_x, vi, hi, plane_c.ctypes.data,
-        )
-        assert np.array_equal(plane_ref, plane_c), f"idct diverged at ±{scale}"
-    # dequant + raster layout (the progressive grids shape)
-    q = rng.integers(1, 255, size=64).astype(np.float64)
-    blocks = rng.integers(-2000, 2000, size=(n_blocks, 64), dtype=np.int64)
-    arr = (np.asarray(blocks, dtype=np.float64) * q).reshape(-1, 8, 8)
-    ref = np.clip(np.rint(ic._idct_blocks(arr, a) + 128.0), 0, 255).astype(np.uint16)
-    gh, gw = mcus_y * vi, mcus_x * hi
-    plane_ref = ref.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
-    plane_c = np.zeros_like(plane_ref)
-    bc = np.ascontiguousarray(blocks)
-    lib["idct"](
-        bc.ctypes.data, n_blocks, ic._idct_basis_c().ctypes.data, q.ctypes.data,
-        128.0, 255.0, gh, gw, 1, 1, plane_c.ctypes.data,
-    )
-    assert np.array_equal(plane_ref, plane_c), "dequant/raster idct diverged"
-    # color: subsampled chroma, odd crop, vs the numpy repeat+BT.601 chain
-    h, w = 93, 107
-    yp = rng.integers(0, 256, size=(96, 112), dtype=np.uint16)
-    cb = rng.integers(0, 256, size=(48, 56), dtype=np.uint16)
-    cr = rng.integers(0, 256, size=(48, 56), dtype=np.uint16)
-    planes = [
-        yp[:h, :w],
-        np.repeat(np.repeat(cb, 2, axis=0), 2, axis=1)[:h, :w],
-        np.repeat(np.repeat(cr, 2, axis=0), 2, axis=1)[:h, :w],
-    ]
-    ref_img = ic._planes_to_image(planes, precision=8)
-    out = np.zeros((h, w, 3), np.uint16)
-    lib["rgb"](  # ratios are passed as LOG2 shifts: 1 -> 0, 2 -> 1
-        yp.ctypes.data, yp.shape[1], 0, 0,
-        cb.ctypes.data, cb.shape[1], 1, 1,
-        cr.ctypes.data, cr.shape[1], 1, 1,
-        h, w, 128.0, 255.0, out.ctypes.data,
-    )
-    assert np.array_equal(ref_img, out.astype(np.uint8)), "color diverged"
-
-
-def test_tiered_idct_every_tier_bit_exact():
-    """Round 10b: the IDCT dispatches per block on the coefficient
-    occupancy bound (DC-only / 2x2 / 4x4 / 6x6 / full) — the dense
-    exactness test above never leaves the full tier, so this one
-    constructs blocks that land in EVERY tier, at the tier boundaries,
-    plus the wash-out edge cases the bit-identity argument leans on:
-    zero DC (all-zero block), negative DC only, a single coefficient at
-    each boundary position (occ = 0,1,2,3,4,5,6,7), high-frequency-only
-    blocks (sparse but occ=7), and a quant table with a ZERO entry
-    (a nonzero raw coefficient that dequantizes to exact 0.0 still
-    raises the occupancy bound — upper bounds must stay safe)."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    lib = ic._native_lib()
-    if lib is None:
-        import pytest as _pytest
-
-        _pytest.skip("no C compiler on this host")
-    a = ic._idct_basis()
-    rng = np.random.default_rng(23)
-
-    blocks = []
-    # all-zero block and DC-only blocks (positive, negative, zero DC)
-    blocks.append(np.zeros(64, np.int64))
-    for dc in (1, -1, 700, -700):
-        b = np.zeros(64, np.int64)
-        b[0] = dc
-        blocks.append(b)
-    # one coefficient at each occupancy boundary (row, col) = (k, k)
-    for k in range(8):
-        b = np.zeros(64, np.int64)
-        b[k * 8 + k] = 100 - 30 * k
-        blocks.append(b)
-        # and the asymmetric boundaries (0, k) / (k, 0)
-        b = np.zeros(64, np.int64)
-        b[k] = -50 - k
-        blocks.append(b)
-        b = np.zeros(64, np.int64)
-        b[k * 8] = 50 + k
-        blocks.append(b)
-    # high-frequency-only (occ=7 with zero low rows — exercises the
-    # full kernel over mostly-zero input, the ±0.0 wash-out path)
-    b = np.zeros(64, np.int64)
-    b[63] = 999
-    blocks.append(b)
-    # random sparse blocks across tiers
-    for _ in range(25):
-        b = np.zeros(64, np.int64)
-        m = int(rng.integers(0, 8))
-        n_nz = int(rng.integers(1, 6))
-        for _ in range(n_nz):
-            r = int(rng.integers(0, m + 1))
-            c = int(rng.integers(0, m + 1))
-            b[r * 8 + c] = int(rng.integers(-2000, 2000))
-        blocks.append(b)
-    blocks = np.ascontiguousarray(np.stack(blocks).astype(np.int64))
-    n_blocks = blocks.shape[0]
-
-    def ref_plane(arr, gh, gw):
-        ref = np.clip(np.rint(ic._idct_blocks(arr, a) + 128.0), 0, 255)
-        return (
-            ref.astype(np.uint16)
-            .reshape(gh, gw, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(gh * 8, gw * 8)
-        )
-
-    # raster layout, no quant: pad to a rectangle
-    gh, gw = 1, n_blocks
-    arr = blocks.astype(np.float64).reshape(-1, 8, 8)
-    plane_ref = ref_plane(arr, gh, gw)
-    plane_c = np.zeros_like(plane_ref)
-    lib["idct"](
-        blocks.ctypes.data, n_blocks, ic._idct_basis_c().ctypes.data, None,
-        128.0, 255.0, gh, gw, 1, 1, plane_c.ctypes.data,
-    )
-    assert np.array_equal(plane_ref, plane_c), "tiered idct diverged"
-
-    # dequant variant with a ZERO quant entry at (1,1): raw nonzero
-    # coefficients there dequantize to exact 0.0 but still lift the
-    # occupancy bound — the tier must only ever OVERSHOOT
-    q = rng.integers(1, 200, size=64).astype(np.float64)
-    q[9] = 0.0
-    qblocks = blocks.copy()
-    qblocks[:, 9] = 77  # force the zero-quant position nonzero everywhere
-    arr = (qblocks.astype(np.float64) * q).reshape(-1, 8, 8)
-    plane_ref = ref_plane(arr, gh, gw)
-    plane_c = np.zeros_like(plane_ref)
-    qc = np.ascontiguousarray(qblocks)
-    lib["idct"](
-        qc.ctypes.data, n_blocks, ic._idct_basis_c().ctypes.data,
-        q.ctypes.data, 128.0, 255.0, gh, gw, 1, 1, plane_c.ctypes.data,
-    )
-    assert np.array_equal(plane_ref, plane_c), "zero-quant tier diverged"
 
 
 def test_gif_lzw_native_matches_pure():
@@ -1982,238 +680,35 @@ def test_lossless_malformed_ssss_rejected_both_paths():
         ic._NATIVE, ic._NATIVE_TRIED = saved, saved_t
 
 
-def test_batch_decode_matches_single_across_corpus():
-    """Round 11: decode_jpeg_batch must be exactly decode_jpeg per
-    payload — bit-identical arrays for everything the C batch path
-    takes (baseline gray/color, subsampled, restart-dense), identical
-    fallbacks for everything it does not (progressive, lossless,
-    arithmetic, 12-bit) and None for non-JPEG bytes."""
+def test_lossless_scan_order_differs_from_frame_order_both_paths():
+    """An MCU holds its samples in scan-header order (T.81 A.2.3), which
+    need not be the frame's component order: both entropy paths must
+    route each sample, with its own Huffman table, to the component the
+    scan header names. A scan listing one component twice is corrupt."""
     from tipoca_stream_spark.operators import imagecodec as ic
 
-    rng = np.random.default_rng(11)
-    payloads = []
-    # baseline variants through the test encoder
-    for i in range(6):
-        px = rng.integers(0, 256, size=(17 + 8 * (i % 3), 25 + 8 * (i % 2), 3))
-        payloads.append(jpeg_encode(px, chroma_sub=(2, 2) if i % 2 else (1, 1))[0])
-    gray = rng.integers(0, 256, size=(21, 19))
-    payloads.append(jpeg_encode(gray)[0])
-    # fixture set: baseline with restarts, progressive, arithmetic
-    for name in ("baseline_board.jpg", "progressive_board.jpg",
-                 "arith_seq_gray.jpg", "arith_seq_color.jpg"):
-        with open(f"tests/fixtures/{name}", "rb") as fh:
-            payloads.append(fh.read())
-    # lossless (batch falls back), 12-bit (falls back), non-JPEG (None)
-    payloads.append(ic.encode_jpeg_lossless_gray(
-        np.arange(48, dtype=np.int64).reshape(6, 8) % 256, predictor=4))
-    payloads.append(b"not a jpeg at all")
+    px = _lossless_px(5, 7, ncomp=2, seed=31)
+    payload, expected = jpeg_encode_lossless(px, predictor=4)
+    # swap the frame's component ids: the scan still lists id 1 then id 2,
+    # so frame component 0 (now id 2) receives the scan's second samples
+    swapped = bytearray(payload)
+    j = swapped.index(b"\xff\xc3") + 4 + 6
+    swapped[j], swapped[j + 3] = 2, 1
+    dup = bytearray(payload)
+    k = dup.index(b"\xff\xda") + 4
+    dup[k + 3] = dup[k + 1]  # second scan component repeats the first
 
-    singles = [ic.decode_jpeg(p) for p in payloads]
-    batched = ic.decode_jpeg_batch(payloads)
-    assert len(batched) == len(singles)
-    for i, (a, b) in enumerate(zip(singles, batched)):
-        if a is None:
-            assert b is None, i
-        else:
-            assert b is not None and a.dtype == b.dtype, i
-            assert np.array_equal(a, b), i
-
-
-def test_batch_decode_pure_python_fallback():
-    """With the native library unavailable, decode_jpeg_batch must fall
-    back to per-image decode_jpeg (same arrays)."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    rng = np.random.default_rng(12)
-    px = rng.integers(0, 256, size=(16, 24, 3))
-    payload = jpeg_encode(px)[0]
-    ref = ic.decode_jpeg(payload)
-    saved, ic._NATIVE = ic._NATIVE, None
-    saved_t, ic._NATIVE_TRIED = ic._NATIVE_TRIED, True
-    try:
-        out = ic.decode_jpeg_batch([payload, b"xx"])
-    finally:
-        ic._NATIVE, ic._NATIVE_TRIED = saved, saved_t
-    assert np.array_equal(out[0], ref) and out[1] is None
-
-
-def test_batch_decode_fuzz_parity_on_mutated_payloads():
-    """The batch path's C parser consumes untrusted bytes: random
-    single-byte mutations of valid baseline JPEGs must behave exactly
-    like the per-image path — same array, same exception type, or the
-    same None. (The batch path may legitimately fall back to the Python
-    decoder, so 'agrees with decode_jpeg' is the whole contract.)"""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    rng = np.random.default_rng(1311)
-    base = jpeg_encode(rng.integers(0, 256, size=(24, 32, 3)),
-                       chroma_sub=(2, 2))[0]
-    payloads = [base]
-    for _ in range(120):
-        b = bytearray(base)
-        for _ in range(rng.integers(1, 4)):
-            b[rng.integers(0, len(b))] = rng.integers(0, 256)
-        payloads.append(bytes(b))
-    # truncations at structural boundaries
-    for cut in (2, 4, 20, len(base) // 2, len(base) - 2):
-        payloads.append(base[:cut])
-
-    def single(p):
+    def both(data):
+        native = ic.decode_jpeg(data)
+        saved, ic._NATIVE = ic._NATIVE, None
+        saved_t, ic._NATIVE_TRIED = ic._NATIVE_TRIED, True
         try:
-            return ("ok", ic.decode_jpeg(p))
-        except Exception as e:
-            return ("err", type(e).__name__)
+            pure = ic.decode_jpeg(data)
+        finally:
+            ic._NATIVE, ic._NATIVE_TRIED = saved, saved_t
+        return native, pure
 
-    refs = [single(p) for p in payloads]
-    try:
-        batched = ic.decode_jpeg_batch(payloads)
-    except Exception:
-        # a raising payload aborts the whole-batch call; the per-payload
-        # loop below still covers every payload
-        batched = None
-    if batched is not None:
-        # whole-batch parity: if the call succeeded, no payload may have
-        # raised singly, and every array/None must match element-wise
-        for i, (kind, ref) in enumerate(refs):
-            assert kind == "ok", f"{i}: single raised {ref}, whole batch returned"
-            if ref is None:
-                assert batched[i] is None, i
-            else:
-                assert np.array_equal(batched[i], ref), i
-    for i, p in enumerate(payloads):
-        kind, ref = refs[i]
-        try:
-            out = ic.decode_jpeg_batch([p])[0]
-            assert kind == "ok", f"{i}: single raised {ref}, batch returned"
-            if ref is None:
-                assert out is None, i
-            else:
-                assert np.array_equal(out, ref), i
-        except AssertionError:
-            raise
-        except Exception as e:
-            assert kind == "err" and type(e).__name__ == ref, (
-                f"{i}: single {refs[i]}, batch raised {type(e).__name__}"
-            )
-
-
-def test_batch_decode_skips_app_and_comment_segments():
-    """Real corpus JPEGs carry APPn (EXIF/JFIF) and COM segments before
-    the frame; the C batch parser must skip them by length exactly like
-    the Python walk — and still take the batch path (not fall back)."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    rng = np.random.default_rng(17)
-    base = jpeg_encode(rng.integers(0, 256, size=(16, 24, 3)))[0]
-    # inject APP1 (fake EXIF), APP13, and COM right after SOI
-    inject = bytearray()
-    for marker, body in ((0xE1, b"Exif\x00\x00" + bytes(64)),
-                         (0xED, bytes(33)),
-                         (0xFE, b"a comment \xff\x00 with ff bytes")):
-        inject += bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-    payload = base[:2] + bytes(inject) + base[2:]
-    ref = ic.decode_jpeg(payload)
-    out = ic.decode_jpeg_batch([payload])[0]
-    assert np.array_equal(ref, out)
-    # prove the C path actually took it (headers report supported)
-    import ctypes
-    lib = ic._native_lib()
-    if lib is not None:
-        offs = np.array([0, len(payload)], np.int64)
-        dims = np.zeros(3, np.int64)
-        status = np.ones(1, np.int32)
-        lib["batch_headers"](payload, offs.ctypes.data, 1,
-                             dims.ctypes.data, status.ctypes.data)
-        assert status[0] == 0 and (dims[0], dims[1], dims[2]) == (16, 24, 3)
-
-
-def test_batch_decode_many_dht_tables_cannot_evict_live_lut():
-    """Spec-legal adversarial shape (ADVICE r11 #1): one image may
-    register MORE distinct Huffman tables than the batch decoder's
-    16-slot LUT cache (multiple tables per DHT segment, redefinitions).
-    The round-robin evictor must never wrap onto a slot the current
-    image's live (class, id) pointers still reference — pre-fix, the
-    scan silently decoded with the wrong table. 20 junk (tc=1, th=3)
-    tables are injected AFTER the real ones, so the real live slots sit
-    directly in the eviction path."""
-    import ctypes
-
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    rng = np.random.default_rng(1201)
-    base = jpeg_encode(rng.integers(0, 256, size=(24, 32, 3)),
-                       chroma_sub=(2, 2))[0]
-    sos = base.find(b"\xff\xda")
-    assert sos > 0
-    # two DHT segments x 10 single-code tables each, all content-distinct
-    inject = bytearray()
-    for seg in range(2):
-        body = bytearray()
-        for k in range(10):
-            body += bytes([0x13])                      # tc=1, th=3
-            body += bytes([1] + [0] * 15)              # one 1-bit code
-            body += bytes([seg * 10 + k])              # distinct symbol
-        inject += b"\xff\xc4" + (len(body) + 2).to_bytes(2, "big") + body
-    payload = base[:sos] + bytes(inject) + base[sos:]
-
-    ref = ic.decode_jpeg(payload)
-    assert np.array_equal(ref, ic.decode_jpeg(base))   # junk tables inert
-    out = ic.decode_jpeg_batch([payload])[0]
-    assert np.array_equal(out, ref)
-
-    # prove the C batch decode itself produced the pixels (no fallback)
-    lib = ic._native_lib()
-    if lib is not None and "batch_decode" in lib:
-        offs = np.array([0, len(payload)], np.int64)
-        dims = np.zeros(3, np.int64)
-        status = np.zeros(1, np.int32)
-        lib["batch_headers"](payload, offs.ctypes.data, 1,
-                             dims.ctypes.data, status.ctypes.data)
-        assert status[0] == 0, "header pass must accept the shape"
-        a = np.empty((int(dims[0]), int(dims[1]), int(dims[2])), np.uint8)
-        ptrs = (ctypes.c_void_p * 1)(a.ctypes.data)
-        lib["batch_decode"](payload, offs.ctypes.data, 1,
-                            ic._idct_basis_c().ctypes.data,
-                            ctypes.addressof(ptrs), status.ctypes.data)
-        assert status[0] == 0, "C path must decode, not fall back"
-        assert np.array_equal(a, ref)
-
-
-def test_batch_decode_allocation_caps_fall_back_per_image():
-    """Untrusted header dims must not drive N-at-once giant allocations
-    (ADVICE r11 #2): an image whose claimed pixel count exceeds the
-    per-image cap is routed to the one-at-a-time path (same result for
-    payloads that cannot actually carry those pixels: an exception or
-    None, exactly like decode_jpeg), and valid small images in the same
-    batch still decode on the C path."""
-    from tipoca_stream_spark.operators import imagecodec as ic
-
-    rng = np.random.default_rng(77)
-    good = jpeg_encode(rng.integers(0, 256, size=(16, 24, 3)))[0]
-    # forge a tiny payload whose SOF claims 65535 x 65535 x 3
-    sof = good.find(b"\xff\xc0")
-    assert sof > 0
-    big = bytearray(good)
-    big[sof + 5:sof + 7] = (65535).to_bytes(2, "big")   # height
-    big[sof + 7:sof + 9] = (65535).to_bytes(2, "big")   # width
-    big = bytes(big)
-
-    def single(p):
-        try:
-            return ("ok", ic.decode_jpeg(p))
-        except Exception as e:
-            return ("err", type(e).__name__)
-
-    ref_big = single(big)
-    got = None
-    try:
-        got = ic.decode_jpeg_batch([good, big])
-    except Exception as e:
-        assert ref_big == ("err", type(e).__name__)
-    if got is not None:
-        assert ref_big[0] == "ok"
-        assert (got[1] is None) == (ref_big[1] is None)
-        if ref_big[1] is not None:
-            assert np.array_equal(got[1], ref_big[1])
-    # the small image always decodes either way
-    assert np.array_equal(ic.decode_jpeg_batch([good])[0], ic.decode_jpeg(good))
+    for out in both(bytes(swapped)):
+        assert np.array_equal(out, expected[:, :, ::-1])
+    with pytest.raises(ValueError):
+        both(bytes(dup))

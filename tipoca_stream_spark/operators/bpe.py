@@ -269,10 +269,9 @@ def token_vocabulary(seg: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     from pyspark.sql import Window
 
     # the single window task is spec-bounded (|vocab| <= |alphabet| +
-    # num_merges + 1, see docstring) — safe at any corpus size. (Spark 4's
-    # EliminateWindowPartitions folds the constant key away, so the
-    # single-partition WindowExec WARN still prints; it is spurious here.)
-    w = Window.partitionBy(F.lit(0)).orderBy(F.desc("freq"), F.asc("token"))
+    # num_merges + 1, see docstring) — safe at any corpus size. (Spark's
+    # single-partition WindowExec WARN prints; it is spurious here.)
+    w = Window.orderBy(F.desc("freq"), F.asc("token"))
     return freqs.select(
         (F.row_number().over(w) - 1).cast("int").alias("token_id"),
         "token",

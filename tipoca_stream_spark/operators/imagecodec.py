@@ -1,193 +1,57 @@
-"""Pure-Python/numpy entropy codecs for the two image formats that
-previously stayed gated in :mod:`multimodal`: baseline JPEG and GIF.
+"""Lossless image codecs for the multimodal columns, written against the
+public specifications (ITU-T T.81 for JPEG, GIF89a for GIF) with no
+external codec library:
 
-Both are fully-specified public formats (ITU-T T.81 / CCITT for JPEG,
-the GIF89a specification for GIF) and need no external codec library:
-
-- ``decode_jpeg``: baseline sequential DCT JPEG (SOF0/SOF1) — marker walk,
-  DQT/DHT table parse, Huffman entropy decode with byte-destuffing and
-  restart-marker handling, dequantize + zigzag reorder, batched 8x8 IDCT
-  as one numpy einsum over all blocks, nearest-neighbor chroma upsample,
-  and BT.601 YCbCr->RGB. Progressive DCT (SOF2) decodes fully too —
-  spectral selection, successive approximation (DC and AC refinement
-  scans with correction bits and EOB runs), interleaved DC scans, and
-  restarts (T.81 Annex G). Extended sequential frames (SOF1) decode at
-  8 and 12-bit precision (12-bit planes come back uint16, 0..4095).
-  Lossless sequential (SOF3, T.81 Annex H) decodes fully: predictors
-  1-7, point transform, 2-16-bit precision, line-aligned restarts —
-  components are returned exactly as stored (no color transform), so
-  the round trip is bit-exact and SQL-oracle-checkable. Arithmetic-
-  coded DCT (SOF9 sequential + SOFA progressive) decodes fully via the
-  QM coder (Annex D state machine + Annex F/G statistics models),
-  verified byte-exact against libjpeg-encoded fixtures through
-  coefficient-identical Huffman twins. Only arithmetic-lossless and
-  differential/hierarchical processes raise NotImplementedError
-  (honest gate: no real-world encoder emits them to verify against).
-- ``decode_gif``: GIF87a/89a first frame — logical screen + color tables,
-  LZW decompression (variable code width, deferred clear, KwKwK case),
-  interlace reordering, composed onto the logical-screen canvas.
+- ``decode_jpeg``: lossless sequential JPEG (SOF3, T.81 Annex H) —
+  predictors 1-7, point transform, 2-16-bit precision, line-aligned
+  restarts. Components come back exactly as stored (no colour
+  transform), so the round trip through ``encode_jpeg_lossless_gray``
+  is bit-exact and SQL-oracle-checkable. Every other JPEG process
+  (baseline, extended-sequential and progressive DCT, arithmetic
+  coding, hierarchical) raises NotImplementedError: no registered
+  query reads a lossy JPEG.
+- ``decode_gif``: GIF87a/89a first frame — logical screen + colour
+  tables, LZW decompression (variable code width, deferred clear, KwKwK
+  case), interlace reordering, composed onto the logical-screen canvas.
+- ``encode_jpeg_lossless_gray`` / ``encode_gif_gray``: the data-plane
+  encoders of ``multimodal.pixel_roundtrip_stats`` and
+  ``phash.phash_from_documents``.
 
 Reference parity note: the reference system (practo/tipoca-stream) has no
 image pipeline at all — this module exists for the training-data-pipeline
 surface (multimodal columns), where decode runs inside Arrow-batched
-``mapInPandas`` (see multimodal.extract_features).
+``mapInPandas``.
 
-Throughput (round 9, closing VERDICT r8 wrong #1): the Huffman path is no
-longer per-bit Python. Symbol decode is a 16-bit-peek LUT
-(:class:`_HuffTable`) over an accumulator bit-reader, the IDCT is the
-separable two-pass contraction shared by every DCT path
-(:func:`_idct_blocks`), destuffing is slice-copy based, and — where a C
-compiler exists — the baseline/extended-sequential scan loop runs as a
-~100-line compiled translation of the same algorithm
-(:func:`_native_entropy`), bit-identical to the Python path (parity
-pinned fixture-by-fixture in tests) and ~8x faster end-to-end on the
-board fixture. Hosts without a compiler keep the pure-Python path
-(``TIPOCA_JPEG_PURE_PYTHON=1`` forces it). The remaining floors are the
-progressive multi-scan refinement loop (~1.6x improved by the shared
-pieces) and the QM arithmetic coder (inherently sequential state
-machine, exotic format) — both still Python, both documented.
+Where a C compiler exists, the three per-sample loops — the lossless-JPEG
+segment walk, GIF LZW decode, and the PNG unfilter behind
+``multimodal.decode_png`` — run as compiled translations of their Python
+twins (``_native_lib``); tests pin native-vs-pure parity for each. Hosts
+without a compiler decode through the Python paths, with the same
+answers.
 """
 
 from __future__ import annotations
 
-# Zigzag scan order (T.81 Figure A.6): position i in the coded coefficient
-# stream maps to raster index _ZIGZAG[i] of the 8x8 block.
-_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-_SOF_BASELINE = (0xC0, 0xC1)  # baseline 8-bit / extended sequential 8..12-bit
-_SOF_PROGRESSIVE = 0xC2  # progressive DCT, Huffman — full decode support
-_SOF_LOSSLESS = 0xC3  # lossless sequential, Huffman — full decode support
-_SOF_ARITH_SEQ = 0xC9  # arithmetic extended sequential — full decode support
-_SOF_ARITH_PROGRESSIVE = 0xCA  # arithmetic progressive — full decode support
+_SOF_LOSSLESS = 0xC3  # lossless sequential, Huffman: the one decoded process
+# Every other frame type of T.81 Table B.1 is refused by name.
 _SOF_UNSUPPORTED = {
-    0xC5: "differential sequential",
-    0xC6: "differential progressive",
+    0xC0: "baseline DCT",
+    0xC1: "extended sequential DCT",
+    0xC2: "progressive DCT",
+    0xC5: "differential sequential DCT",
+    0xC6: "differential progressive DCT",
     0xC7: "differential lossless",
+    0xC9: "arithmetic extended sequential DCT",
+    0xCA: "arithmetic progressive DCT",
     0xCB: "arithmetic lossless",
-    0xCD: "differential arithmetic sequential",
-    0xCE: "differential arithmetic progressive",
+    0xCD: "differential arithmetic sequential DCT",
+    0xCE: "differential arithmetic progressive DCT",
     0xCF: "differential arithmetic lossless",
 }
 
-# T.81 Table D.3 — the QM-coder probability estimation state machine:
-# (Qe, Next_Index_MPS, Next_Index_LPS, Switch_MPS) per state. Entry 113
-# is the non-adaptive "fixed" state (Qe = 0x5A1D, transitions to itself)
-# used for decisions coded at probability 1/2, e.g. AC coefficient signs
-# (F.1.4.4.1.2). Spec constants, same standing as _ZIGZAG; the test
-# suite cross-checks this transcription against the state table exported
-# by the system libjpeg when one is present.
-_ARITH_TABLE = (
-    (0x5A1D, 1, 1, 1), (0x2586, 2, 14, 0), (0x1114, 3, 16, 0),
-    (0x080B, 4, 18, 0), (0x03D8, 5, 20, 0), (0x01DA, 6, 23, 0),
-    (0x00E5, 7, 25, 0), (0x006F, 8, 28, 0), (0x0036, 9, 30, 0),
-    (0x001A, 10, 33, 0), (0x000D, 11, 35, 0), (0x0006, 12, 9, 0),
-    (0x0003, 13, 10, 0), (0x0001, 13, 12, 0), (0x5A7F, 15, 15, 1),
-    (0x3F25, 16, 36, 0), (0x2CF2, 17, 38, 0), (0x207C, 18, 39, 0),
-    (0x17B9, 19, 40, 0), (0x1182, 20, 42, 0), (0x0CEF, 21, 43, 0),
-    (0x09A1, 22, 45, 0), (0x072F, 23, 46, 0), (0x055C, 24, 48, 0),
-    (0x0406, 25, 49, 0), (0x0303, 26, 51, 0), (0x0240, 27, 52, 0),
-    (0x01B1, 28, 54, 0), (0x0144, 29, 56, 0), (0x00F5, 30, 57, 0),
-    (0x00B7, 31, 59, 0), (0x008A, 32, 60, 0), (0x0068, 33, 62, 0),
-    (0x004E, 34, 63, 0), (0x003B, 35, 32, 0), (0x002C, 9, 33, 0),
-    (0x5AE1, 37, 37, 1), (0x484C, 38, 64, 0), (0x3A0D, 39, 65, 0),
-    (0x2EF1, 40, 67, 0), (0x261F, 41, 68, 0), (0x1F33, 42, 69, 0),
-    (0x19A8, 43, 70, 0), (0x1518, 44, 72, 0), (0x1177, 45, 73, 0),
-    (0x0E74, 46, 74, 0), (0x0BFB, 47, 75, 0), (0x09F8, 48, 77, 0),
-    (0x0861, 49, 78, 0), (0x0706, 50, 79, 0), (0x05CD, 51, 48, 0),
-    (0x04DE, 52, 50, 0), (0x040F, 53, 50, 0), (0x0363, 54, 51, 0),
-    (0x02D4, 55, 52, 0), (0x025C, 56, 53, 0), (0x01F8, 57, 54, 0),
-    (0x01A4, 58, 55, 0), (0x0160, 59, 56, 0), (0x0125, 60, 57, 0),
-    (0x00F6, 61, 58, 0), (0x00CB, 62, 59, 0), (0x00AB, 63, 61, 0),
-    (0x008F, 32, 61, 0), (0x5B12, 65, 65, 1), (0x4D04, 66, 80, 0),
-    (0x412C, 67, 81, 0), (0x37D8, 68, 82, 0), (0x2FE8, 69, 83, 0),
-    (0x293C, 70, 84, 0), (0x2379, 71, 86, 0), (0x1EDF, 72, 87, 0),
-    (0x1AA9, 73, 87, 0), (0x174E, 74, 72, 0), (0x1424, 75, 72, 0),
-    (0x119C, 76, 74, 0), (0x0F6B, 77, 74, 0), (0x0D51, 78, 75, 0),
-    (0x0BB6, 79, 77, 0), (0x0A40, 48, 77, 0), (0x5832, 81, 80, 1),
-    (0x4D1C, 82, 88, 0), (0x438E, 83, 89, 0), (0x3BDD, 84, 90, 0),
-    (0x34EE, 85, 91, 0), (0x2EAE, 86, 92, 0), (0x299A, 87, 93, 0),
-    (0x2516, 71, 86, 0), (0x5570, 89, 88, 1), (0x4CA9, 90, 95, 0),
-    (0x44D9, 91, 96, 0), (0x3E22, 92, 97, 0), (0x3824, 93, 99, 0),
-    (0x32B4, 94, 99, 0), (0x2E17, 86, 93, 0), (0x56A8, 96, 95, 1),
-    (0x4F46, 97, 101, 0), (0x47E5, 98, 102, 0), (0x41CF, 99, 103, 0),
-    (0x3C3D, 100, 104, 0), (0x375E, 93, 99, 0), (0x5231, 102, 105, 0),
-    (0x4C0F, 103, 106, 0), (0x4639, 104, 107, 0), (0x415E, 99, 103, 0),
-    (0x5627, 106, 105, 1), (0x50E7, 107, 108, 0), (0x4B85, 103, 109, 0),
-    (0x5597, 109, 110, 0), (0x504F, 107, 111, 0), (0x5A10, 111, 110, 1),
-    (0x5522, 109, 112, 0), (0x59EB, 111, 112, 1), (0x5A1D, 113, 113, 0),
-)
-
-
-def _idct_basis():
-    import numpy as np
-
-    x = np.arange(8)
-    u = np.arange(8)
-    # A[u, x] = 0.5 * c(u) * cos((2x+1) u pi / 16); f = A.T @ F @ A
-    a = 0.5 * np.cos((2 * x[None, :] + 1) * u[:, None] * np.pi / 16)
-    a[0] /= np.sqrt(2.0)
-    return a
-
-
-def _idct_blocks(arr, a):
-    """Separable 2-D IDCT over a block batch (n, 8, 8): contract u, then
-    v, as two einsum passes — the textbook row/column decomposition,
-    ~4x less arithmetic than the old single ``ux,nuv,vy->nxy`` triple
-    contraction. ONE shared implementation for every DCT path (baseline
-    native/pure, progressive, arithmetic) so the entropy layers can
-    never round a boundary pixel differently — the arith-vs-Huffman
-    twin fixtures pin that equality. Round-9 note: regrouping the
-    contraction moved ±1 LSB on 24 of 1.03M pixels of the board fixture
-    (values exactly at a rounding boundary; T.81 decoder-accuracy
-    territory) — the two fixture digests were regenerated and
-    re-verified once for this."""
-    import numpy as np
-
-    return np.einsum("nxv,vy->nxy", np.einsum("ux,nuv->nxv", a, arr), a)
-
-
-# --- optional compiled entropy fast path --------------------------------------
-#
-# The baseline/extended-sequential Huffman scan is the one genuinely
-# sequential per-symbol loop left in the decoder (VERDICT r8 wrong #1: a
-# 10-100x throughput tax at 100 TB of images). No codec library ships in
-# this environment (no PIL/cv2/djpeg), so the remedy is the other shape
-# the verdict asked for: a ~100-line C translation of the SAME scan loop,
-# compiled on first use with the system C compiler into a content-hashed
-# tmp cache and loaded via ctypes — with the pure-Python LUT decoder as
-# the always-available fallback and parity pinned between the two paths
-# (tests/test_imagecodec.py decodes every fixture both ways). Hosts
-# without a compiler silently keep the Python path; results are
-# bit-identical either way. Set TIPOCA_JPEG_PURE_PYTHON=1 to force the
-# fallback. The progressive / lossless / arithmetic paths keep the
-# Python loop (multi-scan state machines; progressive gains ~1.3x from
-# the LUT reader alone, and the QM coder remains the documented floor
-# for the exotic arithmetic processes).
-
 _ENTROPY_C = r"""
 #include <stdint.h>
-#include <math.h>
 #include <string.h>
-
-static const uint8_t ZIGZAG[64] = {
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-};
 
 typedef struct {
     const uint8_t *d;
@@ -195,63 +59,29 @@ typedef struct {
     long bp;
     uint64_t acc;
     int nbits;
-    int raw;        /* 1 = read the RAW entropy stream: destuff 0xFF00
-                       inline and PIN at any marker (round 13: one pass
-                       over entropy bytes instead of destuff + read) */
-    int at_marker;  /* raw mode: bp rests on the 0xFF of a marker (or a
-                       trailing lone 0xFF); fills deliver 1-bit padding
-                       without advancing */
 } bitreader;
 
-/* Past the end the reader produces 1-bits (T.81 F.1.2.3 padding) — the
-   same over-read tolerance as the Python _BitReader.  Fast path
-   (round 10b): when >= 6 bytes remain, refill 48 bits in one shot
-   (GCC fuses the explicit byte composition into a single load+bswap);
-   with nbits <= 16 on entry — every consumer peeks/reads at most 16 —
-   the result fits the 64-bit accumulator.  The byte-at-a-time tail
-   with 0xFF padding is unchanged, so the delivered bit-stream is
-   identical.
-
-   Raw mode (round 13, the destuff fusion): the same reader over the
-   UN-destuffed stream.  The fast path additionally requires none of
-   the 6 bytes to be 0xFF (0xFF starts either a stuffed pair or a
-   marker); the tail skips 0xFF00 stuffing and pins at the first real
-   marker, delivering 0xFF padding from there on — bit-for-bit the
-   stream the two-pass destuff produced, including its treatment of a
-   trailing lone 0xFF (stream end) and of 0xFF followed by any
-   non-stuffing byte (segment end; the restart walk decides whether a
-   valid RST follows). */
+/* MSB-first reader over a destuffed entropy segment.  Past the end it
+   produces 1-bits (T.81 F.1.2.3 padding) — the same over-read tolerance
+   as the Python _BitReader.  When >= 6 bytes remain it refills 48 bits
+   in one shot; with nbits <= 16 on entry (every consumer peeks or reads
+   at most 16 bits) the result fits the 64-bit accumulator. */
 static void fill(bitreader *r, int need) {
     r->acc &= ((((uint64_t)1) << r->nbits) - 1);
-    if (r->nbits <= 16 && r->bp + 6 <= r->n && !r->at_marker) {
+    if (r->nbits <= 16 && r->bp + 6 <= r->n) {
         const uint8_t *p = r->d + r->bp;
-        if (!r->raw ||
-            (p[0] != 0xFF && p[1] != 0xFF && p[2] != 0xFF &&
-             p[3] != 0xFF && p[4] != 0xFF && p[5] != 0xFF)) {
-            uint64_t chunk =
-                ((uint64_t)p[0] << 40) | ((uint64_t)p[1] << 32) |
-                ((uint64_t)p[2] << 24) | ((uint64_t)p[3] << 16) |
-                ((uint64_t)p[4] << 8) | (uint64_t)p[5];
-            r->acc = (r->acc << 48) | chunk;
-            r->nbits += 48;
-            r->bp += 6;
-            return;
-        }
+        uint64_t chunk =
+            ((uint64_t)p[0] << 40) | ((uint64_t)p[1] << 32) |
+            ((uint64_t)p[2] << 24) | ((uint64_t)p[3] << 16) |
+            ((uint64_t)p[4] << 8) | (uint64_t)p[5];
+        r->acc = (r->acc << 48) | chunk;
+        r->nbits += 48;
+        r->bp += 6;
+        return;
     }
     while (r->nbits < need) {
         uint8_t b = 0xFF;
-        if (!r->at_marker && r->bp < r->n) {
-            b = r->d[r->bp];
-            if (r->raw && b == 0xFF) {
-                if (r->bp + 1 < r->n && r->d[r->bp + 1] == 0x00) {
-                    r->bp += 2;          /* stuffed 0xFF data byte */
-                } else {
-                    r->at_marker = 1;    /* pin; deliver padding */
-                }
-            } else {
-                r->bp += 1;
-            }
-        }
+        if (r->bp < r->n) b = r->d[r->bp++];
         r->acc = (r->acc << 8) | b;
         r->nbits += 8;
     }
@@ -271,748 +101,6 @@ static int read_bits(bitreader *r, int k) {
 
 static int extend_v(int v, int s) {
     return (v < (1 << (s - 1))) ? v - ((1 << s) - 1) : v;
-}
-
-/* Decode one destuffed entropy segment of a baseline/extended-sequential
-   interleaved scan: n_mcus MCUs of nunits data units each (unit u comes
-   from component comp_of_unit[u]).  LUT tables and quant tables are
-   per-component POINTERS to [65536] LUT rows / [64] quant rows (the
-   Python side passes the cached per-table numpy views directly —
-   zero copies).  Output rows are dequantized
-   raster-order (zigzag applied) int64 coefficient blocks in decode
-   order, into a caller-zeroed [n_mcus*nunits][64] buffer.  pred[] is
-   the running DC predictor per component (in/out, reset by the caller
-   at restart boundaries).  pred and out are int64 (ADVICE r9): the
-   Python path computes with unbounded ints, and a malformed 12-bit
-   stream can accumulate |pred| up to ~2^41 (6.7e7 blocks x 15-bit
-   diffs) then multiply by a 16-bit quant value — int32 signed overflow
-   is UB in C and would break the bit-identical-paths contract exactly
-   on hostile input; int64 bounds the worst case at ~2^57, overflow-free.
-   Returns 0, -1 invalid Huffman code, -2 AC run past block end —
-   mapped back to the Python path's ValueErrors. */
-int jpeg_decode_scan_segment(
-    const uint8_t *data, long nbytes,
-    long n_mcus, int nunits,
-    const int32_t *comp_of_unit,
-    const int16_t *const *dc_sym, const uint8_t *const *dc_len,
-    const int16_t *const *ac_sym, const uint8_t *const *ac_len,
-    const int32_t *quant,
-    int64_t *pred,
-    int64_t *out)
-{
-    bitreader r = {data, nbytes, 0, 0, 0};
-    int64_t *blk = out;
-    long m;
-    int u, k;
-    for (m = 0; m < n_mcus; m++) {
-        for (u = 0; u < nunits; u++, blk += 64) {
-            int ci = comp_of_unit[u];
-            const int16_t *ds = dc_sym[ci];
-            const uint8_t *dl = dc_len[ci];
-            const int16_t *as = ac_sym[ci];
-            const uint8_t *al = ac_len[ci];
-            const int32_t *q = quant + ci * 64;
-            int v = peek16(&r);
-            int L = dl[v];
-            int s, diff;
-            if (L == 0) return -1;
-            r.nbits -= L;
-            s = ds[v];
-            diff = s ? extend_v(read_bits(&r, s), s) : 0;
-            pred[ci] += diff;
-            blk[0] = pred[ci] * (int64_t)q[0];
-            k = 0;
-            while (k < 63) {
-                int rs, run, size, zz;
-                v = peek16(&r);
-                L = al[v];
-                if (L == 0) return -1;
-                r.nbits -= L;
-                rs = as[v];
-                run = rs >> 4;
-                size = rs & 15;
-                if (size == 0) {
-                    if (run == 15) { k += 16; continue; }
-                    break;
-                }
-                k += run + 1;
-                if (k > 63) return -2;
-                zz = ZIGZAG[k];
-                blk[zz] = (int64_t)extend_v(read_bits(&r, size), size) * q[zz];
-            }
-        }
-    }
-    return 0;
-}
-
-/* Whole-scan driver: the restart walk (segment advance + predictor
-   reset) moved into C (round 10) — a restart-dense stream (the baseline
-   board carries ~490 RST segments) paid ~8 us of Python loop + ctypes
-   crossing per segment.  offs[n_segs+1] are byte offsets into the
-   CONCATENATED destuffed segments; pred resets to 0 at every segment
-   start (identical to the Python walk, whose initial pred is zeros).
-   Returns the segment decoders' codes, or -5 for "missing restart
-   segment". */
-int jpeg_decode_scan_batch(
-    const uint8_t *data, const int64_t *offs, long n_segs,
-    long n_mcus, long restart_interval, int nunits,
-    const int32_t *comp_of_unit,
-    const int16_t *const *dc_sym, const uint8_t *const *dc_len,
-    const int16_t *const *ac_sym, const uint8_t *const *ac_len,
-    const int32_t *quant,
-    int64_t *out)
-{
-    int64_t pred[16];
-    long done = 0, seg = 0;
-    while (done < n_mcus) {
-        long n_seg = n_mcus - done;
-        int rc, i;
-        if (restart_interval && restart_interval < n_seg)
-            n_seg = restart_interval;
-        if (seg >= n_segs) return -5;
-        for (i = 0; i < 16; i++) pred[i] = 0;
-        rc = jpeg_decode_scan_segment(
-            data + offs[seg], offs[seg + 1] - offs[seg],
-            n_seg, nunits, comp_of_unit,
-            dc_sym, dc_len, ac_sym, ac_len, quant,
-            pred, out + done * (long)nunits * 64);
-        if (rc) return rc;
-        done += n_seg;
-        seg += 1;
-    }
-    return 0;
-}
-
-/* Shared per-block IDCT core (dequantized coefficients as double):
-   two contraction passes, each output element accumulated over u then
-   v in ASCENDING order — the exact summation order numpy's einsum SOP
-   kernels use for these shapes — then level shift, rint (C99
-   half-even, same rule as np.rint), clamp, store.  The unit compiles
-   with -ffp-contract=off so FMA can never move a rounding boundary.
-
-   Round-10b kernel shape: the accumulator rows live in registers
-   (x-outer loops, measured 1.9x over the memset-and-revisit form) and
-   the kernel is TIERED on the block's coefficient-occupancy bound
-   m = max over nonzero c of max(row, col): a fixed-bound kernel skips
-   only terms whose products are exact (+/-)0.0 (all-zero coefficient
-   rows u > m in pass 1; t columns v > m in pass 2, themselves sums of
-   zero products).  Dropping a zero addend can only flip the sign of a
-   zero partial, never a nonzero magnitude, and the sign of zero is
-   erased at the +center (>= 128) level shift before rint — so every
-   tier is BIT-IDENTICAL to the full ascending-order sum, and to the
-   numpy einsum chain (pinned by the parity suite).  Bounds are upper
-   bounds: overshooting m (e.g. a zeroed-by-quant coefficient counted
-   as occupied) only adds back exact-zero terms.  Fixed tier bounds
-   (2/4/6/8) keep every loop fully unrollable/vectorizable — a
-   variable-bound kernel measured SLOWER than the dense one. */
-#define IDCT_KERN(NAME, UB, VB)                                         \
-static void NAME(const double *c, const double *a, double center,      \
-                 double top, uint16_t *dst, long W)                     \
-{                                                                       \
-    double t[8][VB];                                                    \
-    int x, y, u, v;                                                     \
-    for (x = 0; x < 8; x++) {                                           \
-        double acc[VB];                                                 \
-        for (v = 0; v < VB; v++) acc[v] = 0.0;                          \
-        for (u = 0; u < UB; u++) {                                      \
-            double aux = a[u*8+x];                                      \
-            const double *cu = c + u*8;                                 \
-            for (v = 0; v < VB; v++) acc[v] += aux * cu[v];             \
-        }                                                               \
-        for (v = 0; v < VB; v++) t[x][v] = acc[v];                      \
-    }                                                                   \
-    for (x = 0; x < 8; x++) {                                           \
-        double acc[8] = {0,0,0,0,0,0,0,0};                              \
-        for (v = 0; v < VB; v++) {                                      \
-            double txv = t[x][v];                                       \
-            const double *av = a + v*8;                                 \
-            for (y = 0; y < 8; y++) acc[y] += txv * av[y];              \
-        }                                                               \
-        uint16_t *d = dst + x * W;                                      \
-        for (y = 0; y < 8; y++) {                                       \
-            double px = rint(acc[y] + center);                          \
-            if (px < 0.0) px = 0.0;                                     \
-            if (px > top) px = top;                                     \
-            d[y] = (uint16_t)px;                                        \
-        }                                                               \
-    }                                                                   \
-}
-
-IDCT_KERN(idct_k22, 2, 2)
-IDCT_KERN(idct_k44, 4, 4)
-IDCT_KERN(idct_k66, 6, 6)
-IDCT_KERN(idct_k88, 8, 8)
-
-/* DC-only tier: t[x][0] = a[0*8+x]*c[0] (row 0 of the basis), every
-   other t entry an exact zero; o[x][y] = t[x][0]*a[0*8+y].  Same
-   product order as the full sum's surviving terms. */
-static void idct_kdc(const double *c, const double *a, double center,
-                     double top, uint16_t *dst, long W)
-{
-    int x, y;
-    for (x = 0; x < 8; x++) {
-        double t0 = a[x] * c[0];
-        uint16_t *d = dst + x * W;
-        for (y = 0; y < 8; y++) {
-            double px = rint(t0 * a[y] + center);
-            if (px < 0.0) px = 0.0;
-            if (px > top) px = top;
-            d[y] = (uint16_t)px;
-        }
-    }
-}
-
-static void idct_core_dispatch(
-    const double *c, const double *a, double center, double top,
-    uint16_t *dst, long W, int m)
-{
-    if (m == 0)     idct_kdc(c, a, center, top, dst, W);
-    else if (m < 2) idct_k22(c, a, center, top, dst, W);
-    else if (m < 4) idct_k44(c, a, center, top, dst, W);
-    else if (m < 6) idct_k66(c, a, center, top, dst, W);
-    else            idct_k88(c, a, center, top, dst, W);
-}
-
-/* Dense entry point kept for callers without an occupancy bound. */
-static void idct_core_to_plane(
-    const double *c, const double *a, double center, double top,
-    uint16_t *dst, long W)
-{
-    idct_k88(c, a, center, top, dst, W);
-}
-
-static void idct_block_to_plane(
-    const int64_t *blk, const double *a, double center, double top,
-    uint16_t *dst, long W, int m)
-{
-    double c[64];
-    int i;
-    for (i = 0; i < 64; i++) c[i] = (double)blk[i];
-    idct_core_dispatch(c, a, center, top, dst, W, m);
-}
-
-/* FUSED sequential decode (round 10, the "IDCT in the same unit that
-   owns the coefficients" shape): decode each data unit and immediately
-   IDCT it into its component plane while the block is hot in L1 — the
-   two-pass form materialized a ~3 MB coefficient buffer between the
-   scan and the IDCT and paid the round trip through memory, plus the
-   per-component split copies.  Entropy semantics are identical to
-   jpeg_decode_scan_segment (same tables, same predictor walk, same
-   error codes, -5 for a missing restart segment); the IDCT is the same
-   bit-exact unit as jpeg_idct_plane.  unit_block[u] is the unit's
-   block index within its component's MCU tile (by = j / hi,
-   bx = j % hi). */
-static int fused_segment_run(
-    bitreader *r, int64_t *pred, long done, long n_seg, int nunits,
-    const int32_t *comp_of_unit, const int32_t *unit_block,
-    const int16_t *const *dc_sym, const uint8_t *const *dc_len,
-    const int16_t *const *ac_sym, const uint8_t *const *ac_len,
-    const int32_t *quant,
-    const int32_t *vi_arr, const int32_t *hi_arr,
-    uint16_t **plane_ptrs, const int64_t *plane_w,
-    const double *basis, double center, double top,
-    long mcus_x)
-{
-    long m;
-    for (m = 0; m < n_seg; m++) {
-        long gm = done + m;
-        long my = gm / mcus_x, mx = gm % mcus_x;
-        int u, k;
-        for (u = 0; u < nunits; u++) {
-            int ci = comp_of_unit[u];
-            int j = unit_block[u];
-            const int16_t *ds = dc_sym[ci];
-            const uint8_t *dl = dc_len[ci];
-            const int16_t *as = ac_sym[ci];
-            const uint8_t *al = ac_len[ci];
-            const int32_t *q = quant + ci * 64;
-            int vi = vi_arr[ci], hi = hi_arr[ci];
-            int byy = j / hi, bxx = j % hi;
-            long row0 = (my * (long)vi + byy) * 8;
-            long col0 = (mx * (long)hi + bxx) * 8;
-            int64_t blk[64];
-            int occ = 0;  /* max(row, col) over written coefficients */
-            int v = peek16(r);
-            int L = dl[v];
-            int s;
-            if (L == 0) return -1;
-            s = ds[v];
-            /* in-window value extraction (round 13): peek16 leaves
-               >= 16 unconsumed bits buffered, so when the symbol's
-               value bits also fit the same window (L + size <= 16 —
-               the overwhelmingly common case for 8-bit baseline) they
-               are already in ``v``: take them with a shift+mask and
-               consume both at once, skipping read_bits' fill-check and
-               shift chain. The delivered bits and consumption counts
-               are identical to the read_bits path, which remains for
-               the L + size > 16 tail. No new tables (the merged-LUT
-               variant of this idea was measured 1.1-1.3x SLOWER on
-               small-image corpora — BENCH_JPEG_r13b.json: the split
-               len table's cache locality is what the loop lives on). */
-            if (s && L + s <= 16) {
-                pred[ci] += extend_v((v >> (16 - L - s)) & ((1 << s) - 1), s);
-                r->nbits -= L + s;
-            } else {
-                r->nbits -= L;
-                pred[ci] += s ? extend_v(read_bits(r, s), s) : 0;
-            }
-            memset(blk, 0, sizeof(blk));
-            blk[0] = pred[ci] * (int64_t)q[0];
-            k = 0;
-            while (k < 63) {
-                int rs, run, size, zz, zr, zc;
-                v = peek16(r);
-                L = al[v];
-                if (L == 0) return -1;
-                rs = as[v];
-                run = rs >> 4;
-                size = rs & 15;
-                if (size == 0) {
-                    r->nbits -= L;
-                    if (run == 15) { k += 16; continue; }
-                    break;
-                }
-                k += run + 1;
-                if (k > 63) return -2;
-                zz = ZIGZAG[k];
-                if (L + size <= 16) {
-                    blk[zz] = (int64_t)extend_v(
-                        (v >> (16 - L - size)) & ((1 << size) - 1), size)
-                        * q[zz];
-                    r->nbits -= L + size;
-                } else {
-                    r->nbits -= L;
-                    blk[zz] = (int64_t)extend_v(read_bits(r, size), size)
-                              * q[zz];
-                }
-                zr = zz >> 3; zc = zz & 7;
-                if (zr > occ) occ = zr;
-                if (zc > occ) occ = zc;
-            }
-            idct_block_to_plane(
-                blk, basis, center, top,
-                plane_ptrs[ci] + row0 * plane_w[ci] + col0,
-                plane_w[ci], occ);
-        }
-    }
-    return 0;
-}
-
-int jpeg_decode_scan_fused(
-    const uint8_t *data, const int64_t *offs, long n_segs,
-    long n_mcus, long restart_interval, int nunits,
-    const int32_t *comp_of_unit, const int32_t *unit_block,
-    const int16_t *const *dc_sym, const uint8_t *const *dc_len,
-    const int16_t *const *ac_sym, const uint8_t *const *ac_len,
-    const int32_t *quant,
-    const int32_t *vi_arr, const int32_t *hi_arr,
-    uint16_t **plane_ptrs, const int64_t *plane_w,
-    const double *basis, double center, double top,
-    long mcus_x)
-{
-    int64_t pred[16];
-    long done = 0, seg = 0;
-    while (done < n_mcus) {
-        long n_seg = n_mcus - done;
-        bitreader r;
-        int i, rc;
-        if (restart_interval && restart_interval < n_seg)
-            n_seg = restart_interval;
-        if (seg >= n_segs) return -5;
-        r.d = data + offs[seg];
-        r.n = offs[seg + 1] - offs[seg];
-        r.bp = 0; r.acc = 0; r.nbits = 0; r.raw = 0; r.at_marker = 0;
-        for (i = 0; i < 16; i++) pred[i] = 0;
-        rc = fused_segment_run(
-            &r, pred, done, n_seg, nunits, comp_of_unit, unit_block,
-            dc_sym, dc_len, ac_sym, ac_len, quant, vi_arr, hi_arr,
-            plane_ptrs, plane_w, basis, center, top, mcus_x);
-        if (rc) return rc;
-        done += n_seg;
-        seg += 1;
-    }
-    return 0;
-}
-
-/* Raw-stream fused decode (round 13, the destuff fusion): same decode
-   as jpeg_decode_scan_fused but reading the entropy bytes ONCE —
-   straight from the scan data at sos_pos, destuffing inside the
-   bitreader instead of a separate malloc+copy pass (destuff_c).  The
-   restart walk replaces the pre-split segment offsets: after each
-   restart interval the reader discards its byte-padding bits, skips
-   any unconsumed remainder of the segment exactly as destuff_c's
-   splitter did (stuffed pairs stay data, any real marker ends the
-   segment), and requires an RST0-7 marker — anything else is the
-   two-pass walker's -5 (missing restart segment), including EOI, a
-   non-RST marker, 0xFF-fill before the marker, and end-of-stream. */
-int jpeg_decode_scan_fused_raw(
-    const uint8_t *p, long len, long sos_pos,
-    long n_mcus, long restart_interval, int nunits,
-    const int32_t *comp_of_unit, const int32_t *unit_block,
-    const int16_t *const *dc_sym, const uint8_t *const *dc_len,
-    const int16_t *const *ac_sym, const uint8_t *const *ac_len,
-    const int32_t *quant,
-    const int32_t *vi_arr, const int32_t *hi_arr,
-    uint16_t **plane_ptrs, const int64_t *plane_w,
-    const double *basis, double center, double top,
-    long mcus_x)
-{
-    int64_t pred[16];
-    long done = 0;
-    bitreader r;
-    r.d = p; r.n = len; r.bp = sos_pos;
-    r.acc = 0; r.nbits = 0; r.raw = 1; r.at_marker = 0;
-    for (;;) {
-        long n_seg = n_mcus - done;
-        int i, rc;
-        if (restart_interval && restart_interval < n_seg)
-            n_seg = restart_interval;
-        for (i = 0; i < 16; i++) pred[i] = 0;
-        rc = fused_segment_run(
-            &r, pred, done, n_seg, nunits, comp_of_unit, unit_block,
-            dc_sym, dc_len, ac_sym, ac_len, quant, vi_arr, hi_arr,
-            plane_ptrs, plane_w, basis, center, top, mcus_x);
-        if (rc) return rc;
-        done += n_seg;
-        if (done >= n_mcus) return 0;
-        /* skip the segment's unconsumed remainder up to the next real
-           marker (destuff_c split semantics: 0xFF00 pairs are data, a
-           trailing lone 0xFF or any 0xFFxx marker ends the segment) */
-        if (!r.at_marker) {
-            while (r.bp < r.n) {
-                if (p[r.bp] != 0xFF) { r.bp += 1; continue; }
-                if (r.bp + 1 < r.n && p[r.bp + 1] == 0x00) { r.bp += 2; continue; }
-                break;
-            }
-        }
-        /* expect RST0-7; anything else = missing restart segment */
-        if (r.bp + 1 >= r.n || p[r.bp] != 0xFF ||
-            p[r.bp + 1] < 0xD0 || p[r.bp + 1] > 0xD7)
-            return -5;
-        r.bp += 2;
-        r.acc = 0; r.nbits = 0; r.at_marker = 0;
-    }
-}
-
-static int read_bit1(bitreader *r) {
-    if (r->nbits < 1) fill(r, 1);
-    r->nbits -= 1;
-    return (int)((r->acc >> r->nbits) & 1);
-}
-
-/* Decode one destuffed entropy segment of a PROGRESSIVE scan (T.81 G.2)
-   into the per-component coefficient grids — a line-for-line C
-   translation of _decode_progressive_scan's four branches (DC first /
-   DC refine / AC first / AC refine), including EOB-run and
-   correction-bit semantics.  Units are (ci, by, bx) triplets, unit_size
-   triplets per restart unit (the MCU composition when interleaved, one
-   block otherwise); eobrun and pred never cross a restart boundary so
-   they are per-call state.  Coefficient grids are int64 (matching the
-   numpy dtype the accumulating scans share with the Python path).
-   Returns 0, -1 invalid code, -3 run past band end, -4 invalid
-   refinement magnitude. */
-int jpeg_decode_prog_segment(
-    const uint8_t *data, long nbytes,
-    long n_units, int unit_size,
-    const int32_t *trip,
-    int64_t **grid_ptrs,
-    const int32_t *gb_w,
-    const int16_t *const *dc_sym, const uint8_t *const *dc_len,
-    const int16_t *const *ac_sym, const uint8_t *const *ac_len,
-    int ss, int se, int ah, int al,
-    int64_t *pred)  /* int64 like the sequential pred: see ADVICE r9 note */
-{
-    bitreader r = {data, nbytes, 0, 0, 0};
-    long eobrun = 0;
-    int64_t p1 = ((int64_t)1) << al;
-    int64_t m1 = -p1;
-    long u;
-    int e;
-    for (u = 0; u < n_units; u++) {
-        for (e = 0; e < unit_size; e++) {
-            const int32_t *t = trip + (u * unit_size + e) * 3;
-            int ci = t[0];
-            long by = t[1], bx = t[2];
-            int64_t *block = grid_ptrs[ci] + (by * gb_w[ci] + bx) * 64;
-            if (ss == 0 && ah == 0) {
-                const int16_t *ds = dc_sym[ci];
-                const uint8_t *dl = dc_len[ci];
-                int v = peek16(&r);
-                int L = dl[v];
-                int s, diff;
-                if (L == 0) return -1;
-                r.nbits -= L;
-                s = ds[v];
-                diff = s ? extend_v(read_bits(&r, s), s) : 0;
-                pred[ci] += diff;
-                block[0] = pred[ci] * p1;
-            } else if (ss == 0) {
-                if (read_bit1(&r)) block[0] = block[0] | p1;
-            } else if (ah == 0) {
-                const int16_t *as = ac_sym[ci];
-                const uint8_t *al_tab = ac_len[ci];
-                int k;
-                if (eobrun) { eobrun--; continue; }
-                k = ss;
-                while (k <= se) {
-                    int v = peek16(&r);
-                    int L = al_tab[v];
-                    int rs, rr, s;
-                    if (L == 0) return -1;
-                    r.nbits -= L;
-                    rs = as[v];
-                    rr = rs >> 4;
-                    s = rs & 15;
-                    if (s == 0) {
-                        if (rr == 15) { k += 16; continue; }
-                        eobrun = (1L << rr) - 1;
-                        if (rr) eobrun += read_bits(&r, rr);
-                        break;
-                    }
-                    k += rr;
-                    if (k > se) return -3;
-                    block[ZIGZAG[k]] =
-                        (int64_t)extend_v(read_bits(&r, s), s) * p1;
-                    k += 1;
-                }
-            } else {
-                const int16_t *as = ac_sym[ci];
-                const uint8_t *al_tab = ac_len[ci];
-                int k = ss;
-                if (eobrun == 0) {
-                    while (k <= se) {
-                        int v = peek16(&r);
-                        int L = al_tab[v];
-                        int rs, rr, s;
-                        int64_t val = 0;
-                        if (L == 0) return -1;
-                        r.nbits -= L;
-                        rs = as[v];
-                        rr = rs >> 4;
-                        s = rs & 15;
-                        if (s == 0) {
-                            if (rr < 15) {
-                                eobrun = 1L << rr;
-                                if (rr) eobrun += read_bits(&r, rr);
-                                break;
-                            }
-                            /* rr == 15: skip 16 zero-history coefficients */
-                        } else {
-                            if (s != 1) return -4;
-                            val = read_bit1(&r) ? p1 : m1;
-                        }
-                        while (k <= se) {
-                            int z = ZIGZAG[k];
-                            int64_t c = block[z];
-                            if (c != 0) {
-                                if (read_bit1(&r) && (c & p1) == 0)
-                                    block[z] = c + (c >= 0 ? p1 : m1);
-                            } else {
-                                if (rr == 0) break;
-                                rr -= 1;
-                            }
-                            k += 1;
-                        }
-                        if (val && k <= se) block[ZIGZAG[k]] = val;
-                        k += 1;
-                    }
-                }
-                if (eobrun > 0) {
-                    while (k <= se) {
-                        int z = ZIGZAG[k];
-                        int64_t c = block[z];
-                        if (c != 0 && read_bit1(&r) && (c & p1) == 0)
-                            block[z] = c + (c >= 0 ? p1 : m1);
-                        k += 1;
-                    }
-                    eobrun -= 1;
-                }
-            }
-        }
-    }
-    return 0;
-}
-
-/* Batch dequant (optional) + IDCT + plane placement (round 10 —
-   VERDICT r9 next #2: the einsum IDCT, the rint/clip passes and the
-   reshape/transpose plane assembly were the decoder's remaining numpy
-   floor).  Per-block math is idct_core_to_plane — see its bit-exactness
-   contract.
-
-   Layouts: interleaved-MCU (vi,hi as in the frame header; n decomposes
-   as (my, mx, by, bx)) — pass the subsampled component's own grid as
-   mcus_y=gb_h, mcus_x=gb_w, vi=hi=1 for raster order (the progressive
-   grids).  q == NULL means blocks are already dequantized (the
-   sequential scan output); otherwise c[i] = (double)blk[i] * q[i],
-   matching the progressive path's float64 dequant exactly. */
-int jpeg_idct_plane(
-    const int64_t *blocks, long n_blocks,
-    const double *a, const double *q,
-    double center, double top,
-    long mcus_y, long mcus_x, int vi, int hi,
-    uint16_t *plane)
-{
-    long W = (long)mcus_x * hi * 8;
-    long n;
-    (void)mcus_y;
-    for (n = 0; n < n_blocks; n++) {
-        const int64_t *blk = blocks + n * 64;
-        double c[64];
-        int i;
-        long bi = n / (vi * hi), r = n % (vi * hi);
-        long my = bi / mcus_x, mx = bi % mcus_x;
-        int byy = (int)(r / hi), bxx = (int)(r % hi);
-        long row0 = (my * (long)vi + byy) * 8;
-        long col0 = (mx * (long)hi + bxx) * 8;
-        /* occupancy bound from the raw int64 coefficients (blk[i] == 0
-           stays zero after dequant; an upper bound is always safe) */
-        int occ = 0;
-        if (q) {
-            for (i = 0; i < 64; i++) {
-                c[i] = (double)blk[i] * q[i];
-                if (blk[i]) {
-                    int zr = i >> 3, zc = i & 7;
-                    if (zr > occ) occ = zr;
-                    if (zc > occ) occ = zc;
-                }
-            }
-        } else {
-            for (i = 0; i < 64; i++) {
-                c[i] = (double)blk[i];
-                if (blk[i]) {
-                    int zr = i >> 3, zc = i & 7;
-                    if (zr > occ) occ = zr;
-                    if (zc > occ) occ = zc;
-                }
-            }
-        }
-        idct_core_dispatch(c, a, center, top, plane + row0 * W + col0, W,
-                           occ);
-    }
-    return 0;
-}
-
-/* Fused nearest-neighbor chroma upsample + BT.601 YCbCr->RGB + round +
-   clamp, element-identical to _planes_to_image's numpy chain: same
-   literal coefficients, same expression association (guaranteed by
-   -ffp-contract=off), rint == np.rint (half-even), reading the
-   SUBSAMPLED planes at (r>>ry, x>>rx) — exactly what np.repeat-then-
-   crop produces (ratios are passed as LOG2 shifts; JPEG sampling
-   ratios are 1/2/4 in practice and the Python wrapper falls back to
-   numpy on a non-power-of-two ratio — per-pixel integer DIVISION was
-   ~40% of the color stage).  Strides are in elements. */
-static int ycbcr_core(
-    const uint16_t *yp, long ys, int y_ry, int y_rx,
-    const uint16_t *cbp, long cbs, int cb_ry, int cb_rx,
-    const uint16_t *crp, long crs, int cr_ry, int cr_rx,
-    long h, long w, double center, double top,
-    uint16_t *out, uint8_t *out8)
-{
-    /* Row-planar restructuring (round 10b): the interleaved per-pixel
-       loop's x>>rx reads are runtime-shift gathers the vectorizer
-       can't touch, so the whole stage ran scalar.  Split each row
-       chunk into (A) a scalar upsample/convert pass into contiguous
-       double buffers, (B) clean vector loops for the BT.601
-       arithmetic + rint + clamp (the expensive part — now SIMD), and
-       (C) a trivial scalar interleave into the output.  Per-element
-       operations and their order are IDENTICAL to the interleaved
-       form, so the output stays bit-exact with the numpy chain.
-       Fixed 2048-px chunks keep the stack bounded (~82 KB). */
-    enum { CCHUNK = 2048 };
-    double yrow[CCHUNK], cbrow[CCHUNK], crrow[CCHUNK];
-    double rr[CCHUNK], gg[CCHUNK];
-    long r, x0;
-    int i, n;
-    for (r = 0; r < h; r++) {
-        const uint16_t *yr = yp + (r >> y_ry) * ys;
-        const uint16_t *cbr = cbp + (r >> cb_ry) * cbs;
-        const uint16_t *crr = crp + (r >> cr_ry) * crs;
-        uint16_t *o = out ? out + r * w * 3 : 0;
-        uint8_t *o8 = out8 ? out8 + r * w * 3 : 0;
-        for (x0 = 0; x0 < w; x0 += CCHUNK) {
-            n = (w - x0 < CCHUNK) ? (int)(w - x0) : CCHUNK;
-            if (y_rx == 0) {
-                const uint16_t *p = yr + x0;
-                for (i = 0; i < n; i++) yrow[i] = (double)p[i];
-            } else {
-                for (i = 0; i < n; i++)
-                    yrow[i] = (double)yr[(x0 + i) >> y_rx];
-            }
-            if (cb_rx == 0) {
-                const uint16_t *p = cbr + x0;
-                for (i = 0; i < n; i++) cbrow[i] = (double)p[i] - center;
-            } else {
-                for (i = 0; i < n; i++)
-                    cbrow[i] = (double)cbr[(x0 + i) >> cb_rx] - center;
-            }
-            if (cr_rx == 0) {
-                const uint16_t *p = crr + x0;
-                for (i = 0; i < n; i++) crrow[i] = (double)p[i] - center;
-            } else {
-                for (i = 0; i < n; i++)
-                    crrow[i] = (double)crr[(x0 + i) >> cr_rx] - center;
-            }
-            for (i = 0; i < n; i++) {
-                double R = rint(yrow[i] + 1.402 * crrow[i]);
-                if (R < 0.0) R = 0.0; if (R > top) R = top;
-                rr[i] = R;
-            }
-            for (i = 0; i < n; i++) {
-                double G = rint(yrow[i] - 0.344136 * cbrow[i]
-                                - 0.714136 * crrow[i]);
-                if (G < 0.0) G = 0.0; if (G > top) G = top;
-                gg[i] = G;
-            }
-            for (i = 0; i < n; i++) {
-                double B = rint(yrow[i] + 1.772 * cbrow[i]);
-                if (B < 0.0) B = 0.0; if (B > top) B = top;
-                /* reuse yrow as the B staging row — its reads are done */
-                yrow[i] = B;
-            }
-            if (out8) {
-                for (i = 0; i < n; i++) {
-                    uint8_t *ox = o8 + (x0 + i) * 3;
-                    ox[0] = (uint8_t)rr[i];
-                    ox[1] = (uint8_t)gg[i];
-                    ox[2] = (uint8_t)yrow[i];
-                }
-            } else {
-                for (i = 0; i < n; i++) {
-                    uint16_t *ox = o + (x0 + i) * 3;
-                    ox[0] = (uint16_t)rr[i];
-                    ox[1] = (uint16_t)gg[i];
-                    ox[2] = (uint16_t)yrow[i];
-                }
-            }
-        }
-    }
-    return 0;
-}
-
-int jpeg_ycbcr_to_rgb(
-    const uint16_t *yp, long ys, int y_ry, int y_rx,
-    const uint16_t *cbp, long cbs, int cb_ry, int cb_rx,
-    const uint16_t *crp, long crs, int cr_ry, int cr_rx,
-    long h, long w, double center, double top,
-    uint16_t *out)
-{
-    return ycbcr_core(yp, ys, y_ry, y_rx, cbp, cbs, cb_ry, cb_rx,
-                      crp, crs, cr_ry, cr_rx, h, w, center, top, out, 0);
-}
-
-/* uint8 store variant (round 11): identical arithmetic, the final
-   interleave narrows directly — for 8-bit frames top == 255 so the
-   cast is lossless; the batch decoder uses it to skip the uint16
-   intermediate + astype pass entirely. */
-int jpeg_ycbcr_to_rgb8(
-    const uint16_t *yp, long ys, int y_ry, int y_rx,
-    const uint16_t *cbp, long cbs, int cb_ry, int cb_rx,
-    const uint16_t *crp, long crs, int cr_ry, int cr_rx,
-    long h, long w, double center, double top,
-    uint8_t *out)
-{
-    return ycbcr_core(yp, ys, y_ry, y_rx, cbp, cbs, cb_ry, cb_rx,
-                      crp, crs, cr_ry, cr_rx, h, w, center, top, 0, out);
 }
 
 /* PNG per-row unfilter (round 10b; PNG spec 9: None/Sub/Up/Average/
@@ -1072,9 +160,9 @@ int png_unfilter(const uint8_t *rows, long h, long stride, int ch,
    first-line 1-D rule and the Rb rule at line starts, reconstruction
    modulo 65536.  Decodes rows [y0, y0 + n_rows) of every component
    (1x1 sampling: one sample per component per pixel) into caller-owned
-   int64 planes of width w.  GCC's arithmetic >> on negatives matches
-   Python's floor shift (same reliance as the other units).  Returns 0
-   or -1 for an invalid Huffman code. */
+   int64 planes of width w; planes and tables come in scan-header
+   order.  GCC's arithmetic >> on negatives matches Python's floor
+   shift.  Returns 0 or -1 for an invalid Huffman code. */
 int jpeg_decode_lossless_segment(
     const uint8_t *data, long nbytes,
     long y0, long n_rows, long w, int ncomp,
@@ -1211,437 +299,9 @@ int gif_lzw_decode(const uint8_t *data, long nbytes, int min_code_size,
     *n_out = n;
     return 0;
 }
-
-/* ---- whole-image batch decode (round 11, VERDICT r10 next #3) ----
-   The per-image floor after the fused scan was Python staging: marker
-   walk, destuff, LUT/table numpy builds, two ctypes crossings, and the
-   uint16->uint8 astype copy (~4 ms of a 12 ms board-fixture decode).
-   These two entry points move the WHOLE baseline decode into C for a
-   batch of N images: one crossing reads every header (so the caller
-   can allocate outputs), a second parses tables, entropy-decodes +
-   IDCTs (the fused unit, reading the raw entropy bytes ONCE — the
-   round-13 destuff fusion), and color-converts straight into
-   caller-owned uint8 buffers.  Scope is the common
-   corpus shape — baseline/extended-sequential Huffman, 8-bit, 1 or 3
-   components, power-of-two sampling ratios; anything else (or any
-   malformed structure) sets status=1 and the Python path decodes that
-   image with its canonical errors, so batch semantics are exactly
-   decode_jpeg per image. */
-#include <stdlib.h>
-
-typedef struct {
-    uint64_t key;
-    int used;
-    int16_t sym[65536];
-    uint8_t len[65536];
-} lut_slot;
-
-static uint64_t fnv64(const uint8_t *d, long n) {
-    uint64_t h = 1469598103934665603ULL;
-    long i;
-    for (i = 0; i < n; i++) { h ^= d[i]; h *= 1099511628211ULL; }
-    return h;
-}
-
-/* canonical DHT -> 16-bit-peek LUT, the C twin of _HuffTable.__init__;
-   rejects count tables whose code space overflows (Python's list-slice
-   form would silently grow past 2^16 — those streams take the pure
-   path so the LUT contract stays exact) */
-static int build_lut(const uint8_t *counts, const uint8_t *syms,
-                     int16_t *sym, uint8_t *len) {
-    long code = 0;
-    int k = 0, L, i, v;
-    memset(len, 0, 65536);
-    for (L = 1; L <= 16; L++) {
-        for (i = 0; i < counts[L - 1]; i++) {
-            long lo = code << (16 - L), hi = (code + 1) << (16 - L);
-            if (hi > 65536) return 1;
-            for (v = (int)lo; v < (int)hi; v++) {
-                sym[v] = syms[k]; len[v] = (uint8_t)L;
-            }
-            code++; k++;
-        }
-        code <<= 1;
-    }
-    return 0;
-}
-
-typedef struct {
-    long h, w;
-    int ncomp, precision;
-    int comp_id[4], hi[4], vi[4], tq[4];
-    long restart;
-    long sos_pos;
-    int ns;
-    int sel_ci[4], sel_dc[4], sel_ac[4];
-    const uint8_t *dqt_seg[8]; long dqt_len[8]; int n_dqt;
-    const uint8_t *dht_seg[8]; long dht_len[8]; int n_dht;
-} jhdr;
-
-/* marker walk: 0 = supported baseline shape, 1 = let Python handle it
-   (other SOF process, >8-bit, 2/4-component, malformed, truncated) */
-static int parse_headers_c(const uint8_t *p, long n, jhdr *H) {
-    long pos = 2;
-    int have_frame = 0;
-    memset(H, 0, sizeof(*H));
-    if (n < 4 || p[0] != 0xFF || p[1] != 0xD8) return 1;
-    while (pos + 4 <= n) {
-        long seg_len;
-        int marker;
-        if (p[pos] != 0xFF) return 1;
-        marker = p[pos + 1];
-        pos += 2;
-        if (marker == 0xFF) { pos -= 1; continue; }
-        if (marker == 0xD8 || marker == 0x01 ||
-            (marker >= 0xD0 && marker <= 0xD7)) continue;
-        if (marker == 0xD9) return 1; /* EOI before SOS */
-        if (pos + 2 > n) return 1;
-        seg_len = ((long)p[pos] << 8) | p[pos + 1];
-        if (seg_len < 2 || pos + seg_len > n) return 1;
-        {
-            const uint8_t *body = p + pos + 2;
-            long blen = seg_len - 2;
-            int c, s;
-            pos += seg_len;
-            if (marker == 0xDB) {
-                if (H->n_dqt >= 8) return 1;
-                H->dqt_seg[H->n_dqt] = body;
-                H->dqt_len[H->n_dqt] = blen;
-                H->n_dqt++;
-            } else if (marker == 0xC4) {
-                if (H->n_dht >= 8) return 1;
-                H->dht_seg[H->n_dht] = body;
-                H->dht_len[H->n_dht] = blen;
-                H->n_dht++;
-            } else if (marker == 0xC0 || marker == 0xC1) {
-                if (blen < 6) return 1;
-                H->precision = body[0];
-                if (H->precision != 8) return 1;
-                H->h = ((long)body[1] << 8) | body[2];
-                H->w = ((long)body[3] << 8) | body[4];
-                H->ncomp = body[5];
-                if (H->ncomp != 1 && H->ncomp != 3) return 1;
-                if (blen < 6 + 3 * (long)H->ncomp) return 1;
-                for (c = 0; c < H->ncomp; c++) {
-                    H->comp_id[c] = body[6 + 3 * c];
-                    H->hi[c] = body[7 + 3 * c] >> 4;
-                    H->vi[c] = body[7 + 3 * c] & 15;
-                    H->tq[c] = body[8 + 3 * c];
-                    if (H->tq[c] > 3) return 1;
-                }
-                have_frame = 1;
-            } else if (marker >= 0xC2 && marker <= 0xCF) {
-                return 1; /* other SOF processes / DAC: Python path */
-            } else if (marker == 0xDD) {
-                if (blen < 2) return 1;
-                H->restart = ((long)body[0] << 8) | body[1];
-            } else if (marker == 0xDA) {
-                if (!have_frame || blen < 1) return 1;
-                H->ns = body[0];
-                if (H->ns != H->ncomp || blen < 1 + 2 * (long)H->ns)
-                    return 1; /* non-interleaved multi-scan: Python */
-                for (s = 0; s < H->ns; s++) {
-                    int cs = body[1 + 2 * s], ci = -1;
-                    for (c = 0; c < H->ncomp; c++)
-                        if (H->comp_id[c] == cs) ci = c;
-                    if (ci < 0) return 1;
-                    H->sel_ci[s] = ci;
-                    H->sel_dc[s] = body[2 + 2 * s] >> 4;
-                    H->sel_ac[s] = body[2 + 2 * s] & 15;
-                    if (H->sel_dc[s] > 3 || H->sel_ac[s] > 3) return 1;
-                }
-                H->sos_pos = pos;
-                return 0;
-            }
-            /* else: APPn / COM / DNL — skipped via seg_len */
-        }
-    }
-    return 1;
-}
-
-static int validate_hdr(const jhdr *H, long *mcus_x, long *mcus_y,
-                        int *hmax, int *vmax, int *nunits) {
-    int c, hm = 0, vm = 0, nu = 0;
-    if (H->h <= 0 || H->w <= 0) return 1;
-    for (c = 0; c < H->ncomp; c++) {
-        if (H->hi[c] == 0 || H->vi[c] == 0) return 1;
-        if (H->hi[c] > hm) hm = H->hi[c];
-        if (H->vi[c] > vm) vm = H->vi[c];
-    }
-    for (c = 0; c < H->ncomp; c++) {
-        int ry, rx;
-        if (hm % H->hi[c] || vm % H->vi[c]) return 1;
-        ry = vm / H->vi[c]; rx = hm / H->hi[c];
-        if ((ry & (ry - 1)) || (rx & (rx - 1))) return 1;
-        nu += H->hi[c] * H->vi[c];
-    }
-    if (nu > 64) return 1;
-    *hmax = hm; *vmax = vm; *nunits = nu;
-    *mcus_x = (H->w + 8L * hm - 1) / (8L * hm);
-    *mcus_y = (H->h + 8L * vm - 1) / (8L * vm);
-    return 0;
-}
-
-int jpeg_batch_headers(const uint8_t *blob, const int64_t *offs, long n,
-                       int64_t *dims, int32_t *status) {
-    long i;
-    for (i = 0; i < n; i++) {
-        jhdr H;
-        long mx, my;
-        int hm, vm, nu;
-        if (parse_headers_c(blob + offs[i], offs[i + 1] - offs[i], &H) != 0
-            || validate_hdr(&H, &mx, &my, &hm, &vm, &nu) != 0) {
-            status[i] = 1;
-            continue;
-        }
-        dims[i * 3] = H.h;
-        dims[i * 3 + 1] = H.w;
-        dims[i * 3 + 2] = H.ncomp;
-        status[i] = 0;
-    }
-    return 0;
-}
-
-/* DQT segments -> raster-order int32 tables (the zigzag reorder the
-   Python _parse_dqt applies) */
-static int parse_dqt_c(const jhdr *H, int32_t qt[4][64], int *present) {
-    int s, z;
-    long i;
-    for (s = 0; s < H->n_dqt; s++) {
-        const uint8_t *b = H->dqt_seg[s];
-        long blen = H->dqt_len[s];
-        i = 0;
-        while (i < blen) {
-            int pq = b[i] >> 4, tq = b[i] & 15;
-            i += 1;
-            if (tq > 3) return 1;
-            if (pq == 0) {
-                if (i + 64 > blen) return 1;
-                for (z = 0; z < 64; z++) qt[tq][ZIGZAG[z]] = b[i + z];
-                i += 64;
-            } else if (pq == 1) {
-                if (i + 128 > blen) return 1;
-                for (z = 0; z < 64; z++)
-                    qt[tq][ZIGZAG[z]] =
-                        ((int32_t)b[i + 2 * z] << 8) | b[i + 2 * z + 1];
-                i += 128;
-            } else return 1;
-            present[tq] = 1;
-        }
-    }
-    return 0;
-}
-
-/* DHT segments -> LUT pointers per (class, id), through a batch-wide
-   content-keyed cache (corpus images overwhelmingly share the Annex-K
-   tables). Eviction is round-robin but SKIPS any slot the current
-   image's hs/hl pointers still reference: one image may legally
-   register more than 16 distinct tables (multiple tables per DHT
-   segment, redefinitions), yet at most 8 (2 classes x 4 ids) can be
-   LIVE at once — so a non-live slot always exists among 16 and the
-   scan below cannot fail. Without the skip, a 17th registration would
-   wrap onto a live slot and the scan would decode with the wrong
-   table (ADVICE r11 #1). */
-static int parse_dht_c(const jhdr *H, lut_slot *cache, int n_slots,
-                       int *next_evict,
-                       int16_t *hs[2][4], uint8_t *hl[2][4]) {
-    int s, k, e;
-    for (s = 0; s < H->n_dht; s++) {
-        const uint8_t *b = H->dht_seg[s];
-        long blen = H->dht_len[s], i = 0;
-        while (i < blen) {
-            int tc, th;
-            long total = 0;
-            if (i + 17 > blen) return 1;
-            tc = b[i] >> 4; th = b[i] & 15;
-            if (tc > 1 || th > 3) return 1;
-            for (k = 0; k < 16; k++) total += b[i + 1 + k];
-            if (total > 256 || i + 17 + total > blen) return 1;
-            {
-                uint64_t key = fnv64(b + i + 1, 16 + total);
-                int slot = -1;
-                for (e = 0; e < n_slots; e++)
-                    if (cache[e].used && cache[e].key == key) { slot = e; break; }
-                if (slot < 0) {
-                    for (e = 0; e < n_slots; e++)
-                        if (!cache[e].used) { slot = e; break; }
-                    if (slot < 0) {
-                        int tries;
-                        for (tries = 0; tries < n_slots; tries++) {
-                            int cand = *next_evict, a, t, live = 0;
-                            *next_evict = (*next_evict + 1) % n_slots;
-                            for (a = 0; a < 2 && !live; a++)
-                                for (t = 0; t < 4; t++)
-                                    if (hs[a][t] == cache[cand].sym) {
-                                        live = 1; break;
-                                    }
-                            if (!live) { slot = cand; break; }
-                        }
-                        if (slot < 0) return 1; /* unreachable: <= 8 live */
-                    }
-                    if (build_lut(b + i + 1, b + i + 17,
-                                  cache[slot].sym, cache[slot].len) != 0) {
-                        cache[slot].used = 0;
-                        return 1;
-                    }
-                    cache[slot].key = key;
-                    cache[slot].used = 1;
-                }
-                hs[tc][th] = cache[slot].sym;
-                hl[tc][th] = cache[slot].len;
-            }
-            i += 17 + total;
-        }
-    }
-    return 0;
-}
-
-/* (round 13: destuff_c removed — the batch path's entropy destuffing is
-   fused into the bitreader, jpeg_decode_scan_fused_raw; the one-at-a-
-   time path still decodes Python-destuffed segments, so batch-vs-single
-   parity pins exercise fused-raw against the two-pass split.) */
-
-int jpeg_decode_baseline_batch(
-    const uint8_t *blob, const int64_t *offs, long n,
-    const double *basis, uint8_t **outs, int32_t *status)
-{
-    lut_slot *cache = (lut_slot *)calloc(16, sizeof(lut_slot));
-    int next_evict = 0;
-    long img;
-    /* plane arena reused across the batch: the fused decode writes
-       every sample of every padded plane (full MCU coverage), so no
-       per-image zeroing is needed — per-image calloc paid a fresh
-       page-fault walk on every image */
-    uint16_t *arena = 0;
-    size_t arena_cap = 0;
-    if (!cache) {
-        for (img = 0; img < n; img++)
-            if (status[img] == 0) status[img] = 1;
-        return 0;
-    }
-    for (img = 0; img < n; img++) {
-        jhdr H;
-        long mx, my;
-        int hm, vm, nu;
-        int32_t qt[4][64];
-        int qpresent[4] = {0, 0, 0, 0};
-        int16_t *hs[2][4] = {{0}};
-        uint8_t *hl[2][4] = {{0}};
-        uint16_t *planes[4] = {0, 0, 0, 0};
-        const uint8_t *p = blob + offs[img];
-        long len = offs[img + 1] - offs[img];
-        int fail = 0, c, s;
-
-        if (status[img] != 0) continue;
-        if (parse_headers_c(p, len, &H) != 0 ||
-            validate_hdr(&H, &mx, &my, &hm, &vm, &nu) != 0) {
-            status[img] = 1;
-            continue;
-        }
-        memset(qt, 0, sizeof(qt));
-        if (parse_dqt_c(&H, qt, qpresent) != 0 ||
-            parse_dht_c(&H, cache, 16, &next_evict, hs, hl) != 0) {
-            status[img] = 1;
-            continue;
-        }
-        for (s = 0; s < H.ns; s++) {
-            int ci = H.sel_ci[s];
-            if (!qpresent[H.tq[ci]] || !hs[0][H.sel_dc[s]] ||
-                !hs[1][H.sel_ac[s]])
-                fail = 1; /* missing tables: Python raises canonically */
-        }
-        if (fail) {
-            status[img] = 1;
-            continue;
-        }
-        {
-            int32_t cou[64], ub[64];
-            int32_t quant[4 * 64];
-            int32_t vi_arr[4], hi_arr[4];
-            const int16_t *dc_sym[4];
-            const uint8_t *dc_len_[4];
-            const int16_t *ac_sym[4];
-            const uint8_t *ac_len_[4];
-            uint16_t *plane_ptrs[4];
-            int64_t plane_w[4];
-            int u = 0;
-            long n_mcus = mx * my;
-            for (s = 0; s < H.ns; s++) {
-                int ci = H.sel_ci[s], j;
-                for (j = 0; j < H.hi[ci] * H.vi[ci]; j++) {
-                    cou[u] = ci; ub[u] = j; u++;
-                }
-                dc_sym[ci] = hs[0][H.sel_dc[s]];
-                dc_len_[ci] = hl[0][H.sel_dc[s]];
-                ac_sym[ci] = hs[1][H.sel_ac[s]];
-                ac_len_[ci] = hl[1][H.sel_ac[s]];
-                memcpy(quant + ci * 64, qt[H.tq[ci]], 64 * sizeof(int32_t));
-                vi_arr[ci] = H.vi[ci];
-                hi_arr[ci] = H.hi[ci];
-            }
-            {
-                size_t need = 0, at = 0;
-                for (c = 0; c < H.ncomp; c++)
-                    need += (size_t)(my * (long)H.vi[c] * 8)
-                            * (size_t)(mx * (long)H.hi[c] * 8);
-                if (need > arena_cap) {
-                    uint16_t *na = (uint16_t *)malloc(need * 2);
-                    if (na) { free(arena); arena = na; arena_cap = need; }
-                    else fail = 1;
-                }
-                for (c = 0; c < H.ncomp && !fail; c++) {
-                    long pw = mx * (long)H.hi[c] * 8;
-                    planes[c] = arena + at;
-                    at += (size_t)(my * (long)H.vi[c] * 8) * (size_t)pw;
-                    plane_ptrs[c] = planes[c];
-                    plane_w[c] = pw;
-                }
-            }
-            /* round 13: the raw fused decode reads the entropy bytes
-               ONCE (destuffing inside the bitreader) — no per-image
-               destuff malloc+copy pass */
-            if (!fail &&
-                jpeg_decode_scan_fused_raw(
-                    p, len, H.sos_pos, n_mcus, H.restart, nu,
-                    cou, ub, dc_sym, dc_len_, ac_sym, ac_len_, quant,
-                    vi_arr, hi_arr, plane_ptrs, plane_w,
-                    basis, 128.0, 255.0, mx) != 0)
-                fail = 1;
-            if (!fail) {
-                uint8_t *out = outs[img];
-                if (H.ncomp == 1) {
-                    long r, x, pw = plane_w[0];
-                    for (r = 0; r < H.h; r++) {
-                        const uint16_t *row = planes[0] + r * pw;
-                        uint8_t *o = out + r * H.w;
-                        for (x = 0; x < H.w; x++) o[x] = (uint8_t)row[x];
-                    }
-                } else {
-                    int lg[3][2];
-                    for (c = 0; c < 3; c++) {
-                        int ry = vm / H.vi[c], rx = hm / H.hi[c], b2;
-                        for (b2 = 0; (1 << b2) < ry; b2++) ;
-                        lg[c][0] = b2;
-                        for (b2 = 0; (1 << b2) < rx; b2++) ;
-                        lg[c][1] = b2;
-                    }
-                    jpeg_ycbcr_to_rgb8(
-                        planes[0], plane_w[0], lg[0][0], lg[0][1],
-                        planes[1], plane_w[1], lg[1][0], lg[1][1],
-                        planes[2], plane_w[2], lg[2][0], lg[2][1],
-                        H.h, H.w, 128.0, 255.0, out);
-                }
-            }
-            if (fail) status[img] = 1;
-        }
-    }
-    free(arena);
-    free(cache);
-    return 0;
-}
 """
 
-_NATIVE = None  # {"scan": fn, "prog": fn} once loaded
+_NATIVE = None  # kernel name -> ctypes function, once loaded
 _NATIVE_TRIED = False
 
 
@@ -1692,37 +352,29 @@ def _verify_private_file(path: str) -> None:
 
 
 def _native_lib():
-    """Compile-and-load the C entropy decoders, once per process; any
-    failure (no compiler, read-only cache, unsafe ownership/permissions,
-    exotic platform) falls back to the pure Python path — same answers,
+    """Compile-and-load the C kernels, once per process; any failure (no
+    compiler, read-only cache, unsafe ownership/permissions, exotic
+    platform) falls back to the pure Python path — same answers,
     slower. The cache key is the source hash so a code change can never
     load a stale binary; the rename is atomic so concurrent executor
     workers race safely to the same file; the cache dir is user-private
     (0700) and both dir and .so are ownership/permission-verified before
-    ctypes.CDLL (ADVICE r9)."""
+    ctypes.CDLL."""
     global _NATIVE, _NATIVE_TRIED
     if _NATIVE_TRIED:
         return _NATIVE
     _NATIVE_TRIED = True
-    import os
-
-    if os.environ.get("TIPOCA_JPEG_PURE_PYTHON"):
-        return None
     try:
         import ctypes
         import hashlib
+        import os
         import subprocess
 
-        # -ffp-contract=off: the IDCT/color units' bit-exactness with the
-        # numpy chain depends on no FMA regrouping; -fno-math-errno lets
-        # rint() inline to a rounding instruction; x86-64-v3 (AVX2 —
-        # same IEEE semantics, contraction still off) is attempted first
-        # and dropped on compilers/targets that reject it. Flags ride the
-        # cache key so a flag change can never load a stale binary.
-        base_flags = ["-O3", "-ffp-contract=off", "-fno-math-errno"]
-        flag_sets = [base_flags + ["-march=x86-64-v3"], base_flags]
+        # flags ride the cache key so a flag change can never load a
+        # stale binary
+        flags = ["-O3"]
         h = hashlib.sha1(
-            (_ENTROPY_C + " | ".join(" ".join(fs) for fs in flag_sets)).encode()
+            (_ENTROPY_C + " | " + " ".join(flags)).encode()
         ).hexdigest()[:12]
         cache = _so_cache_dir(h)
         so = os.path.join(cache, "jpeg_entropy.so")
@@ -1731,93 +383,16 @@ def _native_lib():
             with open(cpath, "w") as f:
                 f.write(_ENTROPY_C)
             tmp_so = f"{so}.{os.getpid()}"
-            for i, flags in enumerate(flag_sets):
-                try:
-                    subprocess.run(
-                        ["cc", *flags, "-shared", "-fPIC", "-o", tmp_so,
-                         cpath, "-lm"],
-                        check=True,
-                        capture_output=True,
-                        timeout=120,
-                    )
-                    break
-                except subprocess.CalledProcessError:
-                    if i == len(flag_sets) - 1:
-                        raise
+            subprocess.run(
+                ["cc", *flags, "-shared", "-fPIC", "-o", tmp_so, cpath],
+                check=True,
+                capture_output=True,
+                timeout=120,
+            )
             os.chmod(tmp_so, 0o600)
             os.replace(tmp_so, so)
         _verify_private_file(so)
         lib = ctypes.CDLL(so)
-        scan = lib.jpeg_decode_scan_segment
-        scan.restype = ctypes.c_int
-        scan.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.c_int,
-        ] + [ctypes.c_void_p] * 8
-        prog = lib.jpeg_decode_prog_segment
-        prog.restype = ctypes.c_int
-        prog.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.c_int,
-            ctypes.c_void_p,  # trip int32*
-            ctypes.c_void_p,  # grid_ptrs int64**
-            ctypes.c_void_p,  # gb_w int32*
-            ctypes.c_void_p,  # dc_sym
-            ctypes.c_void_p,  # dc_len
-            ctypes.c_void_p,  # ac_sym
-            ctypes.c_void_p,  # ac_len
-            ctypes.c_int,  # ss
-            ctypes.c_int,  # se
-            ctypes.c_int,  # ah
-            ctypes.c_int,  # al
-            ctypes.c_void_p,  # pred int64*
-        ]
-        scan_batch = lib.jpeg_decode_scan_batch
-        scan_batch.restype = ctypes.c_int
-        scan_batch.argtypes = [
-            ctypes.c_char_p,  # concatenated destuffed segments
-            ctypes.c_void_p,  # offsets int64[n_segs+1]
-            ctypes.c_long,  # n_segs
-            ctypes.c_long,  # n_mcus
-            ctypes.c_long,  # restart_interval
-            ctypes.c_int,  # nunits
-        ] + [ctypes.c_void_p] * 7
-        fused = lib.jpeg_decode_scan_fused
-        fused.restype = ctypes.c_int
-        fused.argtypes = (
-            [ctypes.c_char_p, ctypes.c_void_p, ctypes.c_long,
-             ctypes.c_long, ctypes.c_long, ctypes.c_int]
-            + [ctypes.c_void_p] * 11  # cou, unit_block, 4 tables, quant,
-                                      # vi, hi, plane_ptrs, plane_w
-            + [ctypes.c_void_p, ctypes.c_double, ctypes.c_double,
-               ctypes.c_long]  # basis, center, top, mcus_x
-        )
-        idct = lib.jpeg_idct_plane
-        idct.restype = ctypes.c_int
-        idct.argtypes = [
-            ctypes.c_void_p,  # blocks int64*
-            ctypes.c_long,  # n_blocks
-            ctypes.c_void_p,  # basis double[64]
-            ctypes.c_void_p,  # quant double[64] or NULL
-            ctypes.c_double,  # center
-            ctypes.c_double,  # top
-            ctypes.c_long,  # mcus_y
-            ctypes.c_long,  # mcus_x
-            ctypes.c_int,  # vi
-            ctypes.c_int,  # hi
-            ctypes.c_void_p,  # plane uint16*
-        ]
-        rgb = lib.jpeg_ycbcr_to_rgb
-        rgb.restype = ctypes.c_int
-        rgb.argtypes = (
-            [ctypes.c_void_p, ctypes.c_long, ctypes.c_int, ctypes.c_int] * 3
-            + [ctypes.c_long, ctypes.c_long, ctypes.c_double, ctypes.c_double]
-            + [ctypes.c_void_p]
-        )
         unfilter = lib.png_unfilter
         unfilter.restype = ctypes.c_int
         unfilter.argtypes = [
@@ -1852,59 +427,24 @@ def _native_lib():
             ctypes.c_void_p,  # out uint8[max_pixels + 4097]
             ctypes.c_void_p,  # n_out long*
         ]
-        bheaders = lib.jpeg_batch_headers
-        bheaders.restype = ctypes.c_int
-        bheaders.argtypes = [
-            ctypes.c_char_p,  # concatenated payloads
-            ctypes.c_void_p,  # offsets int64[n+1]
-            ctypes.c_long,  # n images
-            ctypes.c_void_p,  # dims int64[n*3] out
-            ctypes.c_void_p,  # status int32[n] out
-        ]
-        bdecode = lib.jpeg_decode_baseline_batch
-        bdecode.restype = ctypes.c_int
-        bdecode.argtypes = [
-            ctypes.c_char_p,  # concatenated payloads
-            ctypes.c_void_p,  # offsets int64[n+1]
-            ctypes.c_long,  # n images
-            ctypes.c_void_p,  # basis double[64]
-            ctypes.c_void_p,  # outs uint8*[n]
-            ctypes.c_void_p,  # status int32[n] in/out
-        ]
         _NATIVE = {
-            "scan": scan, "scan_batch": scan_batch, "fused": fused,
-            "prog": prog, "idct": idct, "rgb": rgb,
-            "png_unfilter": unfilter, "gif_lzw": lzw,
-            "lossless": lossless,
-            "batch_headers": bheaders, "batch_decode": bdecode,
+            "png_unfilter": unfilter, "gif_lzw": lzw, "lossless": lossless,
         }
     except Exception:
         _NATIVE = None
     return _NATIVE
 
 
-def _native_entropy():
-    lib = _native_lib()
-    return lib["scan"] if lib else None
-
-
-def _native_entropy_prog():
-    lib = _native_lib()
-    return lib["prog"] if lib else None
-
-
 class _HuffTable:
     """Canonical Huffman table (T.81 Annex C) compiled to a 16-bit-peek
     lookup: ``lut_sym[peek16]``/``lut_len[peek16]`` give the decoded
-    symbol and its code length in ONE list index each, replacing the
-    old bit-at-a-time walk (≤16 read_bit calls + dict probes per
-    symbol) that was the decoder's per-symbol floor (VERDICT r8 wrong
-    #1). Every 16-bit word whose prefix is code c maps to c's symbol —
-    the standard table-driven multi-bit decode every fast JPEG decoder
-    uses (public technique; max code length 16 makes the table exactly
-    2^16 entries). ``lut_len`` 0 marks an invalid prefix. Plain Python
-    lists beat numpy here: single-element list indexing is ~2× faster
-    than numpy scalar indexing in the interpreter loop."""
+    symbol and its code length in ONE list index each. Every 16-bit word
+    whose prefix is code c maps to c's symbol — the standard
+    table-driven multi-bit decode every fast JPEG decoder uses (public
+    technique; max code length 16 makes the table exactly 2^16 entries).
+    ``lut_len`` 0 marks an invalid prefix. Plain Python lists beat numpy
+    here: single-element list indexing is ~2× faster than numpy scalar
+    indexing in the interpreter loop."""
 
     __slots__ = ("lut_sym", "lut_len", "_np")
 
@@ -1938,61 +478,18 @@ class _HuffTable:
 
 
 _HUFF_CACHE: dict = {}
-_ZERO_LUT = None  # (sym int16[65536] zeros, len uint8[65536] zeros)
-
-
-def _huff_ptr_tables(sel, huff, ncomp):
-    """Per-component LUT POINTER arrays for the C decoders (round 10b):
-    the flat (ncomp, 65536) table copies cost ~1.5 MB of allocation +
-    memcpy per scan — more than the progressive entropy decode itself —
-    so the C side now takes per-component pointers into the cached
-    np_tables() views directly, zero copies.  Components a scan does
-    not cover (or whose table class is absent) point at an all-zero
-    LUT row: its len[peek] == 0 makes any accidental dereference fail
-    with the same "invalid Huffman code" the flat layout produced.
-    Returns (dc_sym, dc_len, ac_sym, ac_len) c_void_p arrays plus a
-    keepalive list the caller must hold across the C call."""
-    import ctypes
-
-    import numpy as np
-
-    global _ZERO_LUT
-    if _ZERO_LUT is None:
-        _ZERO_LUT = (
-            np.zeros(65536, np.int16),
-            np.zeros(65536, np.uint8),
-        )
-    zsym, zlen = _ZERO_LUT
-    arrs = [(ctypes.c_void_p * ncomp)() for _ in range(4)]
-    dc_s, dc_l, ac_s, ac_l = arrs
-    for ci in range(ncomp):
-        dc_s[ci] = ac_s[ci] = zsym.ctypes.data
-        dc_l[ci] = ac_l[ci] = zlen.ctypes.data
-    keep = [zsym, zlen]
-    for ci, dc_id, ac_id in sel:
-        t = huff.get((0, dc_id))
-        if t is not None:
-            s, ln = t.np_tables()
-            dc_s[ci], dc_l[ci] = s.ctypes.data, ln.ctypes.data
-            keep += [s, ln]
-        t = huff.get((1, ac_id))
-        if t is not None:
-            s, ln = t.np_tables()
-            ac_s[ci], ac_l[ci] = s.ctypes.data, ln.ctypes.data
-            keep += [s, ln]
-    return dc_s, dc_l, ac_s, ac_l, keep
 
 
 def _build_huffman(counts, symbols):
     """DHT counts/symbols → LUT decode table (see _HuffTable), cached by
-    table CONTENT (round-10 profile: building the 2^16-entry LUT plus its
-    numpy view cost ~17 ms of a 53 ms decode, per image — and corpus
-    images overwhelmingly reuse the handful of standard Annex-K tables).
-    _HuffTable is immutable after construction (lut lists written only in
-    __init__, np view built once), so sharing across decodes — and across
-    mapInPandas rows in one executor — is safe. Bounded: cleared wholesale
-    past 64 distinct tables (a corpus with unbounded distinct DHTs would
-    otherwise grow the worker resident set)."""
+    table CONTENT: building the 2^16-entry LUT plus its numpy view costs
+    more than decoding a small image, and the data-plane encoder emits
+    the same few tables over and over. _HuffTable is immutable after
+    construction (lut lists written only in __init__, np view built
+    once), so sharing across decodes — and across mapInPandas rows in one
+    executor — is safe. Bounded: cleared wholesale past 64 distinct
+    tables (a corpus with unbounded distinct DHTs would otherwise grow
+    the worker resident set)."""
     key = (bytes(counts), bytes(symbols))
     t = _HUFF_CACHE.get(key)
     if t is None:
@@ -2033,12 +530,6 @@ class _BitReader:
             self._fill(16)
         return (self.acc >> (self.nbits - 16)) & 0xFFFF
 
-    def read_bit(self) -> int:
-        if self.nbits < 1:
-            self._fill(1)
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
     def read_bits(self, n: int) -> int:
         if n == 0:
             return 0
@@ -2062,29 +553,6 @@ def _extend(v: int, s: int) -> int:
     return v - ((1 << s) - 1) if v < (1 << (s - 1)) else v
 
 
-def _parse_dqt(body: bytes, qt: dict) -> None:
-    """DQT segment → raster-order 64-int tables keyed by table id."""
-    i = 0
-    while i < len(body):
-        pq, tq = body[i] >> 4, body[i] & 0x0F
-        i += 1
-        if pq == 0:
-            vals = list(body[i : i + 64])
-            i += 64
-        else:
-            vals = [
-                int.from_bytes(body[i + 2 * k : i + 2 * k + 2], "big")
-                for k in range(64)
-            ]
-            i += 128
-        if len(vals) < 64:
-            raise ValueError("truncated DQT")
-        raster = [0] * 64
-        for z, v in enumerate(vals):
-            raster[_ZIGZAG[z]] = v
-        qt[tq] = raster
-
-
 def _parse_dht(body: bytes, huff: dict) -> None:
     """DHT segment → decode tables keyed by (class, id)."""
     i = 0
@@ -2097,190 +565,6 @@ def _parse_dht(body: bytes, huff: dict) -> None:
             raise ValueError("truncated DHT")
         huff[(tc, th)] = _build_huffman(counts, symbols)
         i += 17 + total
-
-
-_IDCT_BASIS_NP = None
-
-
-def _idct_basis_c():
-    """The C unit's view of the SAME basis matrix the numpy path uses —
-    one shared array, so the two IDCT implementations can never disagree
-    on a coefficient."""
-    global _IDCT_BASIS_NP
-    if _IDCT_BASIS_NP is None:
-        import numpy as np
-
-        _IDCT_BASIS_NP = np.ascontiguousarray(_idct_basis())
-    return _IDCT_BASIS_NP
-
-
-def _native_assemble(
-    blocks, quants, comps, h, w, precision, mcus_x, mcus_y, hmax, vmax,
-    layout="mcu",
-):
-    """Coefficient blocks → final image through the compiled
-    jpeg_idct_plane + jpeg_ycbcr_to_rgb units (bit-exact with the numpy
-    chain — see the C comments). ``blocks``: per-component int64
-    (n_blocks, 64) arrays; ``quants``: per-component float64[64] for the
-    progressive raster grids (None = already dequantized, the sequential
-    scan output); ``layout``: "mcu" (interleaved decode order) or
-    "raster" (progressive grids). Returns None when the native lib is
-    absent or the component count is unsupported — callers fall through
-    to the numpy path."""
-    import numpy as np
-
-    lib = _native_lib()
-    if lib is None or len(comps) not in (1, 3):
-        return None
-    idct, rgb = lib["idct"], lib["rgb"]
-    center = float(1 << (precision - 1))
-    top = float((1 << precision) - 1)
-    pdtype = np.uint8 if precision <= 8 else np.uint16
-    planes, ratios = [], []
-    for ci, (_, hi, vi, _) in enumerate(comps):
-        b = np.ascontiguousarray(blocks[ci])
-        if layout == "mcu":
-            gy, gx, vv, hh = mcus_y, mcus_x, vi, hi
-        else:
-            gy, gx, vv, hh = mcus_y * vi, mcus_x * hi, 1, 1
-        plane = np.zeros((gy * vv * 8, gx * hh * 8), np.uint16)
-        q = None if quants is None else np.ascontiguousarray(quants[ci])
-        rc = idct(
-            b.ctypes.data, b.shape[0], _idct_basis_c().ctypes.data,
-            None if q is None else q.ctypes.data,
-            center, top, gy, gx, vv, hh, plane.ctypes.data,
-        )
-        if rc != 0:
-            return None
-        planes.append(plane)
-        ratios.append((vmax // vi, hmax // hi))
-    return _finish_planes_native(planes, ratios, h, w, precision)
-
-
-def _finish_planes_native(planes, ratios, h, w, precision):
-    """uint16 component planes (+ their upsample ratios) → final image
-    via the compiled color unit — the shared tail of the two-pass and
-    fused native paths. None = unsupported shape, caller falls back."""
-    import numpy as np
-
-    lib = _native_lib()
-    if lib is None:
-        return None
-    pdtype = np.uint8 if precision <= 8 else np.uint16
-    center = float(1 << (precision - 1))
-    top = float((1 << precision) - 1)
-    if len(planes) == 1:
-        return planes[0][:h, :w][:, :, None].astype(pdtype, copy=True)
-    # the C color unit takes the upsample ratios as LOG2 shifts (JPEG
-    # sampling ratios are powers of two in practice; anything else —
-    # e.g. a malformed 3:1 — falls back to the numpy chain)
-    if len(planes) != 3 or any(r & (r - 1) for pair in ratios for r in pair):
-        return None
-    out = np.zeros((h, w, 3), np.uint16)
-    args: list = []
-    for plane, (ry, rx) in zip(planes, ratios):
-        args += [
-            plane.ctypes.data, plane.shape[1],
-            ry.bit_length() - 1, rx.bit_length() - 1,
-        ]
-    lib["rgb"](*args, h, w, center, top, out.ctypes.data)
-    return out.astype(pdtype)
-
-
-def _decode_sequential_native(
-    segments, sel, comps, qt, huff, n_mcus, restart_interval,
-    mcus_x, mcus_y, hmax, vmax, h, w, precision,
-):
-    """The FUSED native sequential decode: one C call walks every
-    restart segment, entropy-decodes each data unit, and IDCTs it into
-    its component plane while hot in cache (the two-pass form
-    materialized a ~3 MB coefficient buffer between the scan and the
-    IDCT); the compiled color unit finishes. Returns the image, or None
-    for shapes the fused path doesn't take (caller falls back to the
-    two-pass native path, then numpy)."""
-    import ctypes
-
-    import numpy as np
-
-    lib = _native_lib()
-    ncomp = len(comps)
-    if lib is None or ncomp > 16 or ncomp not in (1, 3):
-        return None
-    comp_of_unit: list[int] = []
-    unit_block: list[int] = []
-    for ci, dc_id, ac_id in sel:
-        if comps[ci][3] not in qt:
-            raise ValueError("missing quantization table")
-        if (0, dc_id) not in huff or (1, ac_id) not in huff:
-            raise ValueError("missing Huffman table")
-        n_units_ci = comps[ci][1] * comps[ci][2]
-        comp_of_unit += [ci] * n_units_ci
-        unit_block += list(range(n_units_ci))
-    nunits = len(comp_of_unit)
-    cou = np.asarray(comp_of_unit, dtype=np.int32)
-    ub = np.asarray(unit_block, dtype=np.int32)
-    dc_s, dc_l, ac_s, ac_l, keep = _huff_ptr_tables(sel, huff, ncomp)
-    quant = np.zeros((ncomp, 64), np.int32)
-    for ci, dc_id, ac_id in sel:
-        quant[ci] = qt[comps[ci][3]]
-    vi_arr = np.asarray([c[2] for c in comps], np.int32)
-    hi_arr = np.asarray([c[1] for c in comps], np.int32)
-    planes = [
-        np.zeros((mcus_y * c[2] * 8, mcus_x * c[1] * 8), np.uint16)
-        for c in comps
-    ]
-    plane_ptrs = (ctypes.c_void_p * ncomp)(*[p.ctypes.data for p in planes])
-    plane_w = np.asarray([p.shape[1] for p in planes], np.int64)
-    center = float(1 << (precision - 1))
-    top = float((1 << precision) - 1)
-    blob = b"".join(segments)
-    offs = np.zeros(len(segments) + 1, np.int64)
-    offs[1:] = np.cumsum([len(s) for s in segments])
-    rc = lib["fused"](
-        blob, offs.ctypes.data, len(segments), n_mcus, restart_interval or 0,
-        nunits, cou.ctypes.data, ub.ctypes.data,
-        ctypes.addressof(dc_s), ctypes.addressof(dc_l),
-        ctypes.addressof(ac_s), ctypes.addressof(ac_l), quant.ctypes.data,
-        vi_arr.ctypes.data, hi_arr.ctypes.data,
-        ctypes.addressof(plane_ptrs), plane_w.ctypes.data,
-        _idct_basis_c().ctypes.data, center, top, mcus_x,
-    )
-    if rc == -1:
-        raise ValueError("invalid JPEG Huffman code")
-    if rc == -2:
-        raise ValueError("JPEG AC run past block end")
-    if rc == -5:
-        raise ValueError("missing JPEG restart segment")
-    ratios = [(vmax // c[2], hmax // c[1]) for c in comps]
-    return _finish_planes_native(planes, ratios, h, w, precision)
-
-
-def _planes_to_image(out_planes, precision: int = 8):
-    """Component planes → (h, w, c) array (shared by the baseline and
-    progressive paths so the color contract cannot diverge). 8-bit
-    frames come back uint8; 12-bit extended-sequential frames uint16
-    with the YCbCr chroma center / clamp scaled to the precision
-    (2^(P-1) / 2^P - 1 per T.81 A.3.1)."""
-    import numpy as np
-
-    dtype = np.uint8 if precision <= 8 else np.uint16
-    if len(out_planes) == 1:
-        return out_planes[0][:, :, None].astype(dtype, copy=True)
-    if len(out_planes) == 3:
-        center = float(1 << (precision - 1))
-        top = float((1 << precision) - 1)
-        y = out_planes[0].astype(np.float64)
-        cb = out_planes[1].astype(np.float64) - center
-        cr = out_planes[2].astype(np.float64) - center
-        # BT.601 (JFIF) conversion.
-        r = y + 1.402 * cr
-        g = y - 0.344136 * cb - 0.714136 * cr
-        b = y + 1.772 * cb
-        rgb = np.stack([r, g, b], axis=-1)
-        return np.clip(np.rint(rgb), 0, top).astype(dtype)
-    raise NotImplementedError(
-        f"{len(out_planes)}-component JPEG (CMYK/YCCK) not supported"
-    )
 
 
 def _split_entropy_segments(payload: bytes, pos: int):
@@ -2318,179 +602,39 @@ def _split_entropy_segments(payload: bytes, pos: int):
     return segments, pos
 
 
-def _entropy_decode_native(native, segments, sel, comps, qt, huff, n_mcus,
-                           restart_interval):
-    """Drive the compiled scan decoder over the destuffed segments:
-    same restart handling (predictor reset, segment advance) as the
-    Python loop, tables flattened to per-component LUT rows. Returns
-    per-component (n_blocks, 64) int64 arrays of dequantized
-    raster-order coefficients, in the exact block order the Python
-    loop emits."""
-    import numpy as np
-
-    ncomp = len(comps)
-    comp_of_unit: list[int] = []
-    for ci, dc_id, ac_id in sel:
-        if comps[ci][3] not in qt:
-            raise ValueError("missing quantization table")
-        if (0, dc_id) not in huff or (1, ac_id) not in huff:
-            raise ValueError("missing Huffman table")
-        comp_of_unit += [ci] * (comps[ci][1] * comps[ci][2])
-    nunits = len(comp_of_unit)
-    cou = np.asarray(comp_of_unit, dtype=np.int32)
-    import ctypes
-
-    dc_s, dc_l, ac_s, ac_l, keep = _huff_ptr_tables(sel, huff, ncomp)
-    quant = np.zeros((ncomp, 64), np.int32)
-    for ci, dc_id, ac_id in sel:
-        quant[ci] = qt[comps[ci][3]]
-    # int64 out/pred (ADVICE r9): malformed 12-bit streams can overflow
-    # int32 in the C path while the unbounded-int Python path keeps
-    # going — int64 keeps the bit-identical contract on hostile input.
-    # The restart walk runs entirely in C (round 10): one ctypes call
-    # over the concatenated segments instead of one per RST interval —
-    # a restart-dense stream paid ~8 µs of interpreter + crossing per
-    # segment (the board fixture has ~490).
-    out = np.zeros((n_mcus * nunits, 64), np.int64)
-    if ncomp > 16:
-        # the C walk's predictor array is fixed at 16 components — far
-        # beyond T.81's Ns <= 4 interleaved-scan bound, but a malformed
-        # frame must hit the Python path, not scribble past the array
-        raise NotImplementedError("more than 16 scan components")
-    blob = b"".join(segments)
-    offs = np.zeros(len(segments) + 1, np.int64)
-    offs[1:] = np.cumsum([len(s) for s in segments])
-    rc = _native_lib()["scan_batch"](
-        blob,
-        offs.ctypes.data,
-        len(segments),
-        n_mcus,
-        restart_interval or 0,
-        nunits,
-        cou.ctypes.data,
-        ctypes.addressof(dc_s),
-        ctypes.addressof(dc_l),
-        ctypes.addressof(ac_s),
-        ctypes.addressof(ac_l),
-        quant.ctypes.data,
-        out.ctypes.data,
-    )
-    if rc == -1:
-        raise ValueError("invalid JPEG Huffman code")
-    if rc == -2:
-        raise ValueError("JPEG AC run past block end")
-    if rc == -5:
-        raise ValueError("missing JPEG restart segment")
-    # per-component split: unit indices within an MCU are CONTIGUOUS
-    # ranges in sel order (comp_of_unit appends ci hi*vi times per
-    # component), so a strided slice-copy replaces the boolean-mask
-    # fancy indexing (~3.6 ms on the board fixture)
-    out3 = out.reshape(n_mcus, nunits, 64)
-    by_ci: dict = {}
-    start = 0
-    for ci, _, _ in sel:
-        cnt = comps[ci][1] * comps[ci][2]
-        by_ci[ci] = out3[:, start : start + cnt, :].reshape(-1, 64)
-        start += cnt
-    return [by_ci[ci] for ci in range(ncomp)]
-
-
-# up-front allocation caps for the batch path: per-image samples (128 MiB
-# at uint8) and whole-batch samples (1 GiB) — large enough that no real
-# corpus image hits them, small enough that crafted headers cannot force
-# multi-GB empties before scan-data validation
-_IMAGE_PIXEL_CAP = 1 << 27
-_BATCH_PIXEL_BUDGET = 1 << 30
-
-
-def decode_jpeg_batch(payloads):
-    """Decode a sequence of JPEG payloads with (at most) TWO ctypes
-    crossings for the whole batch (round 11, VERDICT r10 next #3): one
-    C pass reads every header so outputs can be allocated, a second
-    parses tables, destuffs, entropy-decodes + IDCTs (the fused unit)
-    and color-converts straight into the caller-owned uint8 arrays —
-    no per-image Python staging, no uint16 astype copy, and Huffman
-    LUTs cached across images by table content (corpus images
-    overwhelmingly share the Annex-K tables).
-
-    Semantics are exactly ``decode_jpeg`` per payload: any image the C
-    batch path does not take (progressive/lossless/arithmetic/12-bit,
-    2- or 4-component, malformed, or not a JPEG at all) falls back to
-    ``decode_jpeg`` individually — same arrays, same exceptions, same
-    None for non-JPEG. Parity is pinned both ways in
-    tests/test_imagecodec.py."""
-    import ctypes
-
-    import numpy as np
-
-    payloads = list(payloads)
-    n = len(payloads)
-    lib = _native_lib()
-    if n == 0:
-        return []
-    if lib is None or "batch_headers" not in lib:
-        return [decode_jpeg(p) for p in payloads]
-    blob = b"".join(payloads)
-    offs = np.zeros(n + 1, np.int64)
-    offs[1:] = np.cumsum([len(p) for p in payloads])
-    dims = np.zeros(n * 3, np.int64)
-    status = np.zeros(n, np.int32)
-    lib["batch_headers"](
-        blob, offs.ctypes.data, n, dims.ctypes.data, status.ctypes.data
-    )
-    outs: list = [None] * n
-    ptrs = (ctypes.c_void_p * n)()
-    # allocation guard (ADVICE r11 #2): header dims are untrusted at this
-    # point — a batch of tiny crafted payloads each claiming 65535x65535x3
-    # would otherwise force ~13 GB per image allocated up front, N at
-    # once. Oversized images fall back to the one-at-a-time decode_jpeg
-    # path (status=1), which allocates per image only after it has begun
-    # really decoding — same result for any payload that actually carries
-    # that many pixels, no N-at-once amplification for ones that don't.
-    budget = _BATCH_PIXEL_BUDGET
-    for i in range(n):
-        if status[i] == 0:
-            h, w, c = (int(dims[3 * i]), int(dims[3 * i + 1]),
-                       int(dims[3 * i + 2]))
-            px = h * w * c
-            if px > _IMAGE_PIXEL_CAP or px > budget:
-                status[i] = 1
-                continue
-            budget -= px
-            a = np.empty((h, w, c), np.uint8)
-            outs[i] = a
-            ptrs[i] = a.ctypes.data
-    lib["batch_decode"](
-        blob, offs.ctypes.data, n, _idct_basis_c().ctypes.data,
-        ctypes.addressof(ptrs), status.ctypes.data,
-    )
-    return [
-        outs[i] if status[i] == 0 else decode_jpeg(payloads[i])
-        for i in range(n)
-    ]
-
-
 def decode_jpeg(payload: bytes):
-    """Baseline, extended-sequential (8/12-bit), progressive, or
-    lossless JPEG -> (h, w, channels) array, or None if not a JPEG.
-    8-bit frames return uint8; 12-bit DCT and 9-16-bit lossless frames
-    return uint16.
+    """Lossless sequential JPEG (SOF3, Huffman) -> (h, w, ncomp) array, or
+    None if the payload is not a JPEG.
 
-    Progressive streams (SOF2) dispatch to the multi-scan decoder;
-    lossless streams (SOF3) to the predictive decoder. Raises
-    NotImplementedError for the remaining processes (arithmetic /
-    hierarchical) and ValueError for corrupt streams.
+    Full T.81 Annex H decode: predictors 1-7 (scan header Ss selects),
+    point transform (Al = Pt; decoded values are scaled back by 2^Pt per
+    A.4.1), sample precision 2-16 bits (uint8 out for P <= 8, uint16
+    above), the SSSS = 16 "diff is 32768" escape, and restart markers
+    when the restart interval is line-aligned (each interval restarts
+    prediction exactly like a new scan, so intervals stay independently
+    decodable; non-line-aligned intervals would let Rb reach across a
+    restart boundary and are refused — NotImplementedError).
+
+    Components come back EXACTLY as stored — no YCbCr transform, no
+    level shift — because lossless JPEG carries source samples verbatim
+    (there is no JFIF color contract for process 14); this is what makes
+    the encode->decode round trip bit-exact and therefore checkable by a
+    plain SQL oracle (see multimodal.pixel_roundtrip_stats).
+
+    Sampling factors other than 1x1 (multi-resolution interleave) raise
+    NotImplementedError — real lossless streams (DNG tiles, DICOM
+    MONOCHROME) are 1x1. So does every other SOF (DCT, arithmetic,
+    hierarchical). A truncated or corrupt stream raises ValueError.
     """
     import numpy as np
 
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         return None
 
-    qt = {}  # id -> raster-order int table (64,)
-    huff = {}  # (class, id) -> {(len, code): symbol}
-    frame = None  # (h, w, [(comp_id, hi, vi, tq)])
+    huff: dict = {}
+    frame = None  # (h, w, [comp_id], precision)
     restart_interval = 0
-    scan = None  # ([(comp_index, dc_table, ac_table)], entropy_pos)
+    scan = None  # ([(comp_index, dc_table)], predictor, pt, entropy_pos)
 
     pos = 2
     n = len(payload)
@@ -2511,236 +655,7 @@ def decode_jpeg(payload: bytes):
         if len(body) != seg_len - 2:
             raise ValueError("truncated JPEG segment")
         pos += seg_len
-        if marker == 0xDB:  # DQT
-            _parse_dqt(body, qt)
-        elif marker == 0xC4:  # DHT
-            _parse_dht(body, huff)
-        elif marker == _SOF_PROGRESSIVE:
-            # progressive DCT: its own multi-scan decode loop
-            return _decode_jpeg_progressive(payload)
-        elif marker == _SOF_LOSSLESS:
-            # lossless sequential: its own predictive decode loop
-            return _decode_jpeg_lossless(payload)
-        elif marker == _SOF_ARITH_SEQ:
-            # arithmetic sequential: QM-coder entropy layer
-            return _decode_jpeg_arith_sequential(payload)
-        elif marker == _SOF_ARITH_PROGRESSIVE:
-            return _decode_jpeg_arith_progressive(payload)
-        elif marker in _SOF_BASELINE:
-            precision = body[0]
-            # T.81 B.2.2: SOF0 is 8-bit only; SOF1 (extended sequential)
-            # allows 8 or 12.
-            if precision != 8 and not (marker == 0xC1 and precision == 12):
-                raise NotImplementedError(f"{precision}-bit JPEG not supported")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-            frame = (h, w, comps, precision)
-        elif marker in _SOF_UNSUPPORTED:
-            raise NotImplementedError(
-                f"JPEG process not supported: {_SOF_UNSUPPORTED[marker]} "
-                "(baseline sequential only)"
-            )
-        elif marker == 0xDD:  # DRI
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            sel = []
-            comp_ids = [c[0] for c in frame[2]]
-            for s in range(ns):
-                cs, tables = body[1 + 2 * s : 3 + 2 * s]
-                if cs not in comp_ids:
-                    raise ValueError("SOS references unknown component")
-                sel.append((comp_ids.index(cs), tables >> 4, tables & 0x0F))
-            scan = (sel, pos)
-            break
-        # else: APPn / COM / others — skipped via seg_len
-
-    if frame is None or scan is None:
-        raise ValueError("truncated JPEG: no frame/scan data")
-
-    h, w, comps, precision = frame
-    if h == 0 or w == 0:
-        raise ValueError("zero-dimension JPEG frame")
-    sel, entropy_pos = scan
-    if len(sel) != len(comps):
-        raise NotImplementedError("multi-scan (non-interleaved) JPEG")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    for _, hi, vi, _ in comps:
-        if hi == 0 or vi == 0 or hmax % hi or vmax % vi:
-            raise ValueError("unsupported JPEG sampling factors")
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    n_mcus = mcus_x * mcus_y
-
-    segments, _ = _split_entropy_segments(payload, entropy_pos)
-    native = _native_entropy()
-    # len(comps) <= 16: the C walk's predictor array bound (T.81 itself
-    # caps interleaved scans at Ns <= 4); wider malformed frames decode
-    # through the pure path
-    if native is not None and len(comps) <= 16:
-        img = _decode_sequential_native(
-            segments, sel, comps, qt, huff, n_mcus, restart_interval,
-            mcus_x, mcus_y, hmax, vmax, h, w, precision,
-        )
-        if img is not None:
-            return img
-        return _blocks_to_image(
-            _entropy_decode_native(
-                native, segments, sel, comps, qt, huff, n_mcus,
-                restart_interval,
-            ),
-            comps, h, w, precision, mcus_x, mcus_y, hmax, vmax,
-        )
-    # blocks[i]: list of 64-int coefficient rows for component i, in MCU
-    # scan order (vi*hi blocks per MCU, row-major within the MCU).
-    blocks = [[] for _ in comps]
-    pred = [0] * len(comps)
-    seg_idx = 0
-    reader = _BitReader(segments[0])
-    for mcu in range(n_mcus):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("missing JPEG restart segment")
-            reader = _BitReader(segments[seg_idx])
-            pred = [0] * len(comps)
-        for ci, dc_id, ac_id in sel:
-            _, hi, vi, tq = comps[ci]
-            if tq not in qt:
-                raise ValueError("missing quantization table")
-            try:
-                dc_tab = huff[(0, dc_id)]
-                ac_tab = huff[(1, ac_id)]
-            except KeyError:
-                raise ValueError("missing Huffman table") from None
-            q = qt[tq]
-            for _ in range(hi * vi):
-                coef = [0] * 64
-                s = _decode_symbol(reader, dc_tab)
-                diff = _extend(reader.read_bits(s), s) if s else 0
-                pred[ci] += diff
-                coef[0] = pred[ci] * q[0]
-                k = 0
-                while k < 63:
-                    rs = _decode_symbol(reader, ac_tab)
-                    r, size = rs >> 4, rs & 0x0F
-                    if size == 0:
-                        if r == 15:  # ZRL: skip 16 zeros
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += r + 1
-                    if k > 63:
-                        raise ValueError("JPEG AC run past block end")
-                    zz = _ZIGZAG[k]
-                    coef[zz] = _extend(reader.read_bits(size), size) * q[zz]
-                blocks[ci].append(coef)
-
-    return _blocks_to_image(
-        blocks, comps, h, w, precision, mcus_x, mcus_y, hmax, vmax
-    )
-
-
-def _blocks_to_image(blocks, comps, h, w, precision, mcus_x, mcus_y, hmax, vmax):
-    """Dequantized MCU-ordered coefficient blocks → image (shared IDCT +
-    plane assembly for the Huffman and arithmetic sequential decoders, so
-    the two entropy layers cannot diverge downstream). int64 block arrays
-    (the native entropy path's output) take the compiled
-    IDCT+assemble+color path — validated bit-exact with the numpy chain
-    below; lists (the pure-Python and arithmetic decoders) take numpy."""
-    import numpy as np
-
-    if all(isinstance(b, np.ndarray) and b.dtype == np.int64 for b in blocks):
-        img = _native_assemble(
-            blocks, None, comps, h, w, precision, mcus_x, mcus_y, hmax, vmax,
-            layout="mcu",
-        )
-        if img is not None:
-            return img
-    a = _idct_basis()
-    center = float(1 << (precision - 1))
-    top = float((1 << precision) - 1)
-    pdtype = np.uint8 if precision <= 8 else np.uint16
-    out_planes = []
-    for ci, (_, hi, vi, _) in enumerate(comps):
-        arr = np.asarray(blocks[ci], dtype=np.float64).reshape(-1, 8, 8)
-        spatial = _idct_blocks(arr, a) + center
-        spatial = np.clip(np.rint(spatial), 0, top).astype(pdtype)
-        # Reassemble MCU-ordered blocks into the component plane: pure
-        # index permutation (MCU-major block order → row-major pixels),
-        # one reshape/transpose instead of a per-block Python loop.
-        plane = (
-            spatial.reshape(mcus_y, mcus_x, vi, hi, 8, 8)
-            .transpose(0, 2, 4, 1, 3, 5)
-            .reshape(mcus_y * vi * 8, mcus_x * hi * 8)
-        )
-        # Nearest-neighbor upsample to full resolution, then crop.
-        if vi != vmax:
-            plane = np.repeat(plane, vmax // vi, axis=0)
-        if hi != hmax:
-            plane = np.repeat(plane, hmax // hi, axis=1)
-        out_planes.append(plane[:h, :w])
-
-    return _planes_to_image(out_planes, precision)
-
-
-def _decode_jpeg_lossless(payload: bytes):
-    """Lossless sequential JPEG (SOF3, Huffman) -> (h, w, ncomp) array.
-
-    Full T.81 Annex H decode: predictors 1-7 (scan header Ss selects),
-    point transform (Al = Pt; decoded values are scaled back by 2^Pt per
-    A.4.1), sample precision 2-16 bits (uint8 out for P <= 8, uint16
-    above), the SSSS = 16 "diff is 32768" escape, and restart markers
-    when the restart interval is line-aligned (each interval restarts
-    prediction exactly like a new scan, so intervals stay independently
-    decodable; non-line-aligned intervals would let Rb reach across a
-    restart boundary and are refused — NotImplementedError).
-
-    Components come back EXACTLY as stored — no YCbCr transform, no
-    level shift — because lossless JPEG carries source samples verbatim
-    (there is no JFIF color contract for process 14); this is what makes
-    the encode->decode round trip bit-exact and therefore checkable by a
-    plain SQL oracle (see multimodal.pixel_roundtrip_stats).
-
-    Sampling factors other than 1x1 (multi-resolution interleave) raise
-    NotImplementedError — real lossless streams (DNG tiles, DICOM
-    MONOCHROME) are 1x1.
-    """
-    import numpy as np
-
-    huff: dict = {}
-    frame = None  # (h, w, [(comp_id, hi, vi)], precision)
-    restart_interval = 0
-    scan = None  # ([(comp_index, dc_table)], predictor, pt, entropy_pos)
-
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xFF:
-            pos -= 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        seg_len = int.from_bytes(payload[pos : pos + 2], "big")
-        body = payload[pos + 2 : pos + seg_len]
-        if len(body) != seg_len - 2:
-            raise ValueError("truncated JPEG segment")
-        pos += seg_len
-        if marker == 0xC4:
+        if marker == 0xC4:  # DHT
             _parse_dht(body, huff)
         elif marker == _SOF_LOSSLESS:
             precision = body[0]
@@ -2758,19 +673,14 @@ def _decode_jpeg_lossless(payload: bytes):
                     )
                 comps.append(cid)
             frame = (h, w, comps, precision)
-        elif marker in _SOF_BASELINE or marker in (
-            _SOF_PROGRESSIVE,
-            _SOF_ARITH_SEQ,
-            _SOF_ARITH_PROGRESSIVE,
-        ):
-            raise ValueError("mixed SOF in lossless stream")
         elif marker in _SOF_UNSUPPORTED:
             raise NotImplementedError(
-                f"JPEG process not supported: {_SOF_UNSUPPORTED[marker]}"
+                f"JPEG process not supported: {_SOF_UNSUPPORTED[marker]} "
+                "(lossless SOF3 only)"
             )
-        elif marker == 0xDD:
+        elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
+        elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
             ns = body[0]
@@ -2786,7 +696,7 @@ def _decode_jpeg_lossless(payload: bytes):
                 raise ValueError(f"invalid lossless predictor {ss}")
             scan = (sel, ss, ahal & 0x0F, pos)
             break
-        # else: APPn / COM — skipped
+        # else: APPn / COM / DQT — skipped via seg_len
 
     if frame is None or scan is None:
         raise ValueError("truncated JPEG: no frame/scan data")
@@ -2796,6 +706,8 @@ def _decode_jpeg_lossless(payload: bytes):
     sel, predictor, pt, entropy_pos = scan
     if len(sel) != len(comp_ids):
         raise NotImplementedError("multi-scan lossless JPEG")
+    if len({ci for ci, _ in sel}) != len(sel):
+        raise ValueError("SOS lists a component twice")
     if pt >= precision:
         raise ValueError("point transform >= sample precision")
 
@@ -2806,7 +718,9 @@ def _decode_jpeg_lossless(payload: bytes):
         raise NotImplementedError(
             "lossless restart interval must be a multiple of the line width"
         )
-    segments, _ = _split_entropy_segments(payload, entropy_pos)
+    segments, end = _split_entropy_segments(payload, entropy_pos)
+    if end >= n:
+        raise ValueError("truncated JPEG: scan data runs to end of stream")
 
     ncomp = len(comp_ids)
     tabs = []
@@ -2816,21 +730,22 @@ def _decode_jpeg_lossless(payload: bytes):
             raise ValueError("missing Huffman table")
         tabs.append(t)
     planes = [np.zeros((h, w), dtype=np.int64) for _ in range(ncomp)]
+    # an MCU holds its samples in scan-header order
+    scan_planes = [planes[ci] for ci, _ in sel]
 
     default_pred = 1 << (precision - pt - 1)
     rows_per_segment = (restart_interval // w) if restart_interval else h
     lib = _native_lib()
-    if lib is not None and ncomp <= 16:
-        # compiled per-sample walk (round 10b): the Python loop below is
-        # the decoder family's last per-pixel interpreter path — the C
-        # unit mirrors it exactly and is parity-pinned by the roundtrip
-        # suite plus a dedicated native-vs-pure test
+    if lib is not None:
+        # compiled per-sample walk: mirrors the Python loop below exactly,
+        # parity-pinned by a dedicated native-vs-pure test
         import ctypes
 
-        sel3 = [(ci, dc_id, 255) for ci, dc_id in sel]  # no AC tables
-        dc_s, dc_l, _ac_s, _ac_l, keep = _huff_ptr_tables(sel3, huff, ncomp)
+        luts = [t.np_tables() for t in tabs]
+        dc_s = (ctypes.c_void_p * ncomp)(*[s.ctypes.data for s, _ in luts])
+        dc_l = (ctypes.c_void_p * ncomp)(*[ln.ctypes.data for _, ln in luts])
         plane_ptrs = (ctypes.c_void_p * ncomp)(
-            *[p.ctypes.data for p in planes]
+            *[p.ctypes.data for p in scan_planes]
         )
         y0 = 0
         for seg in segments:
@@ -2862,9 +777,9 @@ def _decode_jpeg_lossless(payload: bytes):
             seg_first_row = y
         first_line = y == seg_first_row
         for x in range(w):
-            for ci in range(ncomp):
-                plane = planes[ci]
-                s = _decode_symbol(reader, tabs[ci])
+            for k in range(ncomp):
+                plane = scan_planes[k]
+                s = _decode_symbol(reader, tabs[k])
                 if s == 16:
                     diff = 32768  # H.1.2.2: coded without extra bits
                 elif s > 16:
@@ -2919,603 +834,6 @@ def _finish_lossless(planes, precision: int, pt: int):
     return out.astype(dtype)
 
 
-class _QMDecoder:
-    """QM-coder arithmetic decoder (T.81 Annex D, decoder procedures
-    DECODE / MPS_EXCHANGE / LPS_EXCHANGE / RENORM_D / BYTEIN with the
-    software register conventions).
-
-    Operates on a DESTUFFED entropy segment (0xFF00 → 0xFF, markers
-    stripped — `_split_entropy_segments` output): T.81 D.1.6 stuffs a
-    zero byte after every 0xFF exactly as Huffman coding does, so the
-    same destuffer serves both entropy layers. Past the end of the
-    segment (the encoder's flush discards trailing zero bytes) the
-    decoder feeds zero data, the interchange convention JPEG arithmetic
-    codecs use.
-
-    Context state is one byte per context bin — estimation-table index
-    in the low 7 bits, current MPS sense in bit 7 — held in caller-owned
-    bytearrays so statistics banks reset per restart interval is a
-    single reallocation.
-    """
-
-    __slots__ = ("data", "bp", "c", "a", "ct", "_fixed")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.bp = 0
-        # INITDEC: the first two entropy bytes fill Chigh (bits 16-31),
-        # CT=0 so the first renormalization immediately feeds the third
-        # byte; the full interval A is 2^16. Convention verified
-        # decision-exact against libjpeg-encoded streams (the register
-        # conventions in T.81's figures admit several equivalent
-        # layouts; this is the interoperable one).
-        self.c = (self._next_byte() << 24) | (self._next_byte() << 16)
-        self.ct = 0
-        self.a = 0x10000
-        # non-adaptive 1/2-probability state (Table D.3 entry 113)
-        self._fixed = bytearray([113])
-
-    def _next_byte(self) -> int:
-        if self.bp < len(self.data):
-            b = self.data[self.bp]
-            self.bp += 1
-            return b
-        return 0  # past the flushed tail: zero data
-
-    def _bytein(self) -> None:
-        self.c = (self.c + (self._next_byte() << 8)) & 0xFFFFFFFF
-        self.ct = 8
-
-    def decode(self, stats: bytearray, i: int) -> int:
-        sv = stats[i]
-        qe, nmps, nlps, sw = _ARITH_TABLE[sv & 0x7F]
-        mps = sv >> 7
-        # DECODE (D.2.2): the MPS subinterval [0, A-Qe) sits at the
-        # bottom of the code space, the LPS subinterval [A-Qe, A) on
-        # top; Chigh locates the code point.
-        self.a -= qe
-        if ((self.c >> 16) & 0xFFFF) < self.a:
-            if self.a >= 0x8000:
-                return mps  # short MPS path: no renormalization
-            # MPS_EXCHANGE (D.2.4): conditional exchange when the MPS
-            # subinterval has shrunk below Qe
-            if self.a < qe:
-                d = 1 - mps
-                if sw:
-                    mps = 1 - mps
-                stats[i] = (mps << 7) | nlps
-            else:
-                d = mps
-                stats[i] = (mps << 7) | nmps
-        else:
-            # LPS_EXCHANGE (D.2.5)
-            self.c = (self.c - (self.a << 16)) & 0xFFFFFFFF
-            if self.a < qe:
-                d = mps
-                stats[i] = (mps << 7) | nmps
-            else:
-                d = 1 - mps
-                if sw:
-                    mps = 1 - mps
-                stats[i] = (mps << 7) | nlps
-            self.a = qe
-        # RENORM_D (D.2.6) — A < 0x8000 on entry, so the shift cannot
-        # overflow 16 bits
-        while True:
-            if self.ct == 0:
-                self._bytein()
-            self.a <<= 1
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a >= 0x8000:
-                return d
-
-    def decode_fixed(self) -> int:
-        """One decision at fixed probability 1/2 (AC signs, F.1.4.4.1.2)."""
-        return self.decode(self._fixed, 0)
-
-
-def _parse_dac(body: bytes, dc_cond: dict, ac_cond: dict) -> None:
-    """DAC segment (B.2.4.3) → conditioning parameters: DC tables get
-    (L, U) bounds packed low/high nibble, AC tables get Kx."""
-    i = 0
-    while i + 2 <= len(body):
-        tc, tb = body[i] >> 4, body[i] & 0x0F
-        val = body[i + 1]
-        i += 2
-        if tc == 0:
-            lo, up = val & 0x0F, val >> 4
-            if lo > up:
-                raise ValueError("invalid DC arithmetic conditioning (L > U)")
-            dc_cond[tb] = (lo, up)
-        else:
-            if not 1 <= val <= 63:
-                raise ValueError("invalid AC arithmetic conditioning Kx")
-            ac_cond[tb] = val
-
-
-def _arith_decode_dc(dec, stats, dc_ctx, ci, lo, up):
-    """One DC difference (T.81 F.1.4.1 / F.1.4.4.1 decode side): the
-    context bank holds 5 four-state groups selected by the previous
-    diff's classification (zero / ±small / ±large per the L,U bounds),
-    a shared magnitude-category tree at offset 20, and one shared
-    value-bit state per tree node at +14."""
-    st = dc_ctx[ci]
-    if dec.decode(stats, st) == 0:
-        dc_ctx[ci] = 0
-        return 0
-    sign = dec.decode(stats, st + 1)
-    cur = st + 2 + sign
-    m = dec.decode(stats, cur)
-    if m:
-        cur = 20
-        while dec.decode(stats, cur):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("arithmetic DC magnitude overflow")
-            cur += 1
-    # classify this diff for the NEXT block's context selection
-    if m < (1 << lo) >> 1:
-        dc_ctx[ci] = 0
-    elif m > (1 << up) >> 1:
-        dc_ctx[ci] = 12 + sign * 4
-    else:
-        dc_ctx[ci] = 4 + sign * 4
-    v = m
-    cur += 14
-    m >>= 1
-    while m:
-        if dec.decode(stats, cur):
-            v |= m
-        m >>= 1
-    v += 1
-    return -v if sign else v
-
-
-def _arith_decode_ac_into(dec, stats, kx, zz, lo_k=1, hi_k=63):
-    """AC coefficients of one block into zigzag-indexed list ``zz``
-    (T.81 F.1.4.2 / F.1.4.4.2 decode side): per-index 3-state groups
-    (end-of-block, coefficient-nonzero, magnitude head), sign at fixed
-    1/2, and two magnitude-tree banks split at the Kx conditioning
-    bound (low vs high spectral contexts at offsets 189 / 217)."""
-    k = lo_k
-    while k <= hi_k:
-        st = 3 * (k - 1)
-        if dec.decode(stats, st):
-            return  # end of block
-        while dec.decode(stats, st + 1) == 0:
-            st += 3
-            k += 1
-            if k > hi_k:
-                raise ValueError("arithmetic AC run past block end")
-        sign = dec.decode_fixed()
-        st += 2
-        cur = st
-        m = dec.decode(stats, cur)
-        if m and dec.decode(stats, cur):
-            m <<= 1
-            cur = 189 if k <= kx else 217
-            while dec.decode(stats, cur):
-                m <<= 1
-                if m == 0x8000:
-                    raise ValueError("arithmetic AC magnitude overflow")
-                cur += 1
-        v = m
-        cur += 14
-        m >>= 1
-        while m:
-            if dec.decode(stats, cur):
-                v |= m
-            m >>= 1
-        v += 1
-        zz[k] = -v if sign else v
-        k += 1
-
-
-def _decode_jpeg_arith_sequential(payload: bytes):
-    """Arithmetic-coded (extended) sequential DCT JPEG (SOF9) ->
-    (h, w, channels) array, 8 or 12-bit precision.
-
-    Same frame walk, MCU geometry, restart handling, dequantization,
-    and IDCT/assembly as the Huffman sequential path — only the entropy
-    layer differs (QM coder + the Annex F statistics model, replacing
-    Huffman tables). DAC segments supply the conditioning (DC L/U
-    bounds, AC Kx); defaults L=0, U=1, Kx=5 per F.1.4.4.1.1. A restart
-    marker resets the decoder registers AND every statistics bank, so
-    each interval is independently decodable. Verified against
-    fixtures produced by a real independent encoder (libjpeg) via
-    coefficient-identical Huffman twins — see tests/test_imagecodec.py.
-    """
-    import numpy as np
-
-    qt: dict = {}
-    dc_cond: dict = {}
-    ac_cond: dict = {}
-    frame = None
-    restart_interval = 0
-    scan = None
-
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xFF:
-            pos -= 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        seg_len = int.from_bytes(payload[pos : pos + 2], "big")
-        body = payload[pos + 2 : pos + seg_len]
-        if len(body) != seg_len - 2:
-            raise ValueError("truncated JPEG segment")
-        pos += seg_len
-        if marker == 0xDB:
-            _parse_dqt(body, qt)
-        elif marker == 0xCC:  # DAC
-            _parse_dac(body, dc_cond, ac_cond)
-        elif marker == _SOF_ARITH_SEQ:
-            precision = body[0]
-            if precision not in (8, 12):
-                raise NotImplementedError(f"{precision}-bit JPEG not supported")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-            frame = (h, w, comps, precision)
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            comp_ids = [c[0] for c in frame[2]]
-            sel = []
-            for s in range(ns):
-                cs, tables = body[1 + 2 * s : 3 + 2 * s]
-                if cs not in comp_ids:
-                    raise ValueError("SOS references unknown component")
-                sel.append((comp_ids.index(cs), tables >> 4, tables & 0x0F))
-            scan = (sel, pos)
-            break
-        # else: APPn / COM / DHT(ignored in arith stream) — skipped
-
-    if frame is None or scan is None:
-        raise ValueError("truncated JPEG: no frame/scan data")
-    h, w, comps, precision = frame
-    if h == 0 or w == 0:
-        raise ValueError("zero-dimension JPEG frame")
-    sel, entropy_pos = scan
-    if len(sel) != len(comps):
-        raise NotImplementedError("multi-scan (non-interleaved) JPEG")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    for _, hi, vi, _ in comps:
-        if hi == 0 or vi == 0 or hmax % hi or vmax % vi:
-            raise ValueError("unsupported JPEG sampling factors")
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    n_mcus = mcus_x * mcus_y
-
-    segments, _ = _split_entropy_segments(payload, entropy_pos)
-
-    def fresh_stats():
-        # one DC bank per Td (49 bins used), one AC bank per Ta (245)
-        return (
-            {td: bytearray(64) for _, td, _ in sel},
-            {ta: bytearray(256) for _, _, ta in sel},
-        )
-
-    blocks = [[] for _ in comps]
-    dc_stats, ac_stats = fresh_stats()
-    pred = [0] * len(comps)
-    dc_ctx = [0] * len(comps)
-    seg_idx = 0
-    dec = _QMDecoder(segments[0])
-    for mcu in range(n_mcus):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("missing JPEG restart segment")
-            dec = _QMDecoder(segments[seg_idx])
-            dc_stats, ac_stats = fresh_stats()
-            pred = [0] * len(comps)
-            dc_ctx = [0] * len(comps)
-        for ci, td, ta in sel:
-            _, hi, vi, tq = comps[ci]
-            if tq not in qt:
-                raise ValueError("missing quantization table")
-            q = qt[tq]
-            lo, up = dc_cond.get(td, (0, 1))
-            kx = ac_cond.get(ta, 5)
-            for _ in range(hi * vi):
-                zz = [0] * 64
-                pred[ci] += _arith_decode_dc(
-                    dec, dc_stats[td], dc_ctx, ci, lo, up
-                )
-                zz[0] = pred[ci]
-                _arith_decode_ac_into(dec, ac_stats[ta], kx, zz)
-                coef = [0] * 64
-                for k in range(64):
-                    r = _ZIGZAG[k]
-                    coef[r] = zz[k] * q[r]
-                blocks[ci].append(coef)
-
-    return _blocks_to_image(
-        blocks, comps, h, w, precision, mcus_x, mcus_y, hmax, vmax
-    )
-
-
-def _decode_jpeg_arith_progressive(payload: bytes):
-    """Arithmetic-coded progressive DCT JPEG (SOFA) -> (h, w, channels)
-    uint8.
-
-    The scan-script walk, coefficient grids, and IDCT/assembly mirror
-    the Huffman progressive decoder; only the per-scan entropy decode
-    differs (T.81 G.1.3 arithmetic models over the QM coder):
-
-    - DC first scans reuse the sequential DC model with the diff in the
-      Al-shifted domain;
-    - DC refinement reads one fixed-probability decision per block for
-      the next magnitude bit;
-    - AC first scans reuse the sequential AC model over the [Ss, Se]
-      band with values shifted by Al;
-    - AC refinement decodes, per coefficient, a correction decision for
-      already-nonzero history (context st+2) or a newly-nonzero
-      decision (st+1) with a fixed-probability sign, with the per-k EOB
-      decision gated on the band's previous end-of-block position.
-
-    Statistics banks are fresh per scan and per restart interval.
-    Verified exactly against a libjpeg-encoded progressive arithmetic
-    fixture via its coefficient-identical Huffman twin.
-    """
-    import numpy as np
-
-    qt: dict = {}
-    dc_cond: dict = {}
-    ac_cond: dict = {}
-    frame = None
-    restart_interval = 0
-    grids = None
-    nonint = None
-    geom = None
-
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xFF:
-            pos -= 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        seg_len = int.from_bytes(payload[pos : pos + 2], "big")
-        body = payload[pos + 2 : pos + seg_len]
-        if len(body) != seg_len - 2:
-            raise ValueError("truncated JPEG segment")
-        pos += seg_len
-        if marker == 0xDB:
-            _parse_dqt(body, qt)
-        elif marker == 0xCC:
-            _parse_dac(body, dc_cond, ac_cond)
-        elif marker == 0xCA:  # SOF10: progressive, arithmetic
-            if body[0] != 8:
-                raise NotImplementedError(f"{body[0]}-bit JPEG not supported")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            if h == 0 or w == 0:
-                raise ValueError("zero-dimension JPEG frame")
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            for _, hi, vi, _ in comps:
-                if hi == 0 or vi == 0 or hmax % hi or vmax % vi:
-                    raise ValueError("unsupported JPEG sampling factors")
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            frame = (h, w, comps)
-            geom = (hmax, vmax, mcus_x, mcus_y)
-            grids = [
-                np.zeros((mcus_y * vi, mcus_x * hi, 64), dtype=np.int64)
-                for _, hi, vi, _ in comps
-            ]
-            nonint = []
-            for _, hi, vi, _ in comps:
-                comp_h = -(-h * vi // vmax)
-                comp_w = -(-w * hi // hmax)
-                nonint.append((-(-comp_h // 8), -(-comp_w // 8)))
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            comp_ids = [c[0] for c in frame[2]]
-            sel = []
-            for s in range(ns):
-                cs, tables = body[1 + 2 * s : 3 + 2 * s]
-                if cs not in comp_ids:
-                    raise ValueError("SOS references unknown component")
-                sel.append((comp_ids.index(cs), tables >> 4, tables & 0x0F))
-            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            segments, pos = _split_entropy_segments(payload, pos)
-            _decode_arith_progressive_scan(
-                grids, frame[2], geom, nonint, sel, ss, se, ah, al,
-                dc_cond, ac_cond, segments, restart_interval,
-            )
-        # else: APPn / COM — skipped
-
-    if frame is None or grids is None:
-        raise ValueError("truncated JPEG: no frame/scan data")
-    return _grids_to_image(grids, frame, geom, qt)
-
-
-def _grids_to_image(grids, frame, geom, qt):
-    """Accumulated progressive coefficient grids → image: dequantize +
-    IDCT + assemble + color, shared by the Huffman and arithmetic
-    progressive decoders (so the two entropy layers cannot diverge
-    downstream). int64 grids take the compiled path when available —
-    bit-exact with the numpy chain by validated construction."""
-    import numpy as np
-
-    h, w, comps = frame
-    hmax, vmax, mcus_x, mcus_y = geom
-    for _, _, _, tq in comps:
-        if tq not in qt:
-            raise ValueError("missing quantization table")
-    img = _native_assemble(
-        [grids[ci].reshape(-1, 64) for ci in range(len(comps))],
-        [np.array(qt[c[3]], dtype=np.float64) for c in comps],
-        comps, h, w, 8, mcus_x, mcus_y, hmax, vmax, layout="raster",
-    )
-    if img is not None:
-        return img
-    a = _idct_basis()
-    out_planes = []
-    for ci, (_, hi, vi, tq) in enumerate(comps):
-        q = np.array(qt[tq], dtype=np.float64)
-        gb_h, gb_w = mcus_y * vi, mcus_x * hi
-        arr = (grids[ci].reshape(-1, 64).astype(np.float64) * q).reshape(-1, 8, 8)
-        spatial = _idct_blocks(arr, a) + 128.0
-        spatial = np.clip(np.rint(spatial), 0, 255).astype(np.uint8)
-        plane = (
-            spatial.reshape(gb_h, gb_w, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(gb_h * 8, gb_w * 8)
-        )
-        if vi != vmax:
-            plane = np.repeat(plane, vmax // vi, axis=0)
-        if hi != hmax:
-            plane = np.repeat(plane, hmax // hi, axis=1)
-        out_planes.append(plane[:h, :w])
-    return _planes_to_image(out_planes)
-
-
-def _decode_arith_progressive_scan(
-    grids, comps, geom, nonint, sel, ss, se, ah, al,
-    dc_cond, ac_cond, segments, restart_interval,
-):
-    """One arithmetic progressive scan into the coefficient grids."""
-    hmax, vmax, mcus_x, mcus_y = geom
-    interleaved = len(sel) > 1
-
-    units = []
-    if interleaved:
-        if ss != 0:
-            raise ValueError("interleaved progressive scan must be DC-only")
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                unit = []
-                for ci, _, _ in sel:
-                    _, hi, vi, _ = comps[ci]
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            unit.append((ci, my * vi + byi, mx * hi + bxi))
-                units.append(unit)
-    else:
-        ci = sel[0][0]
-        nb_h, nb_w = nonint[ci]
-        units = [[(ci, by, bx)] for by in range(nb_h) for bx in range(nb_w)]
-
-    def fresh():
-        return (
-            {td: bytearray(64) for _, td, _ in sel},
-            {ta: bytearray(256) for _, _, ta in sel},
-            [0] * len(comps),  # DC prediction
-            [0] * len(comps),  # DC context classification
-        )
-
-    tabs = {ci: (td, ta) for ci, td, ta in sel}
-    dc_stats, ac_stats, pred, dc_ctx = fresh()
-    seg_idx = 0
-    dec = _QMDecoder(segments[0])
-    p1 = 1 << al
-
-    for u, unit in enumerate(units):
-        if restart_interval and u and u % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("missing JPEG restart segment")
-            dec = _QMDecoder(segments[seg_idx])
-            dc_stats, ac_stats, pred, dc_ctx = fresh()
-        for ci, by, bx in unit:
-            block = grids[ci][by, bx]
-            td, ta = tabs[ci]
-            if ss == 0 and ah == 0:
-                # DC first scan: sequential DC model, Al-shifted domain
-                lo, up = dc_cond.get(td, (0, 1))
-                pred[ci] += _arith_decode_dc(
-                    dec, dc_stats[td], dc_ctx, ci, lo, up
-                )
-                block[0] = pred[ci] << al
-            elif ss == 0:
-                # DC refinement: one fixed-probability magnitude bit
-                if dec.decode_fixed():
-                    block[0] = int(block[0]) | p1
-            elif ah == 0:
-                # AC first scan over [ss, se], values shifted by Al
-                kx = ac_cond.get(ta, 5)
-                zz = [0] * 64
-                _arith_decode_ac_into(
-                    dec, ac_stats[ta], kx, zz, lo_k=ss, hi_k=se
-                )
-                for k in range(ss, se + 1):
-                    if zz[k]:
-                        block[_ZIGZAG[k]] = zz[k] << al
-            else:
-                # AC refinement (G.1.3.3): EOB decision per k is gated
-                # on the band's previous end-of-block position kex
-                stats = ac_stats[ta]
-                m1 = -p1
-                kex = se
-                while kex >= ss:
-                    if int(block[_ZIGZAG[kex]]) != 0:
-                        break
-                    kex -= 1
-                k = ss
-                while k <= se:
-                    st = 3 * (k - 1)
-                    if k > kex:
-                        if dec.decode(stats, st):
-                            break  # end of block
-                    while True:
-                        z = _ZIGZAG[k]
-                        c = int(block[z])
-                        if c != 0:
-                            # correction bit for known-nonzero history
-                            if dec.decode(stats, st + 2):
-                                block[z] = c + (m1 if c < 0 else p1)
-                            break
-                        if dec.decode(stats, st + 1):
-                            # newly significant: fixed-probability sign
-                            block[z] = m1 if dec.decode_fixed() else p1
-                            break
-                        st += 3
-                        k += 1
-                        if k > se:
-                            raise ValueError(
-                                "arithmetic AC refinement past band end"
-                            )
-                    k += 1
-
-
 def encode_jpeg_lossless_gray(px, predictor: int = 4) -> bytes:
     """Encode a (h, w) uint8 grayscale raster as an 8-bit lossless
     sequential JPEG (SOF3, Huffman, selectable predictor 1-7).
@@ -3524,8 +842,7 @@ def encode_jpeg_lossless_gray(px, predictor: int = 4) -> bytes:
     multimodal.pixel_roundtrip_stats — lossless, so decode(encode(px))
     == px bit-for-bit and integer pixel statistics are SQL-oracle
     checkable. An independent second encoder (full color / precision /
-    point-transform / restart coverage) lives in tests/test_imagecodec.py
-    per the progressive-fixture discipline.
+    point-transform / restart coverage) lives in tests/test_imagecodec.py.
     """
     import numpy as np
 
@@ -3609,374 +926,6 @@ def encode_jpeg_lossless_gray(px, predictor: int = 4) -> bytes:
     out.extend(body)
     out.extend(b"\xff\xd9")
     return bytes(out)
-
-
-def _decode_jpeg_progressive(payload: bytes):
-    """Progressive DCT JPEG (SOF2, Huffman) -> (h, w, channels) uint8.
-
-    Full T.81 Annex G support on the decode side: spectral selection
-    (multi-scan AC bands, non-interleaved), successive approximation
-    (point transform Al on first scans; DC and AC refinement scans with
-    correction bits and EOB-run semantics), interleaved DC scans, DHT
-    redefinition between scans, and restart markers (per-MCU in
-    interleaved scans, per-block otherwise). Coefficients accumulate in
-    per-component block grids across scans; dequantize + IDCT happen once
-    at EOI. The refinement arithmetic uses two's-complement bit tests on
-    signed coefficients — Python ints share C's semantics here, which is
-    what the spec's (and every encoder's) bit streams assume."""
-    import numpy as np
-
-    qt: dict = {}
-    huff: dict = {}
-    frame = None
-    restart_interval = 0
-    grids = None  # per comp: int64 array (gb_h, gb_w, 64), raster coef index
-    nonint = None  # per comp: (nb_h, nb_w) non-interleaved block dims
-    geom = None  # (hmax, vmax, mcus_x, mcus_y)
-
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xFF:
-            pos -= 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        seg_len = int.from_bytes(payload[pos : pos + 2], "big")
-        body = payload[pos + 2 : pos + seg_len]
-        if len(body) != seg_len - 2:
-            raise ValueError("truncated JPEG segment")
-        pos += seg_len
-        if marker == 0xDB:
-            _parse_dqt(body, qt)
-        elif marker == 0xC4:
-            _parse_dht(body, huff)
-        elif marker == _SOF_PROGRESSIVE:
-            if body[0] != 8:
-                raise NotImplementedError(f"{body[0]}-bit JPEG not supported")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            if h == 0 or w == 0:
-                raise ValueError("zero-dimension JPEG frame")
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            for _, hi, vi, _ in comps:
-                if hi == 0 or vi == 0 or hmax % hi or vmax % vi:
-                    raise ValueError("unsupported JPEG sampling factors")
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            frame = (h, w, comps)
-            geom = (hmax, vmax, mcus_x, mcus_y)
-            grids = [
-                np.zeros((mcus_y * vi, mcus_x * hi, 64), dtype=np.int64)
-                for _, hi, vi, _ in comps
-            ]
-            # non-interleaved scan dims: whole blocks of the component's
-            # OWN sampled size (ceil(h*vi/vmax) x ceil(w*hi/hmax)), per
-            # T.81 A.2.2 — smaller than the padded MCU grid
-            nonint = []
-            for _, hi, vi, _ in comps:
-                comp_h = -(-h * vi // vmax)
-                comp_w = -(-w * hi // hmax)
-                nonint.append((-(-comp_h // 8), -(-comp_w // 8)))
-        elif (
-            marker in _SOF_BASELINE
-            or marker in (_SOF_LOSSLESS, _SOF_ARITH_SEQ, _SOF_ARITH_PROGRESSIVE)
-            or marker in _SOF_UNSUPPORTED
-        ):
-            raise ValueError("mixed/unsupported SOF in progressive stream")
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            comp_ids = [c[0] for c in frame[2]]
-            sel = []
-            for s in range(ns):
-                cs, tables = body[1 + 2 * s : 3 + 2 * s]
-                if cs not in comp_ids:
-                    raise ValueError("SOS references unknown component")
-                sel.append((comp_ids.index(cs), tables >> 4, tables & 0x0F))
-            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            segments, pos = _split_entropy_segments(payload, pos)
-            _decode_progressive_scan(
-                grids, frame[2], geom, nonint, sel, ss, se, ah, al,
-                huff, segments, restart_interval,
-            )
-        # else: APPn / COM — skipped
-
-    if frame is None or grids is None:
-        raise ValueError("truncated JPEG: no frame/scan data")
-    return _grids_to_image(grids, frame, geom, qt)
-
-
-def _decode_prog_scan_native(
-    native, grids, comps, sel, ss, se, ah, al, huff, segments,
-    restart_interval, trip, n_units, unit_size,
-):
-    """Drive the compiled progressive-scan decoder: same restart walk
-    (predictor/EOB-run reset, segment advance) as the Python loop.
-    ``trip`` is the vectorized (n_units, unit_size, 3) int32 array of
-    (ci, by, bx) triplets — every unit has the same composition (the MCU
-    pattern when interleaved, one block otherwise), so restart offsets
-    are plain slices. Writes into the SAME int64 numpy grids the Python
-    path uses; raises the same ValueErrors on the same malformed
-    streams."""
-    import ctypes
-
-    import numpy as np
-
-    ncomp = len(comps)
-    # per-scan table requirements mirror the Python branches: DC scans
-    # (ss == 0, ah == 0) consume a DC table, AC scans an AC table
-    for ci, dc_id, ac_id in sel:
-        if ss == 0 and ah == 0 and (0, dc_id) not in huff:
-            raise ValueError("missing Huffman table")
-        if ss != 0 and (1, ac_id) not in huff:
-            raise ValueError("missing Huffman table")
-    dc_s, dc_l, ac_s, ac_l, keep = _huff_ptr_tables(sel, huff, ncomp)
-    grid_ptrs = (ctypes.c_void_p * ncomp)(
-        *[g.ctypes.data for g in grids]
-    )
-    gb_w = np.asarray([g.shape[1] for g in grids], np.int32)
-    pred = np.zeros(ncomp, np.int64)
-    done, seg_idx = 0, 0
-    while done < n_units:
-        if seg_idx >= len(segments):
-            raise ValueError("missing JPEG restart segment")
-        if seg_idx > 0:
-            pred[:] = 0
-        n_seg = (
-            min(restart_interval, n_units - done)
-            if restart_interval
-            else n_units
-        )
-        seg = segments[seg_idx]
-        rc = native(
-            seg,
-            len(seg),
-            n_seg,
-            unit_size,
-            trip[done:].ctypes.data,
-            ctypes.addressof(grid_ptrs),
-            gb_w.ctypes.data,
-            ctypes.addressof(dc_s),
-            ctypes.addressof(dc_l),
-            ctypes.addressof(ac_s),
-            ctypes.addressof(ac_l),
-            ss,
-            se,
-            ah,
-            al,
-            pred.ctypes.data,
-        )
-        if rc == -1:
-            raise ValueError("invalid JPEG Huffman code")
-        if rc == -3:
-            raise ValueError("progressive AC run past band end")
-        if rc == -4:
-            raise ValueError("invalid AC refinement magnitude")
-        done += n_seg
-        seg_idx += 1
-
-
-def _decode_progressive_scan(
-    grids, comps, geom, nonint, sel, ss, se, ah, al, huff, segments, restart_interval
-):
-    """One progressive scan into the coefficient grids (T.81 G.2).
-
-    Interleaved (ns > 1, DC only per G.1.1.1.1) scans walk the MCU grid;
-    single-component scans walk that component's own block raster, which
-    is SMALLER than its padded MCU grid when the frame needs partial
-    MCUs — the padded blocks simply never receive AC energy (they are
-    cropped away after IDCT). EOB runs and the refinement correction-bit
-    protocol follow the spec exactly: a refinement scan reads one
-    correction bit for every already-nonzero coefficient it passes over,
-    whether inside a run, under a ZRL, or within an EOB run."""
-    hmax, vmax, mcus_x, mcus_y = geom
-    interleaved = len(sel) > 1
-    tabs = {ci: (dc_id, ac_id) for ci, dc_id, ac_id in sel}
-
-    native = _native_entropy_prog()
-    if native is not None:
-        # build the (ci, by, bx) unit triplets VECTORIZED (round 10: the
-        # per-scan Python nested loops + flatten cost ~30 ms/decode on
-        # the progressive board — more than the entropy decode itself)
-        import numpy as np
-
-        if interleaved:
-            if ss != 0:
-                raise ValueError("interleaved progressive scan must be DC-only")
-            offs = [
-                (ci, byi, bxi)
-                for ci, _, _ in sel
-                for byi in range(comps[ci][2])
-                for bxi in range(comps[ci][1])
-            ]
-            offs_a = np.asarray(offs, np.int32)  # (U, 3)
-            vi_of = np.asarray([c[2] for c in comps], np.int32)
-            hi_of = np.asarray([c[1] for c in comps], np.int32)
-            my, mx = np.divmod(
-                np.arange(mcus_y * mcus_x, dtype=np.int32), np.int32(mcus_x)
-            )
-            n_units, unit_size = mcus_y * mcus_x, len(offs)
-            trip = np.empty((n_units, unit_size, 3), np.int32)
-            trip[:, :, 0] = offs_a[:, 0]
-            trip[:, :, 1] = my[:, None] * vi_of[offs_a[:, 0]] + offs_a[:, 1]
-            trip[:, :, 2] = mx[:, None] * hi_of[offs_a[:, 0]] + offs_a[:, 2]
-        else:
-            ci = sel[0][0]
-            nb_h, nb_w = nonint[ci]
-            by, bx = np.divmod(
-                np.arange(nb_h * nb_w, dtype=np.int32), np.int32(nb_w)
-            )
-            n_units, unit_size = nb_h * nb_w, 1
-            trip = np.empty((n_units, 1, 3), np.int32)
-            trip[:, 0, 0] = np.int32(ci)
-            trip[:, 0, 1] = by
-            trip[:, 0, 2] = bx
-        if n_units:
-            _decode_prog_scan_native(
-                native, grids, comps, sel, ss, se, ah, al, huff, segments,
-                restart_interval, trip, n_units, unit_size,
-            )
-        return
-
-    units = []  # each unit: list of (ci, by, bx) — restart granularity
-    if interleaved:
-        if ss != 0:
-            raise ValueError("interleaved progressive scan must be DC-only")
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                unit = []
-                for ci, _, _ in sel:
-                    _, hi, vi, _ = comps[ci]
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            unit.append((ci, my * vi + byi, mx * hi + bxi))
-                units.append(unit)
-    else:
-        ci = sel[0][0]
-        nb_h, nb_w = nonint[ci]
-        units = [[(ci, by, bx)] for by in range(nb_h) for bx in range(nb_w)]
-
-    pred = [0] * len(comps)
-    eobrun = 0
-    seg_idx = 0
-    reader = _BitReader(segments[0])
-    p1, m1 = 1 << al, -(1 << al)
-
-    for u, unit in enumerate(units):
-        if restart_interval and u and u % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("missing JPEG restart segment")
-            reader = _BitReader(segments[seg_idx])
-            pred = [0] * len(comps)
-            eobrun = 0
-        for ci, by, bx in unit:
-            block = grids[ci][by, bx]
-            dc_id, ac_id = tabs[ci]
-            if ss == 0 and ah == 0:
-                # DC first scan: diffs coded in the Al-shifted domain
-                try:
-                    dc_tab = huff[(0, dc_id)]
-                except KeyError:
-                    raise ValueError("missing Huffman table") from None
-                s = _decode_symbol(reader, dc_tab)
-                diff = _extend(reader.read_bits(s), s) if s else 0
-                pred[ci] += diff
-                block[0] = pred[ci] << al
-            elif ss == 0:
-                # DC refinement: one raw bit appends the next magnitude bit
-                if reader.read_bit():
-                    block[0] = int(block[0]) | p1
-            elif ah == 0:
-                # AC first scan (band [ss, se], values shifted by Al)
-                if eobrun:
-                    eobrun -= 1
-                    continue
-                try:
-                    ac_tab = huff[(1, ac_id)]
-                except KeyError:
-                    raise ValueError("missing Huffman table") from None
-                k = ss
-                while k <= se:
-                    rs = _decode_symbol(reader, ac_tab)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:  # ZRL
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += reader.read_bits(r)
-                        break
-                    k += r
-                    if k > se:
-                        raise ValueError("progressive AC run past band end")
-                    block[_ZIGZAG[k]] = _extend(reader.read_bits(s), s) << al
-                    k += 1
-            else:
-                # AC refinement scan (T.81 G.2 / the libjpeg algorithm)
-                try:
-                    ac_tab = huff[(1, ac_id)]
-                except KeyError:
-                    raise ValueError("missing Huffman table") from None
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = _decode_symbol(reader, ac_tab)
-                        r, s = rs >> 4, rs & 0x0F
-                        val = 0
-                        if s == 0:
-                            if r < 15:
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += reader.read_bits(r)
-                                break
-                            # r == 15: skip 16 zero-history coefficients
-                        else:
-                            if s != 1:
-                                raise ValueError("invalid AC refinement magnitude")
-                            val = p1 if reader.read_bit() else m1
-                        while k <= se:
-                            z = _ZIGZAG[k]
-                            c = int(block[z])
-                            if c != 0:
-                                if reader.read_bit() and (c & p1) == 0:
-                                    block[z] = c + (p1 if c >= 0 else m1)
-                            else:
-                                if r == 0:
-                                    break
-                                r -= 1
-                            k += 1
-                        if val and k <= se:
-                            block[_ZIGZAG[k]] = val
-                        k += 1
-                if eobrun > 0:
-                    # inside an EOB run: correction bits only, for the
-                    # remaining already-nonzero coefficients of the band
-                    while k <= se:
-                        z = _ZIGZAG[k]
-                        c = int(block[z])
-                        if c != 0 and reader.read_bit() and (c & p1) == 0:
-                            block[z] = c + (p1 if c >= 0 else m1)
-                        k += 1
-                    eobrun -= 1
 
 
 def _lzw_decode_fast(data: bytes, min_code_size: int, max_pixels: int):

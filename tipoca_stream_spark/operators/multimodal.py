@@ -4,14 +4,11 @@ columns with typed metadata.
 Header decode is REAL: ``decode_image_header`` parses PNG IHDR, JPEG SOFn,
 GIF logical-screen, and BMP info headers in pure Python (no imaging
 library). Pixel decode is REAL for all four image formats: PNG (stdlib
-zlib inflate + per-row filter reversal, ``decode_png``), JPEG
-(Huffman entropy decode + batched numpy IDCT, ``imagecodec.decode_jpeg``,
-baseline AND progressive as of round 6; extended-sequential 12-bit,
-lossless SOF3, and arithmetic-coded SOF9/SOFA via the QM coder as of
-round 8), GIF (LZW, ``imagecodec.decode_gif``), and uncompressed 24-bit
-BMP. Only arithmetic-lossless/hierarchical JPEG processes and the
-video frame-extraction
-kernels remain gated on PIL/ffmpeg, which this
+zlib inflate + per-row filter reversal, ``decode_png``), lossless JPEG
+(SOF3 Huffman predictive decode, ``imagecodec.decode_jpeg``), GIF (LZW,
+``imagecodec.decode_gif``), and uncompressed 24-bit BMP. Lossy (DCT) and
+arithmetic-coded JPEG raise NotImplementedError: no query reads them.
+The video frame-extraction kernels remain gated on ffmpeg, which this
 container doesn't ship — each such path is a clearly-marked stand-in
 inside otherwise-real Arrow-batched ``mapInPandas`` plumbing.
 
@@ -350,15 +347,14 @@ def png_encoded(pixels, color_type: int = 2) -> bytes:
 
 
 def decode_image(payload: bytes):
-    """Full pixel decode to an (h, w, channels) uint8 array — pure
-    Python/numpy for all four supported formats: PNG (stdlib zlib inflate
-    + filter reversal, ``decode_png``), JPEG (Huffman + batched numpy
-    IDCT, ``imagecodec.decode_jpeg`` — baseline, extended-sequential
-    8/12-bit, progressive, lossless SOF3, and arithmetic-coded
-    SOF9/SOFA), GIF (LZW, ``imagecodec.decode_gif``), and uncompressed
-    24-bit BMP. Only arithmetic-lossless and hierarchical JPEG
-    processes remain gated behind NotImplementedError; corrupt payloads
-    of a recognized format raise ValueError."""
+    """Full pixel decode to an (h, w, channels) array — pure Python/numpy
+    for all four supported formats: PNG (stdlib zlib inflate + filter
+    reversal, ``decode_png``), lossless JPEG (SOF3 Huffman predictive
+    decode, ``imagecodec.decode_jpeg``; 9-16-bit frames come back
+    uint16), GIF (LZW, ``imagecodec.decode_gif``), and uncompressed
+    24-bit BMP. Every other JPEG process (DCT, arithmetic, hierarchical)
+    raises NotImplementedError; corrupt payloads of a recognized format
+    raise ValueError."""
     import numpy as np
 
     from tipoca_stream_spark.operators.imagecodec import decode_gif, decode_jpeg
@@ -392,7 +388,7 @@ def decode_image(payload: bytes):
     fmt = hdr[0] if hdr else "unrecognized"
     raise ValueError(
         f"cannot decode pixels for {fmt} payload: recognized formats are "
-        "PNG / baseline JPEG / GIF / 24-bit BMP (pure Python decoders); "
+        "PNG / lossless JPEG / GIF / 24-bit BMP (pure Python decoders); "
         "this payload is corrupt, truncated, or an unsupported variant"
     )
 
@@ -423,9 +419,9 @@ def pixel_roundtrip_stats(documents: DataFrame) -> DataFrame:
     recomputes without any image parsing — so the driver's DuckDB gate
     verifies this entire Arrow-batched mapInPandas pipeline end-to-end.
     Lossless JPEG (T.81 process 14) is what admits JPEG to this exact
-    gate: DCT JPEG is lossy, so it is exercised by spec-level unit tests
-    instead. The predictor rotates over all seven T.81 H.1 choices by
-    doc_id, so every predictor's encode AND decode sit under the oracle.
+    gate; lossy DCT JPEG is not decoded at all. The predictor rotates
+    over all seven T.81 H.1 choices by doc_id, so every predictor's
+    encode AND decode sit under the oracle.
 
     100 TB shape: one Arrow batch per task, per-image work is O(pixels),
     no shuffle — embarrassingly parallel over document partitions."""

@@ -43,16 +43,15 @@ def hybrid_rrf_topk(
     1/(rrf_k + rank) to the fused score."""
     # both rank windows run over top-k_each-bounded legs (each leg ends
     # in a limit), so the single window task is k-row-bounded by
-    # construction. (Spark 4's EliminateWindowPartitions folds the
-    # constant partition key away, so the single-partition WindowExec
-    # WARN still prints — spurious for these k-row inputs.)
+    # construction. (Spark's single-partition WindowExec WARN prints —
+    # spurious for these k-row inputs.)
     lex = bm25_topk(docs, "text", id_col, query_terms, k=k_each)
-    wl = Window.partitionBy(F.lit(0)).orderBy(F.desc("bm25"), id_col)
+    wl = Window.orderBy(F.desc("bm25"), id_col)
     lex = lex.select(
         F.col(id_col), F.row_number().over(wl).alias("lex_rank")
     )
     sem = cosine_batch_topk(embeddings, [query_vec_id], k_each, id_col="vec_id")
-    ws = Window.partitionBy(F.lit(0)).orderBy(F.desc("sim"), "vec_id")
+    ws = Window.orderBy(F.desc("sim"), "vec_id")
     sem = sem.select(
         F.col("vec_id").alias(id_col),
         F.row_number().over(ws).alias("sem_rank"),

@@ -447,10 +447,9 @@ def vocab_coverage(df: DataFrame, text_col: str, k: int = 50) -> DataFrame:
     (terms are unique), so the limit keeps exactly the rows the old
     rank<=k filter kept, and the cumulative sum over ranks 1..k only
     reads those rows — identical output. At 100 TB the vocabulary never
-    funnels through one window task anymore; only k rows do. (Spark 4's
-    EliminateWindowPartitions folds the constant partition key away, so
-    the single-partition WindowExec WARN still prints — spurious for the
-    k-row input; rank-after-limit is the real fix.) Coverage divides by
+    funnels through one window task anymore; only k rows do. (The window
+    is unpartitioned, so Spark's single-partition WindowExec WARN prints
+    — spurious for the k-row input; rank-after-limit is the real fix.) Coverage divides by
     the all-terms total, computed before the limit.
     """
     from pyspark.sql import Window
@@ -461,7 +460,7 @@ def vocab_coverage(df: DataFrame, text_col: str, k: int = 50) -> DataFrame:
     counts = tokens.groupBy("term").agg(F.count("*").alias("c"))
     total = counts.agg(F.sum("c").cast("double").alias("t"))
     topk = counts.orderBy(F.desc("c"), F.asc("term")).limit(k)
-    w = Window.partitionBy(F.lit(0)).orderBy(F.desc("c"), F.asc("term"))
+    w = Window.orderBy(F.desc("c"), F.asc("term"))
     return (
         topk.withColumn("rank", F.row_number().over(w))
         .withColumn("cum_c", F.sum("c").over(w.rowsBetween(Window.unboundedPreceding, 0)))

@@ -133,11 +133,10 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("split") == "eval", 1)).cast("double").alias("n_e"),
     )
     # whole-frame sum over the ≤PSI_BINS-row bin table: the single window
-    # task is bounded by construction. (The constant partition key is
-    # folded away by Spark 4's EliminateWindowPartitions rule, so the
-    # single-partition WindowExec WARN still prints — it is spurious here;
-    # the bounded input is the real fix. Corrected round 15.)
-    w = Window.partitionBy(F.lit(0))
+    # task is bounded by construction. (Spark's single-partition
+    # WindowExec WARN prints for this unpartitioned window; it is
+    # spurious here — the bounded input is the real fix.)
+    w = Window.partitionBy()
     # try_divide: a split with zero rows overall has tot = 0; DuckDB's
     # double division by zero yields NULL and greatest() skips NULLs in
     # BOTH engines, so the proportion floors to PSI_EPS identically
@@ -267,7 +266,7 @@ def dq_chisq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.sum("n").over(Window.partitionBy("event_type")).alias("row_tot"),
         F.sum("n").over(Window.partitionBy("split")).alias("col_tot"),
-        F.sum("n").over(Window.partitionBy(F.lit(0))).alias("grand"),
+        F.sum("n").over(Window.partitionBy()).alias("grand"),
     )
     x = m.withColumn("expected", F.col("row_tot") * F.col("col_tot") / F.col("grand"))
     term = (F.col("n") - F.col("expected")) ** 2 / F.col("expected")
@@ -277,7 +276,7 @@ def dq_chisq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"),
         F.round("expected", 6).alias("expected"),
         F.round(term, 6).alias("chisq_term"),
-        F.round(F.sum(term).over(Window.partitionBy(F.lit(0))), 6).alias("chisq_total"),
+        F.round(F.sum(term).over(Window.partitionBy()), 6).alias("chisq_total"),
     )
 
 
@@ -495,12 +494,9 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sel_rank",
         F.row_number().over(
             # rank-after-limit: DSIR_SELECT_K-bounded input, so the single
-            # window task is safe by construction. (EliminateWindowPartitions
-            # folds the constant key away — the WindowExec WARN still
-            # prints and is spurious for this k-row input.)
-            Window.partitionBy(F.lit(0)).orderBy(
-                F.col("dsir_logweight").desc(), "doc_id"
-            )
+            # window task is safe by construction. (The single-partition
+            # WindowExec WARN prints and is spurious for this k-row input.)
+            Window.orderBy(F.col("dsir_logweight").desc(), "doc_id")
         ),
     )
 

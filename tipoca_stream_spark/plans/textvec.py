@@ -432,10 +432,9 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank window sees only 1000 rows instead of the whole
     vocabulary; (c desc, term asc) is a total order (terms unique), so
     the limit keeps exactly the rows the old rank<=1000 filter kept.
-    (Spark 4's EliminateWindowPartitions folds the constant partition
-    key away, so the single-partition WindowExec WARN still prints —
-    spurious for the 1000-row input; rank-after-limit is the real
-    fix.)"""
+    (The rank window is unpartitioned, so Spark's single-partition
+    WindowExec WARN prints — spurious for the 1000-row input;
+    rank-after-limit is the real fix.)"""
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -445,7 +444,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("c"))
     )
-    w = Window.partitionBy(F.lit(0)).orderBy(F.col("c").desc(), F.col("term"))
+    w = Window.orderBy(F.col("c").desc(), F.col("term"))
     ranked = counts.orderBy(F.col("c").desc(), F.col("term")).limit(1000).withColumn(
         "rank", F.row_number().over(w)
     )

@@ -1460,9 +1460,9 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Header decode is real (PNG IHDR parse of the adapter's PNG-framed
     payloads) and now oracle-verified: the DuckDB oracle rebuilds the exact
     payload blob and recomputes width/height/digest with byte arithmetic.
-    Pixel decode is pure Python for PNG/JPEG/GIF/BMP — see
-    operators.imagecodec; only arithmetic-lossless and hierarchical
-    JPEG processes stay gated."""
+    Pixel decode is pure Python for PNG, lossless JPEG (SOF3), GIF and
+    BMP — see operators.imagecodec; every other JPEG process raises
+    NotImplementedError."""
     docs = _docs(spark, sf_dir)
     return mm.extract_features(mm.documents_as_media(docs))
 
@@ -1510,9 +1510,9 @@ def multimodal_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics arithmetically from (doc_id, text length) with no image
     parsing, so a bug anywhere in the compress/decompress/filter/LZW/
     predictive-Huffman path breaks the hash match. Lossless JPEG rotates
-    through all seven T.81 predictors by doc_id; lossy DCT JPEG keeps
-    its spec-level unit tests instead (no exact SQL oracle exists for
-    it). See operators.imagecodec."""
+    through all seven T.81 predictors by doc_id; lossy DCT JPEG is not
+    decoded (no exact SQL oracle exists for it). See
+    operators.imagecodec."""
     return mm.pixel_roundtrip_stats(_docs(spark, sf_dir))
 
 

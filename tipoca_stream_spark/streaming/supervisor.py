@@ -8,9 +8,11 @@ sinkgroup_controller.go:20-30) and releases a table when it reaches
 (controllers/sinkgroup_controller.go:26-27, realtime_calculator.go:215-346).
 
 Spark-era shape:
-- ``LagMonitor`` wraps ``StreamingQueryListener`` progress events (O3);
-  lag proxy = numInputRows of the latest batch (a Kafka deployment reads
-  real consumer lag from the source progress metrics).
+- ``LagMonitor`` (O3) is a plain per-query table of the latest lag
+  figure. Nothing feeds it automatically: the caller hands it each
+  batch's ``numInputRows`` through ``observe_progress``, and that row
+  count stands in for lag. No ``StreamingQueryListener`` is registered,
+  and no source offsets are read.
 - ``Supervisor`` owns {table → CdcPipeline + query}, runs reload backfills
   in batch mode, and performs the release swap (O2/O6/D7): when the reload
   pipeline is realtime, atomically flip the main target to the reload
@@ -35,7 +37,10 @@ DEFAULT_MAX_TOPIC_RELEASE = 5  # redshiftsink_controller.go:76
 
 @dataclass
 class LagMonitor:
-    """O3: per-query input-lag tracking from progress events."""
+    """O3: per-query lag table, fed by hand. ``observe_progress`` records
+    the caller-supplied ``numInputRows`` of a query's latest batch as its
+    lag; ``is_realtime`` compares that figure with the ceiling. It is not
+    a ``StreamingQueryListener`` and reads no source offsets."""
 
     max_lag: int = DEFAULT_MAX_BATCHER_LAG
     last_lag: dict[str, int] = field(default_factory=dict)
