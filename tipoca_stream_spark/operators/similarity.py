@@ -61,11 +61,6 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return _dot(a, b) / (na * nb)
 
 
-def with_norm(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
-    """Project a vector column's norm once, before a join replicates it."""
-    return df.withColumn(out_col, _norm(F.col(vec_col)))
-
-
 def cosine_topk(
     embeddings: DataFrame,
     query_id: int,
@@ -93,38 +88,6 @@ def cosine_topk(
         )
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
-
-
-def cosine_neardup_pairs_exact(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs above a cosine threshold — the exact O(n²) verification
-    stage. Deliberately NOT the registered query path: use
-    ``cosine_neardup_pairs`` (banded-LSH candidates + exact verify) for
-    anything larger than a bucket."""
-    a = embeddings.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("_na"),
-    )
-    b = embeddings.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_prenormed(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")), 6
-            ).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-    )
 
 
 def lsh_band_assignments(
@@ -250,36 +213,6 @@ def lsh_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     return embeddings.select(F.col(id_col), lsh_bucket(vec_col, planes).alias("bucket"))
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket, then
-    exact cosine re-rank. Recall trades off with plane count."""
-    with_bucket = embeddings.withColumn("bucket", lsh_bucket(vec_col, planes))
-    q = with_bucket.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_q"), F.col("bucket"), _norm(F.col(vec_col)).alias("_qn")
-    )
-    cands = with_bucket.join(F.broadcast(q), "bucket").filter(F.col(id_col) != query_id)
-    return (
-        cands.select(
-            F.col(id_col),
-            F.round(
-                cosine_prenormed(
-                    F.col(vec_col), F.col("_q"), _norm(F.col(vec_col)), F.col("_qn")
-                ),
-                6,
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def cosine_batch_topk(

@@ -103,22 +103,3 @@ class Table:
         return out
 
 
-def table_from_struct(name: str, schema: T.StructType) -> Table:
-    """Inverse of ``Table.to_struct_type`` (D2 introspection,
-    redshift.go:904-945)."""
-    cols = []
-    for f in schema.fields:
-        md = f.metadata or {}
-        cols.append(
-            ColInfo(
-                name=f.name,
-                debezium_type=md.get("debezium_type", "string"),
-                source_column_type=md.get("source_column_type") or None,
-                not_null=not f.nullable,
-                primary_key=bool(md.get("primary_key", False)),
-                sort_ordinal=int(md.get("sort_ordinal", 0)),
-                dist_key=bool(md.get("dist_key", False)),
-                masked=bool(md.get("masked", False)),
-            )
-        )
-    return Table(name=name, columns=cols)

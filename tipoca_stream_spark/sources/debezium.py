@@ -189,8 +189,7 @@ def decode_envelope(
     ``fmt='json'``: Debezium JSON-converter payloads via ``from_json`` —
     fully JVM-side. ``fmt='avro'``: Confluent wire format (always framed)
     decoded against ``registry``'s writer schemas by the pure-Python Avro
-    codec, Arrow-batched; pass ``fmt='avro-jar'`` to require the spark-avro
-    data source instead when the jar is deployed.
+    codec, Arrow-batched.
 
     ``framed=True`` strips the Confluent 5-byte header first and exposes
     ``schema_id`` (S3); tests drive both paths."""
@@ -234,20 +233,9 @@ def decode_envelope(
     else:
         payload = value
 
-    if fmt == "json":
-        parsed = F.from_json(payload.cast("string"), envelope_schema(row_schema))
-    elif fmt == "avro-jar":
-        try:
-            from pyspark.sql.avro.functions import from_avro  # noqa: F401
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError("spark-avro not importable in this build") from e
-        raise NotImplementedError(
-            "avro-jar decode needs the spark-avro data source jar, which is "
-            "not bundled in this container; fmt='avro' (pure-Python wire "
-            "decode) covers Confluent framing without it"
-        )
-    else:
+    if fmt != "json":
         raise ValueError(f"unknown envelope format {fmt!r}")
+    parsed = F.from_json(payload.cast("string"), envelope_schema(row_schema))
 
     return df.select(
         *out_cols,

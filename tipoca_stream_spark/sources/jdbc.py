@@ -56,11 +56,6 @@ def quoted(ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'
 
 
-def create_schema_sql(schema: str) -> str:
-    """D1 (redshift.go:245-256)."""
-    return f"CREATE SCHEMA IF NOT EXISTS {quoted(schema)}"
-
-
 def create_table_sql(table: Table) -> str:
     """D1 with sortkey/distkey clauses (redshift.go:358-422)."""
     cols = []
@@ -89,10 +84,6 @@ def alter_add_column_sql(table: Table, col: ColInfo) -> str:
     if col.default_val is not None:
         line += f" DEFAULT {col.default_val}"
     return line
-
-
-def alter_drop_column_sql(table: Table, name: str) -> str:
-    return f"ALTER TABLE {quoted(table.schema_name)}.{quoted(table.name)} DROP COLUMN {quoted(name)}"
 
 
 def alter_varchar_resize_sql(table: Table, col: ColInfo) -> str:

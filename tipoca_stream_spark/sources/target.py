@@ -28,8 +28,19 @@ import json
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tipoca_stream_spark.sources.zonemap import (
+    footer_zone_stats,
+    read_zone_sidecar,
+    spark_schema_of,
+    write_zone_sidecar,
+    zone_arrow_schema,
+    zone_keep,
+)
 
 # "no CAS requested" sentinel: None is a meaningful expected base (the
 # table did not exist when the writer started), so absence needs its own
@@ -67,9 +78,10 @@ class ParquetTargetTable:
         # SORTKEY on every Redshift table so zone maps skip blocks): when
         # zone_cols is set, full rewrites range-cluster on zone_cols[0] and
         # every commit maintains per-file min/max stats for all zone_cols
-        # under v=<n>/_zones/, so read_range schedules only overlapping
-        # files. Stats commit ATOMICALLY with the data (same version dir,
-        # same pointer flip).
+        # under v=<n>/_zones/, read off the new files' parquet footers on
+        # the driver (sources/zonemap.py — no Spark job), so read_range
+        # schedules only overlapping files. Stats commit ATOMICALLY with
+        # the data (same version dir, same pointer flip).
         self.zone_cols = zone_cols or []
         self.zone_files = zone_files
         os.makedirs(self.path, exist_ok=True)
@@ -268,11 +280,31 @@ class ParquetTargetTable:
             df = df.repartitionByRange(self.zone_files, F.col(self.zone_cols[0]))
         df.write.mode("overwrite").parquet(target_dir)
         if self.zone_cols:
-            self._write_zone_stats(target_dir, self._version_files(target_dir), None)
+            self._write_zone_stats(target_dir, df.schema)
         if metadata:
             with open(os.path.join(target_dir, "_meta.json"), "w") as f:
                 json.dump(metadata, f)
         return self._flip(v, expected_base)
+
+    def _vdir(self, v: int) -> str:
+        return os.path.join(self.path, f"v={v}")
+
+    def _version_schema(self, vdir: str):
+        """Schema of a version dir — from the persisted ``_schema.json``
+        when present, else from a data file's footer (Spark records its
+        schema there), else inferred by Spark. The sidecar is what keeps a
+        version READABLE when it holds zero parquet files (delete-only
+        epoch that empties the table: a bucketed write's empty tasks emit
+        no files, and no schema-only file can stand in — Spark rejects
+        data files whose names carry no bucket id). The first two need no
+        Spark job, so a read built on them plans without one."""
+        sfile = os.path.join(vdir, "_schema.json")
+        if os.path.exists(sfile):
+            with open(sfile) as f:
+                return T.StructType.fromJson(json.load(f))
+        files = self._version_files(vdir)
+        schema = spark_schema_of(files[0]) if files else None
+        return schema if schema is not None else self.spark.read.parquet(vdir).schema
 
     # --- zone-map stats (per-version, commit-atomic file skipping) --------
 
@@ -308,74 +340,88 @@ class ParquetTargetTable:
             return None
         return self.spark.read.option("basePath", sdir).parquet(*files)
 
-    def _zone_stats_of(self, files: list[str]) -> DataFrame:
-        """One column-pruned pass over ``files`` → one stats row per file
-        (relative path + min/max per zone column). Never lands on the
-        driver; the caller writes it straight back out."""
-        aggs = []
-        for c in self.zone_cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        rel = F.regexp_replace(F.input_file_name(), r"^.*/v=\d+/", "")
-        return (
-            self.spark.read.parquet(*files)
-            .select(rel.alias("file"), *self.zone_cols)
-            .groupBy("file")
-            .agg(*aggs)
-        )
-
-    def _write_zone_stats(self, vdir: str, new_files: list[str], carried: DataFrame | None) -> None:
-        """Persist the version's stats table: fresh rows for ``new_files``
-        (O(batch) on a delta commit) unioned with ``carried`` rows for
-        hard-linked files (their bytes — and so their stats — are
-        unchanged). Writes nothing when there is nothing to describe."""
-        stats = self._zone_stats_of(new_files) if new_files else None
+    def _write_zone_stats(
+        self,
+        vdir: str,
+        schema,
+        fresh: list[str] | None = None,
+        prev: int | None = None,
+        rewritten: frozenset = frozenset(),
+    ) -> None:
+        """Persist the version's stats table before the flip, with no
+        Spark job: rows for the ``fresh`` files this commit wrote, read
+        from their parquet footers (O(batch) on a delta commit), plus the
+        previous version's rows for every file it hard-linked — linked
+        bytes keep their stats. ``rewritten`` names the buckets whose old
+        files were NOT linked; their rows are dropped by the bucket id in
+        the file name. A full rewrite (no ``prev``), or a previous version
+        without usable stats (the target predates zone_cols), stats every
+        file of the version, or read_range would skip the linked ones."""
+        carried = self._carried_zone_stats(prev, rewritten, schema)
+        if carried is None:
+            fresh = self._version_files(vdir)
+        stats = footer_zone_stats(fresh, self.zone_cols, schema)
         if carried is not None:
-            stats = carried if stats is None else stats.unionByName(carried)
+            stats = pa.concat_tables([stats, carried])
+        if stats.num_rows:
+            write_zone_sidecar(stats, self._zones_dir(vdir), self.zone_cols, schema)
+
+    def _carried_zone_stats(self, prev: int | None, rewritten: frozenset, schema):
+        """The previous version's stats rows minus the rewritten buckets',
+        cast to this commit's stats types, or None when there is nothing
+        usable to carry."""
+        if prev is None:
+            return None
+        stats = read_zone_sidecar(self._zones_dir(self._vdir(prev)))
         if stats is None:
-            return
-        stats.coalesce(1).write.mode("overwrite").parquet(self._zones_dir(vdir))
+            return None
+        keep = [
+            not ((m := _BUCKET_FILE_RE.search(f)) and int(m.group(1)) in rewritten)
+            for f in stats.column("file").to_pylist()
+        ]
+        target = zone_arrow_schema(self.zone_cols, schema)
+        try:
+            return stats.filter(pa.array(keep, pa.bool_())).select(target.names).cast(target)
+        except (KeyError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
+            return None
 
     def _carried_sidecar(self, prev: int | None, subdir: str, drop_pred) -> DataFrame | None:
-        """Previous version's per-file sidecar rows (zone stats, Bloom
-        words — any table keyed by relative file path) minus the rows
-        ``drop_pred`` marks as rewritten (their files were not linked into
-        the new version). Hard-linked files keep their bytes AND their
-        names, so carried rows stay valid verbatim."""
+        """Previous version's per-file Bloom rows (a table keyed by
+        relative file path) minus the rows ``drop_pred`` marks as
+        rewritten (their files were not linked into the new version).
+        Hard-linked files keep their bytes AND their names, so carried
+        rows stay valid verbatim."""
         if prev is None:
             return None
         stats = self._read_sidecar(os.path.join(self.path, f"v={prev}", subdir))
         return None if stats is None else stats.filter(~drop_pred(stats))
 
-    def _carried_zone_stats(self, prev: int | None, drop_pred) -> DataFrame | None:
-        return self._carried_sidecar(prev, "_zones", drop_pred)
-
     def range_files(self, lo, hi, col: str | None = None, version: int | None = None) -> list[str] | None:
         """Zone-qualifying file paths for ``col BETWEEN lo AND hi`` on the
         current (or given) version, or None when the stats can't serve the
-        predicate (absent sidecar, untracked column, partial coverage) —
-        the caller falls back to a plain filtered scan. The stats filter
-        runs distributed; only surviving PATHS reach the driver."""
+        predicate (absent sidecar, untracked column, partial coverage, a
+        bound the driver cannot compare) — the caller falls back to a
+        plain filtered scan. The sidecar is read with pyarrow and filtered
+        on the driver (``zonemap.zone_keep``): routing runs no Spark job."""
         col = col or (self.zone_cols[0] if self.zone_cols else None)
         if col is None:
             raise ValueError("range read needs a column (no zone_cols declared)")
         v = version if version is not None else self.current_version()
         if v is None:
             raise FileNotFoundError(f"table {self.name} has no committed version")
-        vdir = os.path.join(self.path, f"v={v}")
-        stats = self._read_sidecar(self._zones_dir(vdir))
-        if stats is None or f"min_{col}" not in stats.columns:
+        vdir = self._vdir(v)
+        stats = read_zone_sidecar(self._zones_dir(vdir))
+        if stats is None or f"min_{col}" not in stats.column_names:
             return None
         # defensive coverage check: a file the stats table doesn't know
         # about would be silently skipped — if counts disagree (partial
         # sidecar, manual surgery), pruning is forfeited, never correctness
-        if stats.count() != len(self._version_files(vdir)):
+        if stats.num_rows != len(self._version_files(vdir)):
             return None
-        disjoint = (F.col(f"max_{col}") < F.lit(lo)) | (F.col(f"min_{col}") > F.lit(hi))
-        keep = F.coalesce(~disjoint, F.lit(True))  # all-null stats: keep
-        files = [
-            os.path.join(vdir, r["file"])
-            for r in stats.filter(keep).select("file").collect()
-        ]
+        kept = zone_keep(stats, {col: (lo, hi)})
+        if kept is None:
+            return None
+        files = [os.path.join(vdir, f) for f in kept]
         return [f for f in files if os.path.exists(f)]
 
     def read_range(self, lo, hi, col: str | None = None, version: int | None = None) -> DataFrame:
@@ -392,9 +438,12 @@ class ParquetTargetTable:
             return self.read(v).filter(pred)
         if not files:
             return self.read(v).limit(0).filter(pred)
-        vdir = os.path.join(self.path, f"v={v}")
+        vdir = self._vdir(v)
         return (
-            self.spark.read.option("basePath", vdir).parquet(*files).filter(pred)
+            self.spark.read.schema(self._version_schema(vdir))
+            .option("basePath", vdir)
+            .parquet(*files)
+            .filter(pred)
         )
 
     def changes(
@@ -529,6 +578,71 @@ class ParquetTargetTable:
 # Spark bucketed-write file naming: part-<task>-<uuid>_<bucketid>.c000...
 _BUCKET_FILE_RE = re.compile(r"_(\d{5})\.")
 
+# Spark's Murmur3_x86_32, as ``hash`` runs it (seed 42), for routing a
+# primary-key value to its bucket on the driver without a Spark job
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _mix_k1(k: int) -> int:
+    return (_rotl32((k * 0xCC9E2D51) & _M32, 15) * 0x1B873593) & _M32
+
+
+def _mix_h1(h: int, k: int) -> int:
+    return (_rotl32(h ^ k, 13) * 5 + 0xE6546B64) & _M32
+
+
+def _fmix32(h: int, length: int) -> int:
+    h ^= length
+    h ^= h >> 16
+    h = (h * 0x85EBCA6B) & _M32
+    h ^= h >> 13
+    h = (h * 0xC2B2AE35) & _M32
+    return h ^ (h >> 16)
+
+
+def spark_hash(value, dt) -> int | None:
+    """``F.hash(F.lit(value).cast(dt))`` computed in Python, for single
+    ``IntegerType``, ``LongType`` and ``StringType`` values, or None for
+    any other type or value (the caller asks Spark instead). Strings hash
+    their UTF-8 bytes as Spark does: whole little-endian 4-byte words,
+    then each tail byte mixed on its own as a signed int (Spark's variant,
+    not the reference Murmur3 tail)."""
+    h = 42
+    if isinstance(value, bool):
+        return None
+    if isinstance(dt, T.IntegerType) and isinstance(value, int) and -(1 << 31) <= value < 1 << 31:
+        h, length = _mix_h1(h, _mix_k1(value & _M32)), 4
+    elif isinstance(dt, T.LongType) and isinstance(value, int) and -(1 << 63) <= value < 1 << 63:
+        for word in (value & _M32, (value >> 32) & _M32):
+            h = _mix_h1(h, _mix_k1(word))
+        length = 8
+    elif isinstance(dt, T.StringType) and isinstance(value, str):
+        try:
+            data = value.encode("utf-8")
+        except UnicodeEncodeError:
+            return None
+        length = len(data)
+        aligned = length - length % 4
+        for i in range(0, aligned, 4):
+            h = _mix_h1(h, _mix_k1(int.from_bytes(data[i : i + 4], "little")))
+        for b in data[aligned:]:
+            h = _mix_h1(h, _mix_k1((b - 256 if b > 127 else b) & _M32))
+    else:
+        return None
+    h = _fmix32(h, length)
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+def spark_bucket_id(value, dt, buckets: int) -> int | None:
+    """``pmod(hash(value), buckets)`` — the bucket a bucketed write puts
+    ``value``'s row in — or None where ``spark_hash`` is."""
+    h = spark_hash(value, dt)
+    return None if h is None else h % buckets
+
 
 from dataclasses import dataclass
 
@@ -644,9 +758,6 @@ class BucketedTargetTable(ParquetTargetTable):
         tag = hashlib.sha1(os.path.abspath(self.path).encode()).hexdigest()[:8]
         return f"{safe}_{tag}_v{v}"
 
-    def _vdir(self, v: int) -> str:
-        return os.path.join(self.path, f"v={v}")
-
     def _register(self, v: int) -> None:
         vdir = self._vdir(v)
         ident = self._table_ident(v)
@@ -659,21 +770,6 @@ class BucketedTargetTable(ParquetTargetTable):
             f"CLUSTERED BY ({keys}) SORTED BY ({sort}) INTO {self.buckets} BUCKETS "
             f"LOCATION '{vdir}'"
         )
-
-    def _version_schema(self, vdir: str):
-        """Schema of a version dir — from the persisted ``_schema.json``
-        when present, else inferred from the parquet files. The sidecar is
-        what keeps a version READABLE when it holds zero parquet files
-        (delete-only epoch that empties the table: a bucketed write's
-        empty tasks emit no files, and no schema-only file can stand in —
-        Spark rejects data files whose names carry no bucket id)."""
-        from pyspark.sql import types as T
-
-        sfile = os.path.join(vdir, "_schema.json")
-        if os.path.exists(sfile):
-            with open(sfile) as f:
-                return T.StructType.fromJson(json.load(f))
-        return self.spark.read.parquet(vdir).schema
 
     def _ensure_registered(self, v: int) -> None:
         if not self.spark.catalog.tableExists(self._table_ident(v)):
@@ -834,9 +930,8 @@ class BucketedTargetTable(ParquetTargetTable):
             metadata = self.read_metadata()
         v = self._claim_version()
         self._write_bucketed(df, v)
-        vdir = self._vdir(v)
         if self.zone_cols:
-            self._write_zone_stats(vdir, self._version_files(vdir), None)
+            self._write_zone_stats(self._vdir(v), df.schema)
         self._write_index_sidecars(df, v, prev=None, changed_buckets=None)
         return self._commit(v, metadata, expected_base)
 
@@ -858,7 +953,7 @@ class BucketedTargetTable(ParquetTargetTable):
         prev = self.current_version()
         v = self._claim_version()
         self._write_bucketed(changed, v, n_tasks=len(changed_buckets))
-        new_files = self._version_files(self._vdir(v)) if self.zone_cols else []
+        new_files = self._version_files(self._vdir(v))
         changed_set = set(changed_buckets)
         if prev is not None:
             for b, files in self._bucket_files(prev).items():
@@ -869,18 +964,10 @@ class BucketedTargetTable(ParquetTargetTable):
         if self.zone_cols:
             # stats rows only for the touched buckets' fresh files —
             # O(batch), like the data commit; linked buckets carry their
-            # rows forward (the file name encodes the bucket id). No prior
-            # stats to carry (target predates zone_cols) → stat every file
-            # once, or read_range would skip the linked ones.
-            carried = self._carried_zone_stats(
-                prev,
-                lambda s: F.regexp_extract(F.col("file"), r"_(\d{5})\.", 1)
-                .cast("int")
-                .isin(list(changed_set)),
+            # rows forward (the file name encodes the bucket id)
+            self._write_zone_stats(
+                self._vdir(v), changed.schema, new_files, prev, frozenset(changed_set)
             )
-            if carried is None and prev is not None:
-                new_files = self._version_files(self._vdir(v))
-            self._write_zone_stats(self._vdir(v), new_files, carried)
         self._write_index_sidecars(changed, v, prev=prev, changed_buckets=changed_buckets)
         return self._commit(v, metadata, expected_base)
 
@@ -936,11 +1023,8 @@ class BucketedTargetTable(ParquetTargetTable):
             linked += 1
         if self.zone_cols:
             # fresh stats only for this append's files; every linked file
-            # carries its row verbatim (bytes unchanged). No prior stats
-            # (table predates zone_cols) → stat everything once.
-            carried = self._carried_zone_stats(prev, lambda s: F.lit(False))
-            zfresh = fresh if carried is not None else self._version_files(vdir)
-            self._write_zone_stats(vdir, zfresh, carried)
+            # carries its row verbatim (bytes unchanged)
+            self._write_zone_stats(vdir, new_rows.schema, fresh, prev)
         self._write_index_sidecars(
             new_rows, v, prev=prev, changed_buckets=None, append_files=fresh
         )
@@ -1458,11 +1542,13 @@ class BucketedTargetTable(ParquetTargetTable):
                 contribute(files, "bloom")
             elif [col] == self.keys:
                 key_type = self._version_schema(vdir)[col].dataType
-                bucket = self.spark.range(1).select(
-                    F.pmod(
-                        F.hash(F.lit(value).cast(key_type)), F.lit(self.buckets)
-                    ).alias("b")
-                ).collect()[0]["b"]
+                bucket = spark_bucket_id(value, key_type, self.buckets)
+                if bucket is None:  # key type the driver-side hash doesn't cover
+                    bucket = self.spark.range(1).select(
+                        F.pmod(
+                            F.hash(F.lit(value).cast(key_type)), F.lit(self.buckets)
+                        ).alias("b")
+                    ).collect()[0]["b"]
                 contribute(self._bucket_files(v).get(bucket, []), "bucket")
         if between is not None:
             col, lo, hi = between

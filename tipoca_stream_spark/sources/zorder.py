@@ -99,15 +99,4 @@ class ZOrderedTable(ZoneMappedTable):
             .write.mode("overwrite")
             .parquet(self.path)
         )
-        aggs = []
-        for c in self.cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        (
-            self.spark.read.parquet(self.path)
-            .select(F.input_file_name().alias("file"), *self.cols)
-            .groupBy("file")
-            .agg(*aggs)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(self._zones_path)
-        )
+        self._write_stats(df.schema)

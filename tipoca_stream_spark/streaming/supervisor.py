@@ -161,25 +161,6 @@ class Supervisor:
             self.current_mask_version, self.current_mask_config = self._pending_mask
             self._pending_mask = None
 
-    def plan_reload_units(
-        self,
-        topics_last: list[tuple[str, int]],
-        current_reloading_topics: list[str],
-        max_reloading_units: int = 3,
-    ):
-        """O4: budget which topics may reload this pass
-        (controllers/unit_allocator.go:90-175). Realtime membership comes
-        from the lag monitor; the returned units size the reload query pool
-        (each reloading unit = one backfill pipeline slot here, one k8s
-        Deployment in the reference)."""
-        from tipoca_stream_spark.streaming.allocator import allocate_reloading_units
-
-        topics = [t for t, _ in topics_last]
-        realtime = [t for t in topics if self.lag.is_realtime(t)]
-        return allocate_reloading_units(
-            topics, realtime, topics_last, max_reloading_units, current_reloading_topics
-        )
-
     def release_pass(self) -> list[str]:
         """O6/D7: release up to ``max_topic_release`` realtime reload tables
         per pass — swap main target to the reload data, retire the reload
