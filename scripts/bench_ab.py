@@ -76,10 +76,10 @@ def run_perfbench(side_dir: str, workload: str, seed: int, seconds: int) -> dict
     )
 
 
-def perfbench_ab(a: str, b: str, workload: str, seeds: list[int], seconds: int | None) -> dict:
+def perfbench_ab(a: str, b: str, workload: str, seeds: list[int]) -> dict:
     with open(os.path.join(a, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    seconds = seconds or spec["run_seconds"]
+    seconds = spec["run_seconds"]
     pairs = []
     for i, seed in enumerate(seeds):
         order = ("a", "b") if i % 2 == 0 else ("b", "a")
@@ -159,13 +159,12 @@ def main() -> None:
     )
     ap.add_argument("--perfbench", metavar="WORKLOAD", help="A/B one perfbench workload")
     ap.add_argument("--seeds", type=int, nargs="+", help="one perfbench pair per seed")
-    ap.add_argument("--seconds", type=int, help="perfbench run length (default: BENCHMARK.json)")
     args = ap.parse_args()
 
     if args.perfbench:
         if not args.seeds:
             ap.error("--perfbench needs --seeds")
-        print_perfbench(perfbench_ab(args.a, args.b, args.perfbench, args.seeds, args.seconds))
+        print_perfbench(perfbench_ab(args.a, args.b, args.perfbench, args.seeds))
         return
 
     runs: dict[str, list[dict[str, float]]] = {"a": [], "b": []}

@@ -278,6 +278,46 @@ def test_timestamp_zone_prunes_on_bucketed_target(spark, tmp_path):
     assert t.range_files(datetime.date(2024, 3, 1), datetime.date(2024, 3, 2)) is None
 
 
+def _spark_written_sidecar(spark, t, file_col):
+    """Replace a zone-mapped table's sidecar with the stats table a Spark
+    aggregation writes: ``file`` from ``input_file_name()`` (a ``file:``
+    URI), typed min/max columns, Spark's schema record in the footer."""
+    tracked = [t.zone_col, *t.extra_cols]
+    aggs = [f(c).alias(f"{n}_{c}") for c in tracked for f, n in ((F.min, "min"), (F.max, "max"))]
+    (
+        t.read()
+        .select(F.input_file_name().alias("file"), *tracked)
+        .groupBy("file")
+        .agg(*aggs)
+        .withColumn("file", file_col)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(t._zones_path)
+    )
+
+
+def test_zone_mapped_table_reads_a_spark_written_sidecar(spark, tmp_path):
+    from tipoca_stream_spark.sources.zonemap import ZoneMappedTable
+
+    t = ZoneMappedTable(spark, str(tmp_path / "uri"), zone_col="z")
+    t.write(spark.range(400).select("id", (F.col("id") * 3).alias("z")), n_files=4)
+    want = sorted(r["id"] for r in t.read().filter(F.col("z").between(30, 90)).collect())
+    all_files = set(t.read().inputFiles())
+
+    _spark_written_sidecar(spark, t, F.col("file"))
+    names = pq.read_table(t._zones_path, partitioning=None).column("file").to_pylist()
+    assert len(names) == len(all_files) and all(f.startswith("file:") for f in names)
+    got = t.read_range(30, 90)
+    assert 0 < len(set(got.inputFiles())) < len(all_files)
+    assert sorted(r["id"] for r in got.collect()) == want
+
+    # a name that locates no file forfeits pruning, never rows
+    _spark_written_sidecar(spark, t, F.concat(F.col("file"), F.lit(".gone")))
+    got = t.read_range(30, 90)
+    assert set(got.inputFiles()) == all_files
+    assert sorted(r["id"] for r in got.collect()) == want
+
+
 # --- no Spark job to route or to commit zone stats --------------------------
 
 

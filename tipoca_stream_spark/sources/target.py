@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tipoca_stream_spark.sources.zonemap import (
+    data_files,
     footer_zone_stats,
     read_zone_sidecar,
     spark_schema_of,
@@ -318,11 +319,7 @@ class ParquetTargetTable:
         """All data files of a version. Versions are flat, so these are the
         part files directly under ``v=<n>/``; sidecars live in
         ``_``-prefixed subdirectories and are not listed."""
-        return [
-            os.path.join(vdir, f)
-            for f in os.listdir(vdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
+        return data_files(vdir)
 
     def _read_sidecar(self, sdir: str) -> DataFrame | None:
         """A ``_``-prefixed sidecar directory as a DataFrame, or None when

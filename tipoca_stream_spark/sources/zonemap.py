@@ -57,6 +57,17 @@ from pyspark.sql.pandas.types import to_arrow_type
 SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
+def data_files(d: str) -> list[str]:
+    """The data files directly under ``d``: ``.parquet`` files whose names
+    do not start with ``_`` or ``.`` (the hidden-file convention that keeps
+    sidecars, markers and checksums out of the data scan)."""
+    return [
+        os.path.join(d, f)
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
 def spark_schema_of(path: str) -> T.StructType | None:
     """The Spark schema recorded in a parquet file's footer, or None when
     the file was not written by Spark (or carries no such record)."""
@@ -173,9 +184,7 @@ def read_zone_sidecar(zdir: str) -> pa.Table | None:
     """The stats table under ``zdir`` (pyarrow- or Spark-written), or None
     when there is none. ``partitioning=None``: a ``v=<n>`` directory above
     must not turn into a column."""
-    if not os.path.isdir(zdir) or not any(
-        f.endswith(".parquet") and not f.startswith(("_", ".")) for f in os.listdir(zdir)
-    ):
+    if not os.path.isdir(zdir) or not data_files(zdir):
         return None
     return pq.read_table(zdir, partitioning=None)
 
@@ -280,14 +289,12 @@ class ZoneMappedTable:
         self._write_stats(df.schema)
 
     def _write_stats(self, schema: T.StructType) -> None:
-        files = [
-            os.path.join(self.path, f)
-            for f in os.listdir(self.path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
         tracked = [self.zone_col, *self.extra_cols]
         write_zone_sidecar(
-            footer_zone_stats(files, tracked, schema), self._zones_path, tracked, schema
+            footer_zone_stats(data_files(self.path), tracked, schema),
+            self._zones_path,
+            tracked,
+            schema,
         )
 
     def read_range(self, lo, hi, col: str | None = None) -> DataFrame:
@@ -313,16 +320,16 @@ class ZoneMappedTable:
             c: r for c, r in ranges.items()
             if stats is not None and f"min_{c}" in stats.column_names
         }
-        files = zone_keep(stats, tracked) if tracked else None
-        if files is None:
+        kept = zone_keep(stats, tracked) if tracked else None
+        # stats written by Spark name files by URI (``file:/...``); the
+        # base name locates them either way. A kept file that is not there
+        # (a percent-encoded URI, a moved table) forfeits pruning.
+        files = [os.path.join(self.path, os.path.basename(f)) for f in kept or []]
+        if kept is None or not all(os.path.exists(f) for f in files):
             return self.read().filter(pred)
         if not files:
             return self.read().limit(0)
-        return (
-            self.spark.read.option("basePath", self.path)
-            .parquet(*[os.path.join(self.path, f) for f in files])
-            .filter(pred)
-        )
+        return self.spark.read.option("basePath", self.path).parquet(*files).filter(pred)
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
