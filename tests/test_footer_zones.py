@@ -379,3 +379,38 @@ def test_zone_delta_commit_runs_no_job_after_its_data_write(spark, zoned_target,
     assert _assert_matches_spark(t, "score") == len(
         t._version_files(os.path.join(t.path, f"v={t.current_version()}"))
     )
+
+
+def test_append_delta_runs_no_job_before_its_data_write(spark, tmp_path):
+    t = BucketedTargetTable(
+        spark, str(tmp_path), "apnojob", buckets=4, keys=["id"], zone_cols=["score"], zone_split=2
+    )
+    t.write(spark.range(2000).select("id", ((F.col("id") * 7919) % 2000).alias("score")))
+    before = len(t._version_files(t._vdir(1)))
+    batch = spark.range(2000, 2100).select("id", (F.col("id") % 2000).alias("score"))
+    # only the range-partitioned data write's two jobs (its sampling job,
+    # then shuffle + write); the bucket count comes off the file names
+    _, n = _jobs_in(spark, lambda: t.append_delta(batch))
+    assert n == 2
+    fresh = [f for f in t._version_files(t._vdir(2)) if os.stat(f).st_nlink == 1]
+    touched = {r["b"] for r in batch.select(t.bucket_of().alias("b")).distinct().collect()}
+    stats = t.last_commit_stats
+    assert (stats["files_written"], stats["files_linked"], stats["buckets_touched"]) == (
+        len(fresh),
+        before,
+        len(touched),
+    )
+    assert t.read().count() == 2100
+
+
+def test_plain_read_and_changes_build_without_a_job(spark, tmp_path):
+    t = ParquetTargetTable(spark, str(tmp_path), "plainnojob")
+    t.write(spark.range(100).select("id", F.lit("x").alias("s")))
+    t.write(spark.range(50, 150).select("id", F.lit("x").alias("s")))
+    df, n = _jobs_in(spark, lambda: t.read())
+    assert n == 0
+    assert df.count() == 100
+    cdf, n = _jobs_in(spark, lambda: t.changes(1, 2, keys=["id"]))
+    assert n == 0
+    kinds = cdf.groupBy("_change_type").count().collect()
+    assert {r["_change_type"]: r["count"] for r in kinds} == {"insert": 50, "delete": 50}

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tipoca_stream_spark.operators.checkpoint import aqe_off_clone, rebind
 from tipoca_stream_spark.sources.zonemap import (
     data_files,
     footer_zone_stats,
@@ -205,7 +206,8 @@ class ParquetTargetTable:
         reaches). A version above the pointer is refused even if its
         directory exists: that is a writer's staged-but-never-committed
         (or crash-orphaned) data, and serving it would surface rows no
-        commit ever published (VERDICT r6 worklist #2)."""
+        commit ever published (VERDICT r6 worklist #2). The schema comes
+        from ``_version_schema``, so building the frame runs no Spark job."""
         current = self.current_version()
         v = version if version is not None else current
         if v is None:
@@ -218,7 +220,7 @@ class ParquetTargetTable:
         vdir = os.path.join(self.path, f"v={v}")
         if not os.path.isdir(vdir):
             raise FileNotFoundError(f"table {self.name} version {v} not retained")
-        return self.spark.read.parquet(vdir)
+        return self.spark.read.schema(self._version_schema(vdir)).parquet(vdir)
 
     def versions(self) -> list[int]:
         """Retained COMMITTED version numbers, oldest first. Directories
@@ -505,8 +507,8 @@ class ParquetTargetTable:
     def _cdf_sides(self, from_version: int, to_version: int) -> tuple[DataFrame, DataFrame]:
         """The rows ``changes`` diffs: both versions whole."""
         old, new = (
-            self.spark.read.parquet(os.path.join(self.path, f"v={v}"))
-            for v in (from_version, to_version)
+            self.spark.read.schema(self._version_schema(vdir)).parquet(vdir)
+            for vdir in (self._vdir(from_version), self._vdir(to_version))
         )
         return old, new
 
@@ -878,13 +880,6 @@ class BucketedTargetTable(ParquetTargetTable):
             # share the id, so each bucket lands whole in one task and the
             # write still emits one file per touched bucket.
             clustered = df.repartition(max(n_tasks, 1), self.bucket_of())
-        writer = (
-            clustered.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(self.buckets, *self.keys)
-            .sortBy(*self.sort_keys)
-            .option("path", self._vdir(v))
-        )
         if n_tasks is not None:
             # Delta commit (round 15, VERDICT r14 next #3): the merge plan
             # this action executes is O(batch) by construction — a few
@@ -894,15 +889,18 @@ class BucketedTargetTable(ParquetTargetTable):
             # of the ~1.2 s steady trigger latency while the tasks
             # themselves sum to ~0.3 s. AQE has nothing to adapt here (the
             # final repartition is user-pinned, inputs are batch-sized),
-            # so run the whole delta write AQE-off. Full rewrites
-            # (n_tasks None) keep AQE — table-sized inputs DO want runtime
-            # coalescing/skew handling.
-            from tipoca_stream_spark.operators.checkpoint import aqe_disabled
-
-            with aqe_disabled(self.spark):
-                writer.saveAsTable(ident)
-        else:
-            writer.saveAsTable(ident)
+            # so the delta write runs on an AQE-off clone of the session
+            # (the caller's session keeps AQE). Full rewrites (n_tasks None)
+            # keep AQE — table-sized inputs DO want runtime coalescing.
+            clustered = rebind(clustered, aqe_off_clone(self.spark))
+        (
+            clustered.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(self.buckets, *self.keys)
+            .sortBy(*self.sort_keys)
+            .option("path", self._vdir(v))
+            .saveAsTable(ident)
+        )
         # schema sidecar: lets _register rebuild the catalog entry after
         # catalog loss even when this version has no parquet files (see
         # _version_schema)
@@ -1006,14 +1004,16 @@ class BucketedTargetTable(ParquetTargetTable):
         prev = self.current_version()
         if prev is None:
             return self.write(new_rows, metadata=metadata, expected_base=expected_base)
-        touched = [
-            r["_b"]
-            for r in new_rows.select(self.bucket_of().alias("_b")).distinct().collect()
-        ]
+        # sized without a job: the session's shuffle parallelism, capped at
+        # the bucket count; each bucket still lands whole in one task
+        n_tasks = min(self.buckets, int(self.spark.conf.get("spark.sql.shuffle.partitions")))
         v = self._claim_version()
-        self._write_bucketed(new_rows, v, n_tasks=max(len(touched), 1))
+        self._write_bucketed(new_rows, v, n_tasks=n_tasks)
         vdir = self._vdir(v)
         fresh = self._version_files(vdir)
+        touched = {
+            int(m.group(1)) for f in fresh if (m := _BUCKET_FILE_RE.search(os.path.basename(f)))
+        }
         linked = 0
         for src in self._version_files(self._vdir(prev)):
             os.link(src, os.path.join(vdir, os.path.basename(src)))
@@ -1057,40 +1057,35 @@ class BucketedTargetTable(ParquetTargetTable):
         self.last_commit_stats = {}
         if not (self.bloom_col or self.text_col):
             return
-        from contextlib import nullcontext
-
-        from tipoca_stream_spark.operators.checkpoint import aqe_disabled
-
         # Delta/append commits rebuild batch-sized sidecar slices — the
         # same regime as the delta saveAsTable above, where AQE's
         # per-exchange stage jobs are pure driver latency with nothing to
-        # adapt; full rewrites keep AQE (table-sized inputs want runtime
+        # adapt — so their writes run on one AQE-off clone of the session;
+        # full rewrites keep AQE (table-sized inputs want runtime
         # coalescing). Measured on the bench's indexed-target delta row:
         # 2.0 → 1.5 s per commit.
         is_delta = changed_buckets is not None or append_files is not None
-        scope = aqe_disabled(self.spark) if is_delta else nullcontext()
-        with scope:
-            if self.bloom_col and self.text_col:
-                # the two sidecars are independent (different inputs,
-                # different output dirs) and each is a couple of SMALL
-                # Spark jobs whose fixed per-job latency dominates — run
-                # them from two driver threads so the second's jobs
-                # back-fill the first's idle tail (guide §2.6)
-                from concurrent.futures import ThreadPoolExecutor
+        jsession = aqe_off_clone(self.spark) if is_delta else self.spark._jsparkSession
+        if self.bloom_col and self.text_col:
+            # the two sidecars are independent (different inputs,
+            # different output dirs) and each is a couple of SMALL
+            # Spark jobs whose fixed per-job latency dominates — run
+            # them from two driver threads so the second's jobs
+            # back-fill the first's idle tail (guide §2.6); both write
+            # through the same session
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fb = pool.submit(
-                        self._write_bloom_sidecar, v, prev, changed_buckets, append_files
-                    )
-                    ft = pool.submit(
-                        self._write_text_sidecar, df, v, prev, changed_buckets
-                    )
-                    fb.result()
-                    ft.result()
-            elif self.bloom_col:
-                self._write_bloom_sidecar(v, prev, changed_buckets, append_files)
-            elif self.text_col:
-                self._write_text_sidecar(df, v, prev, changed_buckets)
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fb = pool.submit(
+                    self._write_bloom_sidecar, jsession, v, prev, changed_buckets, append_files
+                )
+                ft = pool.submit(self._write_text_sidecar, jsession, df, v, prev, changed_buckets)
+                fb.result()
+                ft.result()
+        elif self.bloom_col:
+            self._write_bloom_sidecar(jsession, v, prev, changed_buckets, append_files)
+        elif self.text_col:
+            self._write_text_sidecar(jsession, df, v, prev, changed_buckets)
 
     def _bloom_dir(self, vdir: str) -> str:
         return os.path.join(vdir, "_bloom")
@@ -1123,6 +1118,7 @@ class BucketedTargetTable(ParquetTargetTable):
 
     def _write_bloom_sidecar(
         self,
+        jsession,
         v: int,
         prev: int | None,
         changed_buckets: list[int] | None,
@@ -1183,7 +1179,7 @@ class BucketedTargetTable(ParquetTargetTable):
         if stats is None:
             return
         bdir = self._bloom_dir(vdir)
-        stats.coalesce(1).write.mode("overwrite").parquet(bdir)
+        rebind(stats.coalesce(1), jsession).write.mode("overwrite").parquet(bdir)
         # persist the probe parameters WITH the words they describe: a
         # reader constructed with different (m_bits, k) would otherwise
         # probe the wrong bit-space and silently return zero rows for
@@ -1262,7 +1258,7 @@ class BucketedTargetTable(ParquetTargetTable):
         return base.groupBy("doc_id").agg(F.count("*").alias("n_occurrences"))
 
     def _write_text_sidecar(
-        self, df: DataFrame, v: int, prev: int | None, changed_buckets: list[int] | None
+        self, jsession, df: DataFrame, v: int, prev: int | None, changed_buckets: list[int] | None
     ) -> None:
         vdir = self._vdir(v)
         changed = set(changed_buckets) if changed_buckets is not None else None
@@ -1285,13 +1281,8 @@ class BucketedTargetTable(ParquetTargetTable):
         os.makedirs(tdir, exist_ok=True)
         # one task per touched bucket; within-file term sort → parquet
         # row-group min/max on term serves the pushed `term IN` probe
-        (
-            postings.repartition(max(n_tasks, 1), "b")
-            .sortWithinPartitions("b", "term")
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(tdir)
-        )
+        postings = postings.repartition(max(n_tasks, 1), "b").sortWithinPartitions("b", "term")
+        rebind(postings, jsession).write.mode("overwrite").partitionBy("b").parquet(tdir)
         if changed is not None and prev_text is not None:
             # hard-link every untouched bucket's posting files: postings
             # are corpus-sized — linking, not rewriting, them is what
@@ -1316,7 +1307,9 @@ class BucketedTargetTable(ParquetTargetTable):
             )
         if carried_sum is not None:
             summary = summary.unionByName(carried_sum)
-        summary.coalesce(1).write.mode("overwrite").parquet(self._text_summary_dir(vdir))
+        rebind(summary.coalesce(1), jsession).write.mode("overwrite").parquet(
+            self._text_summary_dir(vdir)
+        )
 
     def _sidecar_ready(self, vdir: str, sub: str) -> bool:
         # _SUCCESS counts: a partitionBy writer given ZERO rows commits

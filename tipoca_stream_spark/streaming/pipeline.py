@@ -105,7 +105,6 @@ class CdcPipelineConfig:
     # logical table (the reference's reload sinkgroup consumes the same
     # topic with the new mask config)
     mask_table: str | None = None
-    max_files_per_trigger: int | None = None  # T1 admission analogue
     # True (default): target rows carry kafkaoffset and contested keys are
     # resolved by offset — correct under out-of-order / replayed epochs.
     # False: reference-parity blind merge + append fast-path, which trusts
