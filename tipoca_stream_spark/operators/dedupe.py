@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def latest_wins(
     df: DataFrame,
     keys: list[str],
@@ -34,11 +38,14 @@ def latest_wins(
 ) -> DataFrame:
     """Keep exactly the highest-``order_col`` row per ``keys`` group."""
     if strategy == "max_by":
-        payload = [c for c in df.columns if c not in keys]
+        # the aggregate is one SQL expression and the unnest one star: the
+        # plan is the same as building struct/max_by/alias per column, but
+        # construction makes a few py4j calls instead of several per column
+        payload = ", ".join(_quote(c) for c in df.columns if c not in keys)
         agg = df.groupBy(*keys).agg(
-            F.max_by(F.struct(*payload), F.col(order_col)).alias("_latest")
+            F.expr(f"max_by(struct({payload}), {_quote(order_col)}) AS _latest")
         )
-        return agg.select(*keys, *[F.col(f"_latest.{c}").alias(c) for c in payload])
+        return agg.select(*keys, "_latest.*")
     if strategy == "window":
         w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
         return (

@@ -875,11 +875,14 @@ class BucketedTargetTable(ParquetTargetTable):
         else:
             # delta write: the rows span only k touched buckets — scheduling
             # self.buckets tasks (250k at 100 TB) for a batch-sized delta
-            # would be k real tasks and n-k empty ones. Repartition by the
-            # BUCKET id into ~k partitions instead: all rows of one bucket
-            # share the id, so each bucket lands whole in one task and the
-            # write still emits one file per touched bucket.
-            clustered = df.repartition(max(n_tasks, 1), self.bucket_of())
+            # would be k real tasks and n-k empty ones, and k tasks over P
+            # cores run in k/P waves. Repartition by the BUCKET id into
+            # min(k, P) partitions instead (P = the session's shuffle
+            # parallelism, as append_delta sizes its write): all rows of one
+            # bucket share the id, so each bucket lands whole in one task
+            # and the write still emits one file per touched bucket.
+            shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            clustered = df.repartition(max(min(n_tasks, shuffle), 1), self.bucket_of())
         if n_tasks is not None:
             # Delta commit (round 15, VERDICT r14 next #3): the merge plan
             # this action executes is O(batch) by construction — a few
